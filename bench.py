@@ -658,24 +658,26 @@ def build_benches(spark, sf_dir: str):
         @bench("bigram_surprisal")
         def _bigram_surprisal():
             # interpolated bigram LM: broadcast unigram + key-partitioned
-            # bigram join + one groupBy(doc). r12: the operator pins its
-            # type tables (localCheckpoint) — release inside the timed
-            # thunk, the bpe/ulm convention
+            # bigram join + one groupBy(doc). Pins nothing; the release
+            # is the defensive bpe/ulm convention (a no-op here)
             out = bigram_surprisal(docs)
-            n = _force(out)
-            release_checkpoint(out)
-            return n
+            try:
+                return _force(out)
+            finally:
+                release_checkpoint(out)
 
         from vervectordb_spark.operators.text import trigram_surprisal
 
         @bench("trigram_surprisal")
         def _trigram_surprisal():
-            # the JM ladder's last rung (SCALE.md finding #13): trigram
-            # types counted once, bigram/unigram DERIVED from them (r12)
+            # the JM ladder's last rung (SCALE.md finding #13): trigram,
+            # bigram and unigram types each counted from the staged
+            # tokens; pins nothing (defensive release, a no-op)
             out = trigram_surprisal(docs)
-            n = _force(out)
-            release_checkpoint(out)
-            return n
+            try:
+                return _force(out)
+            finally:
+                release_checkpoint(out)
 
         from vervectordb_spark.operators.text import kn5_surprisal
 
@@ -684,9 +686,11 @@ def build_benches(spark, sf_dir: str):
             # the KenLM-class rung (finding #16): 5-gram types counted
             # once, c4/c3/c2 + continuation tables derived per type (r12)
             out = kn5_surprisal(docs)
-            n = _force(out)
-            release_checkpoint(out)
-            return n
+            try:
+                return _force(out)
+            finally:
+                # its four pinned type tables, also when _force raises
+                release_checkpoint(out)
 
         from vervectordb_spark.operators import ulm as ULM
 

@@ -30,35 +30,17 @@ def duck():
 
 
 #: Deep tier (VERDICT r11 item 2): the ~20 slowest tests (>=15 s call
-#: time each, ~12 min of the 32-min suite) — broad end-to-end replays
-#: whose components are each covered by faster always-on tests and the
-#: DuckDB oracle gate. The default tier must COMPLETE inside the round
-#: driver's verify window (r11's full suite was truncated at ~90% and
-#: recorded as unverified); the deep tier runs with
-#: SPARK_GRAFT_DEEP_TESTS=1 (the builder runs it every round and records
-#: the pass in OPTIMIZATION_r<N>.md — last full pass: 712/712 at r12).
-DEEP_TIER_TESTS = {
-    "tests/test_dedup_text.py::test_winnow_arrow_expr_kernels_identical",
-    "tests/test_streaming.py::test_stateful_sessionization",
-    "tests/test_store.py::test_store_imi_facade_and_persistence",
-    "tests/test_streaming.py::test_incremental_imipq_and_learned_bq_before_rebuild",
-    "tests/test_imi.py::test_calibration_persists_through_save_load",
-    "tests/test_curation.py::test_trigram_surprisal_short_docs_and_partitioning",
-    "tests/test_streaming.py::test_incremental_bq_sq_imi_before_rebuild",
-    "tests/test_store.py::test_save_after_load_same_path",
-    "tests/test_streaming.py::test_streaming_neardup_gate_matches_batch_replay",
-    "tests/test_streaming.py::test_streaming_spancut_matches_batch_incremental_chain",
-    "tests/test_imi.py::test_save_load_roundtrip",
-    "tests/test_streaming.py::test_streaming_neardup_gate_retry_is_idempotent",
-    "tests/test_store.py::test_residual_pq_search_and_roundtrip",
-    "tests/test_curation.py::test_kn5_pruning_backs_off_not_crashes",
-    "tests/test_streaming.py::test_incremental_ann_wide_bits_matches_prefix_layout",
-    "tests/test_store.py::test_save_load_roundtrip_with_pq_and_ivf",
-    "tests/test_streaming.py::test_incremental_pq_codes_before_rebuild",
-    "tests/test_streaming.py::test_incremental_ann_signing_before_rebuild",
-    "tests/test_plans.py::test_imi_persisted_rectangle_probe_prunes",
-    "tests/test_streaming.py::test_ingest_with_index_refresh",
-}
+#: time each, ~12 min of the 32-min suite), marked `@pytest.mark.deep` —
+#: broad end-to-end replays whose components are each covered by faster
+#: always-on tests and the DuckDB oracle gate. The default tier must
+#: COMPLETE inside the tier-1 time limit (r11's full suite was truncated
+#: at ~90% and recorded as unverified); the deep tier runs with
+#: SPARK_GRAFT_DEEP_TESTS=1. A marker travels with the test, so renaming
+#: a test cannot silently move it out of the tier.
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "deep: slow end-to-end replay, skipped unless "
+                   "SPARK_GRAFT_DEEP_TESTS=1")
 
 
 def pytest_collection_modifyitems(config, items):
@@ -70,5 +52,5 @@ def pytest_collection_modifyitems(config, items):
         reason="deep tier: set SPARK_GRAFT_DEEP_TESTS=1 (kept out of the "
                "default run so the suite completes in the verify window)")
     for item in items:
-        if item.nodeid.split("[")[0] in DEEP_TIER_TESTS:
+        if item.get_closest_marker("deep") is not None:
             item.add_marker(marker)

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from vervectordb_spark.operators import pii as PII
 from vervectordb_spark.operators import text as TX
 from vervectordb_spark.operators.sampling import mix_to_target
+from vervectordb_spark.functions.checkpoint import release_checkpoint
 from vervectordb_spark.functions.words import ws_tokens_py
 
 
@@ -253,6 +254,7 @@ def test_trigram_surprisal_sees_scrambled_word_order(spark):
     assert out[2] > out[1] + 0.5, out
 
 
+@pytest.mark.deep
 def test_trigram_surprisal_short_docs_and_partitioning(spark):
     docs = spark.createDataFrame(
         [(1, "a b"), (2, ""), (3, "a b c d e")],
@@ -363,24 +365,35 @@ _KN_DOCS = [
 ]
 
 
+def _kn5_rows(df, **kw):
+    """kn5_surprisal(df).collect(), with the type tables it pins released
+    even when the collect fails."""
+    out = TX.kn5_surprisal(df, **kw)
+    try:
+        return out.collect()
+    finally:
+        release_checkpoint(out)
+
+
 def test_kn5_matches_reference_implementation(spark):
     df = spark.createDataFrame(_KN_DOCS, "doc_id long, text string")
     got = {r["doc_id"]: (r["n_transitions"], r["bits_per_transition"])
-           for r in TX.kn5_surprisal(df).collect()}
+           for r in _kn5_rows(df)}
     exp = _kn5_reference(_KN_DOCS)
     assert got == exp
     assert 5 not in got                       # <5 tokens -> no transitions
 
 
+@pytest.mark.deep
 def test_kn5_pruning_backs_off_not_crashes(spark):
     df = spark.createDataFrame(_KN_DOCS, "doc_id long, text string")
     got = {r["doc_id"]: (r["n_transitions"], r["bits_per_transition"])
-           for r in TX.kn5_surprisal(df, prune_min_count=2).collect()}
+           for r in _kn5_rows(df, prune_min_count=2)}
     exp = _kn5_reference(_KN_DOCS, prune=2)
     assert got == exp
     # pruned singles score HIGHER surprisal than unpruned (mass backed off)
     full = {r["doc_id"]: r["bits_per_transition"]
-            for r in TX.kn5_surprisal(df).collect()}
+            for r in _kn5_rows(df)}
     assert got[3][1] > full[3]
 
 
@@ -396,5 +409,5 @@ def test_kn5_sees_scrambled_word_order(spark):
         [(1, " ".join(words)), (2, " ".join(shuffled))],
         "doc_id long, text string")
     got = {r["doc_id"]: r["bits_per_transition"]
-           for r in TX.kn5_surprisal(df).collect()}
+           for r in _kn5_rows(df)}
     assert got[2] > got[1]

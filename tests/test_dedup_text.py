@@ -388,6 +388,7 @@ def test_semdedup_gemm_kernel_matches_fold(spark):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.deep
 def test_winnow_arrow_expr_kernels_identical(spark):
     """Arrow sliding-window-min kernel == interpreted expr spec, exploded
     (doc_id, fp) compared exceptAll both ways over the real fixture."""

@@ -72,6 +72,7 @@ def test_small_rectangle_can_underfill(corpus, idx):
     assert 0 < len(out) < 1024  # one cell only — documented underfill
 
 
+@pytest.mark.deep
 def test_save_load_roundtrip(spark, corpus, idx, tmp_path):
     """The persisted cell1-partitioned layout reloads into an index that
     serves identical results; cell1 partition dirs exist on disk."""
@@ -298,6 +299,7 @@ def test_calibration_keeps_square_on_symmetric_corpus(corpus, idx):
     idx._probe_cdf = None  # don't leak calibration into other tests
 
 
+@pytest.mark.deep
 def test_calibration_persists_through_save_load(spark, skew_corpus, tmp_path):
     idx = IMIIndex.build(skew_corpus, k1=8, k2=8, dim=16, seed=42)
     idx.calibrate_probe(sample_size=256)

@@ -455,6 +455,7 @@ def test_filtered_search_column_form_still_pushes_down(emb, qv):
     assert "ArrowEvalPython" in fn_plan or "BatchEvalPython" in fn_plan
 
 
+@pytest.mark.deep
 def test_imi_persisted_rectangle_probe_prunes(spark, emb, qv, tmp_path):
     """VERDICT r5 #5: the persisted IMI layout (cell1-partitioned,
     imi.save) — a loaded rectangle probe reads ONLY the a probed cell1
@@ -594,3 +595,69 @@ def test_exchange_partitioning_parser_sees_keyed_blocks():
     # an Exchange block the parser cannot read must fail, not pass
     with pytest.raises(AssertionError):
         A.assert_no_keyed_shuffle("(3) Exchange\nInput [1]: [x#1]\n")
+
+
+def test_exchange_parser_rejects_simple_mode_plan(spark):
+    """Simple-mode plan text has no formatted `(N) Node` headers, so a
+    zero-match parse of it must fail loudly instead of reporting no
+    keyed shuffle (ADVICE r12)."""
+    simple = (
+        "== Physical Plan ==\n"
+        "AdaptiveSparkPlan isFinalPlan=false\n"
+        "+- HashAggregate(keys=[k#1], functions=[count(1)])\n"
+        "   +- Exchange hashpartitioning(k#1, 8), ENSURE_REQUIREMENTS\n"
+        "      +- *(1) Scan ExistingRDD[k#1]\n"
+    )
+    df = spark.range(20).selectExpr("id % 3 AS k").groupBy("k").count()
+    for plan in (simple, A.physical_plan(df, mode="simple")):
+        for check in (A.exchange_partitionings, A.assert_no_keyed_shuffle,
+                      A.keyed_shuffle_count):
+            with pytest.raises(AssertionError, match="FORMATTED"):
+                check(plan)
+    # the formatted plan of the same frame parses its keyed exchange
+    assert A.keyed_shuffle_count(A.physical_plan(df)) == 1
+
+
+def _per_query_plan(df) -> str:
+    """Executed plan text of `df` down to the first cached relation —
+    the part a query runs itself (an InMemoryRelation prints the plan
+    that filled it underneath)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("InMemoryRelation")[0]
+
+
+def test_store_reads_scan_the_cached_serving_frame(spark, tmp_path):
+    """Facade reads scan the version's persisted serving frame: ivf_search
+    runs no KMeans predict per query (cluster_id is cached), and after a
+    write burst the store frame has no PythonRDD branch — written rows
+    are LocalRelations."""
+    import numpy as np
+
+    from vervectordb_spark.operators.search import brute_force_topk
+    from vervectordb_spark.store import VectorStore
+
+    rng = np.random.default_rng(3)
+    vecs = [[float(x) for x in r] for r in rng.standard_normal((200, 8))]
+    store = VectorStore(spark, 8, db_path=str(tmp_path / "db"))
+    store.batch_insert(vecs)
+    store.checkpoint()                       # base = one parquet scan
+    store.build_ivf_index(n_clusters=4)
+    q = vecs[5]
+    store.ivf_search(q, 5, nprobe=2)         # first read fills the frame
+    ivf_plan = _per_query_plan(
+        store._ivf.search(q, 5, nprobe=2, rows=store._serving()))
+    assert "InMemoryTableScan" in ivf_plan, ivf_plan
+    assert "UDF" not in ivf_plan, ivf_plan
+
+    fresh = [[float(x) for x in r] for r in rng.standard_normal((17, 8))]
+    ids = store.batch_insert(fresh[:16])
+    store.update(ids[0], fresh[16])
+    store.delete(ids[1])
+    assert "LogicalRDD" not in store.df._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    res = store.brute_force_search(fresh[16], 1)
+    assert res[0]["vector_id"] == ids[0]     # refilled for the new version
+    bf_plan = _per_query_plan(
+        brute_force_topk(store._serving(), q, 5, extra_cols=("metadata",)))
+    assert "InMemoryTableScan" in bf_plan and "Scan parquet" not in bf_plan

@@ -270,3 +270,49 @@ def test_store_filtered_search_accepts_reference_callable(spark):
         metadata_filter=F.element_at(F.col("metadata"), "source") == "web")
     assert got_callable == got_column
     assert [r["metadata"]["text"] for r in got_callable] == ["alpha doc"]
+
+
+def test_query_literal_is_exact_doubles(spark):
+    """query_lit parses to exactly the driver's doubles — denormals,
+    ±DBL_MAX, -0.0 and the non-finite values included."""
+    import math
+    import struct
+
+    from vervectordb_spark.functions.similarity import query_lit
+
+    vals = [-0.0, 0.0, 1e-300, 5e-324, -5e-324, 1.7976931348623157e308,
+            0.1, 1 / 3, 2.2250738585072014e-308, 1e23, float("nan"),
+            float("inf"), float("-inf")]
+    got = spark.range(1).select(query_lit(vals).alias("v")).first()["v"]
+    assert len(got) == len(vals)
+    for a, b in zip(got, vals):
+        assert (math.isnan(a) and math.isnan(b)) or \
+            struct.pack("<d", a) == struct.pack("<d", b)
+
+
+def test_parsed_cosine_bit_identical_to_column_tree(emb, qv):
+    """The parsed cosine (column name operands) and its hoisted form over
+    a self-dot column return the very doubles of the Column-tree cosine,
+    for a vector query and for a column query — zero vectors included."""
+    from vervectordb_spark.functions.similarity import (
+        SS_COL, cosine_expr, cosine_sql, self_dot_expr)
+
+    zero = [0.0] * len(qv)
+    rows = emb.select("vec_id", "embedding").unionByName(
+        emb.sparkSession.createDataFrame(
+            [(-1, zero)], "vec_id long, embedding array<float>"))
+    framed = rows.withColumn(SS_COL, self_dot_expr("embedding")) \
+        .withColumn("q", F.array(*[F.lit(v) for v in qv]))
+    for q in (qv, zero):
+        got = framed.select(
+            "vec_id",
+            cosine_expr(F.col("embedding"), q).alias("tree"),
+            cosine_expr("embedding", q).alias("parsed"),
+            F.expr(cosine_sql("embedding", q, ss_col=SS_COL)).alias("hoisted"),
+            cosine_expr(F.col("embedding"), F.col("q")).alias("tree_col"),
+            cosine_expr("embedding", "q").alias("parsed_col"),
+        ).collect()
+        assert len(got) > 1
+        for r in got:
+            assert r["tree"] == r["parsed"] == r["hoisted"], r
+            assert r["tree_col"] == r["parsed_col"], r

@@ -106,6 +106,7 @@ def test_save_load_roundtrip(store, spark, tmp_path):
     assert loaded.df.count() == store.df.count()
 
 
+@pytest.mark.deep
 def test_save_load_roundtrip_with_pq_and_ivf(spark, tmp_path):
     """Artifacts round-trip: PQ codebooks and the IVF layout are saved and
     restored (ADVICE r1: save() passed no spark arg -> TypeError; load()
@@ -198,6 +199,7 @@ def test_checkpoint_collapses_lineage(store, tmp_path):
     assert "Union" not in plan
 
 
+@pytest.mark.deep
 def test_save_after_load_same_path(spark, tmp_path):
     """load(path) then save(path) must roundtrip: the overwrite targets the
     path the lineage reads from, which save() breaks via localCheckpoint
@@ -381,6 +383,7 @@ def test_versioned_checkpoint_requires_path(spark):
         store.version_history()
 
 
+@pytest.mark.deep
 def test_residual_pq_search_and_roundtrip(spark, tmp_path):
     """Residual IVF-PQ through the store facade: self query is top-1;
     save/load restores the codec WITH its centroids and still serves."""
@@ -489,6 +492,7 @@ def test_build_ivf_clears_stale_residual_codec(spark):
     assert store._pq_res is None and store._res_encoded is None
 
 
+@pytest.mark.deep
 def test_store_imi_facade_and_persistence(spark, tmp_path):
     """IMI via the store: build/search facade, mutation invalidation,
     and save/load of the cell layout + centroids."""

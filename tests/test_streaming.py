@@ -54,6 +54,7 @@ def test_hourly_window_agg_matches_batch(spark, events_dir):
         assert got[(r["ws"], r["event_type"])] == r["n"]
 
 
+@pytest.mark.deep
 def test_stateful_sessionization(spark, events_dir):
     stream = SI.stream_events(spark, events_dir)
     sess = SI.sessionize_stateful(stream)
@@ -136,6 +137,7 @@ def test_incremental_refresh_new_rows_searchable_before_rebuild(spark, tmp_path)
     assert len(hits) == 5
 
 
+@pytest.mark.deep
 def test_ingest_with_index_refresh(spark, tmp_path):
     """Milestone-6 pattern: stream appends + periodic IVF rebuild; the
     published index serves searches over everything ingested so far."""
@@ -166,6 +168,7 @@ def test_ingest_with_index_refresh(spark, tmp_path):
     assert len(hits) == 5
 
 
+@pytest.mark.deep
 def test_incremental_ann_signing_before_rebuild(spark, tmp_path):
     """Rows arriving AFTER the last full rebuild are signed with the
     deterministic planes and appended into the bucket-partitioned layout —
@@ -221,6 +224,7 @@ def test_incremental_ann_signing_before_rebuild(spark, tmp_path):
     assert any(r["vec_id"] == batch4_id for r in hits.collect())
 
 
+@pytest.mark.deep
 def test_incremental_pq_codes_before_rebuild(spark, tmp_path):
     """Rows arriving after the last rebuild are PQ-encoded against the
     current codebooks and appended to the ADC serving layout — searchable
@@ -454,6 +458,7 @@ def test_streaming_winnow_fingerprints_match_batch(spark, docs_dir):
     assert got == want
 
 
+@pytest.mark.deep
 def test_incremental_ann_wide_bits_matches_prefix_layout(spark, tmp_path):
     """ann_bits > MAX_PARTITION_BITS: the rebuild saves a bucket_p0 prefix
     layout; incremental appends must land in the SAME layout or the
@@ -516,6 +521,7 @@ def test_streaming_sq8_encode_matches_batch(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.deep
 def test_incremental_bq_sq_imi_before_rebuild(spark, tmp_path):
     """VERDICT r5 #4: rows arriving AFTER the last rebuild become
     searchable via the BQ / SQ8 / IMI serving paths WITHOUT a rebuild —
@@ -612,6 +618,7 @@ def test_incremental_bq_sq_imi_before_rebuild(spark, tmp_path):
     assert ihits and ihits[0]["vec_id"] == last_id
 
 
+@pytest.mark.deep
 def test_incremental_imipq_and_learned_bq_before_rebuild(spark, tmp_path):
     """VERDICT r6 #6: the round-6 serving layouts — IMI-PQ codes and the
     learned-rotation short codes — are maintained between rebuilds by
@@ -708,6 +715,7 @@ def test_incremental_imipq_and_learned_bq_before_rebuild(spark, tmp_path):
     assert got[0]["vec_id"] == last_id and got[0]["hamming"] == 0
 
 
+@pytest.mark.deep
 def test_streaming_neardup_gate_matches_batch_replay(spark, tmp_path):
     """Persisted-band-state near-dup gate: driving the foreachBatch
     closure over 3 controlled batches accepts exactly the set a batch
@@ -791,6 +799,7 @@ def test_stream_neardup_ingest_end_to_end(spark, tmp_path):
     assert acc == {1, 3} and rej == {2}
 
 
+@pytest.mark.deep
 def test_streaming_neardup_gate_retry_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: replaying a batch whose writes all
     landed but whose checkpoint commit was lost (marker deleted to
@@ -837,6 +846,7 @@ def test_streaming_neardup_gate_retry_is_idempotent(spark, tmp_path):
     assert snapshot() == before
 
 
+@pytest.mark.deep
 def test_streaming_spancut_matches_batch_incremental_chain(spark, tmp_path):
     """Streaming span dedup parity: driving the foreachBatch closure over
     3 controlled batches produces cuts BYTE-IDENTICAL to chaining the

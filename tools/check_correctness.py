@@ -53,6 +53,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
     from vervectordb_spark.session import get_spark
+    from vervectordb_spark.functions.checkpoint import release_checkpoint
 
     spark = get_spark("correctness-check")
     con = duckdb.connect()
@@ -81,13 +82,14 @@ def main() -> int:
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
-            sdf = df.toPandas()
-            # operators that pin type tables (localCheckpoint, the
-            # bpe/ulm _ckpt_ids convention) release here so a 165-query
-            # gate run doesn't accumulate blocks (finding #15)
-            from vervectordb_spark.functions.checkpoint import (
-                release_checkpoint)
-            release_checkpoint(df)
+            try:
+                sdf = df.toPandas()
+            finally:
+                # operators that pin type tables (localCheckpoint, the
+                # bpe/ulm _ckpt_ids convention) release here, also when
+                # the collect fails, so a 165-query gate run doesn't
+                # accumulate blocks (finding #15)
+                release_checkpoint(df)
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"SPARK ERROR: {e}"))
             records[name] = {"status": "spark_error", "err": str(e)[:500]}

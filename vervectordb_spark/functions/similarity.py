@@ -23,10 +23,13 @@ query, vervectordb/__init__.py:344).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from vervectordb_spark.functions.identifiers import sql_ident
 
 
 def to_double(arr: Column | str) -> Column:
@@ -35,25 +38,118 @@ def to_double(arr: Column | str) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
 
+# ---------------------------------------------------------------------------
+# Parsed scoring. Every PySpark Column op is a py4j round-trip (~1.6 ms
+# measured), so a cosine built as a Column tree cost ~0.1 s of DRIVER time
+# per query — more than scanning a 4k-row store. The functions below emit
+# the same folds as SQL text, parsed by ONE F.expr call: double casts,
+# pairwise products folded left from 0.0D, one division — so every value
+# is bit-unchanged.
+# ---------------------------------------------------------------------------
+
+def _digits(v: float) -> str:
+    """repr's shortest round-trip digits of a double, or the name of a
+    non-finite one."""
+    if math.isfinite(v):
+        return repr(v)
+    return "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+
+
+def _double_sql(v: float) -> str:
+    """One double as a SQL literal that parses back to exactly `v` (the
+    `D` suffix makes it a double, not a decimal; non-finite values have
+    no literal spelling and are cast from their names)."""
+    v = float(v)
+    return repr(v) + "D" if math.isfinite(v) else f"CAST('{_digits(v)}' AS DOUBLE)"
+
+
+def vector_sql(vec: Sequence[float]) -> str:
+    """A vector as a SQL array<double> constant: ONE string literal that
+    from_json parses and the optimizer folds to the literal array —
+    parsing and analysing `array(d1, ..., d64)` costs ~4x more driver
+    time per query. The JSON reader parses repr's digits correctly
+    rounded and reads NaN/±Infinity as non-numeric number tokens, so the
+    folded literal holds exactly the driver's doubles (pinned with -0.0,
+    denormals, ±DBL_MAX and the non-finite values in tests)."""
+    return ("from_json('[" + ",".join(_digits(float(v)) for v in vec)
+            + "]', 'array<double>')")
+
+
 def query_lit(vec: Sequence[float]) -> Column:
     """A query vector as a literal array<double> column (plan-time constant,
-    shipped with the plan — the analogue of the reference's query argument).
+    shipped with the plan — the analogue of the reference's query argument),
+    parsed from ONE SQL string instead of dim× F.lit().cast() calls."""
+    return F.expr(vector_sql(vec))
 
-    Built as ONE parsed SQL string instead of dim× F.lit().cast() Column
-    calls: each PySpark Column op is a py4j round-trip (~1.6 ms measured),
-    so the per-element form cost ~0.2 s of DRIVER time per 64-dim query
-    vector — pure plan-construction overhead paid by every serving call.
-    repr(float) is the shortest exact round-trip form and Spark's `...D`
-    double literal parses it bit-exactly (verified incl. -0.0, 1e-300,
-    ±DBL_MAX), so the resulting Literal nodes are identical to the old
-    form's. Non-finite values fall back to the per-element path (repr's
-    inf/nan spellings are not SQL literals)."""
-    import math
 
-    vals = [float(v) for v in vec]
-    if all(map(math.isfinite, vals)):
-        return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
-    return F.array(*[F.lit(v).cast("double") for v in vals])
+def to_double_sql(a: str) -> str:
+    """to_double as SQL text over the SQL expression `a`."""
+    return f"transform({a}, x -> cast(x as double))"
+
+
+def dot_sql(a: str, b: str) -> str:
+    """dot_expr as SQL text: pairwise double products, folded left from
+    0.0D."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+
+
+def self_dot(vec: Sequence[float]) -> float:
+    """dot(v, v) of a driver-side vector, summed in the fold's order: the
+    same double products added left to right from 0.0, so it equals the
+    value dot_sql computes for the same literal bit for bit."""
+    acc = 0.0
+    for v in vec:
+        v = float(v)
+        acc += v * v
+    return acc
+
+
+#: the row self-dot column of a serving frame (self_dot_expr)
+SS_COL = "_ss"
+
+
+def self_dot_expr(emb_col: str) -> Column:
+    """dot(e, e) of an array column — the per-row self-dot a serving frame
+    keeps next to the vector, so scoring a query against that frame
+    folds once per row instead of twice (cosine_sql's `ss_col`)."""
+    e = to_double_sql(sql_ident(emb_col))
+    return F.expr(dot_sql(e, e))
+
+
+def _operand(x: str | Sequence[float]) -> tuple[str, str]:
+    """(double-array SQL, self-dot SQL) of a column name or a vector; a
+    vector's self-dot is computed here, on the driver."""
+    if isinstance(x, str):
+        d = to_double_sql(sql_ident(x))
+        return d, dot_sql(d, d)
+    return vector_sql(x), _double_sql(self_dot(x))
+
+
+def cosine_sql(a: str, b: str | Sequence[float],
+               ss_col: str | None = None) -> str:
+    """Cosine of column `a` against column `b` or a query vector, as SQL
+    text, with the zero-norm guard (reference formula,
+    vervectordb/__init__.py:31-36). `ss_col` names a column that already
+    holds dot(a, a) (self_dot_expr); the query's self-dot is a driver
+    constant. The cosine_from_ss form throughout: sqrt of the identical
+    double, ss == 0 iff sqrt(ss) == 0 for the non-negative self-dot, one
+    division — bit-identical to the three-fold cosine."""
+    ad, ssa = _operand(a)
+    bd, ssb = _operand(b)
+    if ss_col is not None:
+        ssa = sql_ident(ss_col)
+    return (f"CASE WHEN {ssa} = 0.0D OR {ssb} = 0.0D THEN 0.0D "
+            f"ELSE {dot_sql(ad, bd)} / (sqrt({ssa}) * sqrt({ssb})) END")
+
+
+def l2_sql(a: str, b: str | Sequence[float]) -> str:
+    """Euclidean distance (the PQ codebook assignment metric,
+    vervectordb/__init__.py:198-199) of column `a` to column `b` or a
+    vector, as SQL text: Σ(a−b)² folded left from 0.0D, then sqrt."""
+    ad, _ = _operand(a)
+    bd, _ = _operand(b)
+    return (f"sqrt(aggregate(zip_with({ad}, {bd}, (x, y) -> x - y), 0.0D, "
+            "(acc, x) -> acc + x * x))")
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -69,10 +165,14 @@ def norm_expr(a: Column) -> Column:
     return F.sqrt(dot_expr(a, a))
 
 
-def cosine_expr(a: Column | str, b: Column | Sequence[float]) -> Column:
+def cosine_expr(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     """Cosine similarity with zero-norm guard (reference formula,
     vervectordb/__init__.py:31-36). Inputs may be float arrays; both are
-    double-cast before any arithmetic."""
+    double-cast before any arithmetic. A column NAME against a name or a
+    vector is one parsed expression (cosine_sql); Column operands, which
+    have no SQL text, compose as a Column tree of the same shape."""
+    if isinstance(a, str) and not isinstance(b, Column):
+        return F.expr(cosine_sql(a, b))
     a = to_double(a)
     b = query_lit(b) if isinstance(b, (list, tuple)) else to_double(b)
     na, nb = norm_expr(a), norm_expr(b)
@@ -106,15 +206,6 @@ def normalize_expr(a: Column | str) -> Column:
     a = to_double(a)
     n = norm_expr(a)
     return F.when(n == 0.0, a).otherwise(F.transform(a, lambda x: x / n))
-
-
-def l2_expr(a: Column | str, b: Column | Sequence[float]) -> Column:
-    """Euclidean distance (the PQ codebook assignment metric,
-    vervectordb/__init__.py:198-199)."""
-    a = to_double(a)
-    b = query_lit(b) if isinstance(b, (list, tuple)) else to_double(b)
-    diff = F.zip_with(a, b, lambda x, y: x - y)
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 def cosine_scores_batch(query_vec, emb_col: str = "embedding", out_col: str = "sim"):

@@ -381,7 +381,7 @@ class SignLSHIndex:
             )
         scored = joined.filter(first_match).select(
             query_id, self.id_col,
-            cosine_expr(F.col(self.emb_col), F.col("_qv")).alias("sim"),
+            cosine_expr(self.emb_col, "_qv").alias("sim"),
         )
         w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(self.id_col))
         return scored.withColumn("rank", F.row_number().over(w)).filter(
@@ -445,7 +445,7 @@ class SignLSHIndex:
             scored = pairs.select(
                 "query_id",
                 self.id_col,
-                cosine_expr(F.col(self.emb_col), F.col("_q_emb")).alias("sim"),
+                cosine_expr(self.emb_col, "_q_emb").alias("sim"),
             )
         else:
             import numpy as np

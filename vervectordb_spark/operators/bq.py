@@ -204,7 +204,7 @@ def hamming_search(df: DataFrame, thresholds: DataFrame, query_vec,
     return (
         base.join(cand, on=id_col)
         .select(id_col, "hamming",
-                cosine_expr(F.col(emb_col), list(query_vec)).alias("sim"))
+                cosine_expr(emb_col, list(query_vec)).alias("sim"))
         .orderBy(F.desc("sim"), F.asc(id_col))
         .limit(top_k)
     )
@@ -287,7 +287,7 @@ def batch_hamming_search(df: DataFrame, thresholds: DataFrame,
     base = rerank if rerank is not None else df
     rescored = cand.join(base.select(id_col, emb_col), on=id_col).select(
         query_id_col, id_col, "hamming",
-        cosine_expr(F.col(emb_col), F.col("_q_emb")).alias("sim"),
+        cosine_expr(emb_col, "_q_emb").alias("sim"),
     )
     wf = Window.partitionBy(query_id_col).orderBy(F.desc("sim"),
                                                  F.asc(id_col))

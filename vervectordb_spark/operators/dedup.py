@@ -967,7 +967,7 @@ def assign_multiprobe(
     from vervectordb_spark.functions.similarity import cosine_expr
 
     scored = df.crossJoin(F.broadcast(centroids_df)).withColumn(
-        "_csim", cosine_expr(F.col(emb_col), F.col("centroid"))
+        "_csim", cosine_expr(emb_col, "centroid")
     )
     w = Window.partitionBy(id_col).orderBy(
         F.desc("_csim"), F.asc("cluster_id"))

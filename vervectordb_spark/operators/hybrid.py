@@ -196,7 +196,7 @@ def hybrid_search(
         docs, terms, top_k=n_candidates, text_col=text_col, id_col=doc_id_col
     )
     vec_scored = emb.select(
-        vec_id_col, cosine_expr(F.col(emb_col), list(query_vec)).alias("sim")
+        vec_id_col, cosine_expr(emb_col, list(query_vec)).alias("sim")
     )
     vec_top = vec_scored.orderBy(F.desc("sim"), F.asc(vec_id_col)).limit(
         n_candidates
@@ -495,7 +495,7 @@ def rerank_checkpoint_ce_batch(
     toks = F.coalesce(tokens_expr(text_col),
                       F.array().cast("array<string>"))
     n_toks = F.size(toks).cast("double")
-    f1 = cosine_expr(F.col("embedding"), F.col("_qv"))
+    f1 = cosine_expr("embedding", "_qv")
     f2 = (F.size(F.array_intersect(F.array_distinct(toks),
                                    F.col("_qterms"))).cast("double")
           / F.col("_nq"))

@@ -333,7 +333,7 @@ class IMIIndex:
         for half, qs, k in ((1, q[:mid], a), (2, q[mid:], b)):
             ranked = (self._cent_df(half).select(
                 "cell_id",
-                cosine_expr(F.col("centroid"),
+                cosine_expr("centroid",
                             [float(x) for x in qs]).alias("sim"))
                 .orderBy(F.desc("sim"), F.asc("cell_id")).limit(k))
             out.append([r["cell_id"] for r in ranked.collect()])
@@ -368,7 +368,7 @@ class IMIIndex:
         return (
             cand.select(
                 self.id_col, "cell1", "cell2",
-                cosine_expr(F.col(self.emb_col), list(query_vec))
+                cosine_expr(self.emb_col, list(query_vec))
                 .alias("sim"),
             )
             .orderBy(F.desc("sim"), F.asc(self.id_col))
@@ -444,7 +444,7 @@ class IMIIndex:
             F.broadcast(probes), on=["cell1", "cell2"]
         ).select(
             query_id, self.id_col,
-            cosine_expr(F.col(self.emb_col), F.col("_qv")).alias("sim"),
+            cosine_expr(self.emb_col, "_qv").alias("sim"),
         )
         w = Window.partitionBy(query_id).orderBy(F.desc("sim"),
                                                  F.asc(self.id_col))

@@ -62,7 +62,7 @@ def assign_by_centroids(df: DataFrame, centroids_df: DataFrame,
     from vervectordb_spark.functions.similarity import cosine_expr
 
     scored = df.crossJoin(F.broadcast(centroids_df)).withColumn(
-        "_csim", cosine_expr(F.col(emb_col), F.col("centroid"))
+        "_csim", cosine_expr(emb_col, "centroid")
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("cluster_id"))
     return (
@@ -292,15 +292,26 @@ def centroid_drift(df: DataFrame, centroids_df: DataFrame, dim: int,
             .orderBy("cluster_id"))
 
 
+def _features(df: DataFrame, emb_col: str) -> DataFrame:
+    """`df` plus the MLlib vector column KMeans fits and predicts on."""
+    from pyspark.ml.functions import array_to_vector
+
+    return df.withColumn(
+        "_features", array_to_vector(F.col(emb_col).cast("array<double>")))
+
+
 class IVFIndex:
     """cluster-assigned DataFrame + centroid matrix (driver state)."""
 
     def __init__(self, assigned: DataFrame, centroids: np.ndarray,
-                 id_col: str = "vec_id", emb_col: str = "embedding"):
+                 id_col: str = "vec_id", emb_col: str = "embedding",
+                 model=None):
         self.assigned = assigned
         self.centroids = centroids
         self.id_col = id_col
         self.emb_col = emb_col
+        #: the fitted KMeansModel (build() only): assigns clusters to rows
+        self.model = model
 
     @property
     def n_clusters(self) -> int:
@@ -314,11 +325,8 @@ class IVFIndex:
         float64 copy of the whole matrix, :416-418 — single-machine-bound;
         MLlib iterates map-side partial sums instead)."""
         from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
 
-        feats = df.withColumn(
-            "_features", array_to_vector(F.col(emb_col).cast("array<double>"))
-        )
+        feats = _features(df, emb_col)
         # k <= N or the fit dies; limit(k).count() proves N >= k by scanning
         # at most k rows instead of the whole table (a full count() at
         # 100 TB is a complete scan spent on a sanity clamp)
@@ -326,11 +334,19 @@ class IVFIndex:
         km = KMeans(k=n_clusters, seed=seed, maxIter=max_iter,
                     featuresCol="_features", predictionCol="cluster_id")
         model = km.fit(feats)
-        assigned = model.transform(feats).drop("_features").withColumn(
+        centroids = np.array([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
+        index = cls(None, centroids, id_col=id_col, emb_col=emb_col, model=model)
+        index.assigned = index.assign(df)
+        return index
+
+    def assign(self, df: DataFrame) -> DataFrame:
+        """`df` plus `cluster_id` from the fitted model's predict — lazy,
+        so every plan over the result reruns predict on every row: cache
+        the result when it is read more than once (the store's serving
+        frame does)."""
+        return self.model.transform(_features(df, self.emb_col)).drop("_features").withColumn(
             "cluster_id", F.col("cluster_id").cast("int")
         )
-        centroids = np.array([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
-        return cls(assigned, centroids, id_col=id_col, emb_col=emb_col)
 
     def default_nprobe(self) -> int:
         """Reference default: max(n_clusters // 2, 8) — vervectordb/__init__.py:441."""
@@ -367,22 +383,26 @@ class IVFIndex:
     def search(self, query_vec: Sequence[float], top_k: int = 5,
                nprobe: int | None = None, pre_filter: Column | None = None,
                probed: Sequence[int] | None = None,
-               mass: float = 0.8) -> DataFrame:
+               mass: float = 0.8, rows: DataFrame | None = None) -> DataFrame:
         """`cluster_id IN probed` → partition pruning → exact rescore →
         TakeOrderedAndProject. Returns (vec_id, cluster_id, sim).
         `probed` overrides probe-set selection (oracle-gated callers pass
         the bit-exact set from probe_clusters_exact); nprobe="adaptive"
-        sizes the probe set per query from centroid-similarity mass."""
+        sizes the probe set per query from centroid-similarity mass.
+        `rows` replaces `assigned` as the frame searched — a cached copy
+        carrying the same cluster_id (the store's serving frame)."""
         if probed is None:
             if nprobe == "adaptive":
                 probed = self.probe_clusters_adaptive(query_vec, mass=mass)
             else:
                 probed = self.probe_clusters(query_vec, nprobe)
-        pred = F.col("cluster_id").isin(probed)
+        # one parsed predicate: Column.isin pays a py4j call per value
+        pred = F.expr(f"cluster_id IN ({', '.join(str(int(c)) for c in probed)})"
+                      if len(probed) else "false")
         if pre_filter is not None:
             pred = pred & pre_filter
         return brute_force_topk(
-            self.assigned, query_vec, top_k,
+            self.assigned if rows is None else rows, query_vec, top_k,
             emb_col=self.emb_col, id_col=self.id_col,
             pre_filter=pred, extra_cols=("cluster_id",),
         )
@@ -471,7 +491,7 @@ class IVFIndex:
             ).select(
                 query_id,
                 self.id_col,
-                cosine_expr(F.col(self.emb_col), F.col("_qv")).alias("sim"),
+                cosine_expr(self.emb_col, "_qv").alias("sim"),
             )
             w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(self.id_col))
             return scored.withColumn("rank", F.row_number().over(w)).filter(
@@ -747,7 +767,7 @@ class IVFIndex:
         spark = self.assigned.sparkSession
         cent = self.centroids_df()
         ranked = cent.select(
-            "cluster_id", cosine_expr(F.col("centroid"), list(query_vec)).alias("sim")
+            "cluster_id", cosine_expr("centroid", list(query_vec)).alias("sim")
         ).orderBy(F.desc("sim"), F.asc("cluster_id")).limit(nprobe)
         return [r["cluster_id"] for r in ranked.collect()]
 

@@ -322,7 +322,7 @@ def learned_bq_search(df: DataFrame, R: np.ndarray, query_vec,
     return (
         df.select(id_col, emb_col).join(cand, on=id_col)
         .select(id_col, "hamming",
-                cosine_expr(F.col(emb_col), list(query_vec)).alias("sim"))
+                cosine_expr(emb_col, list(query_vec)).alias("sim"))
         .orderBy(F.desc("sim"), F.asc(id_col))
         .limit(top_k)
     )

@@ -623,7 +623,7 @@ class PQCodec:
             .select(
                 query_id,
                 id_col,
-                cosine_expr(F.col(emb_col), F.col("_qv")).alias("sim"),
+                cosine_expr(emb_col, "_qv").alias("sim"),
             )
         )
         return exact.withColumn("rank", F.row_number().over(w)).filter(
@@ -781,7 +781,7 @@ class PQCodec:
             .select(
                 query_id,
                 id_col,
-                cosine_expr(F.col(emb_col), F.col("_qv")).alias("sim"),
+                cosine_expr(emb_col, "_qv").alias("sim"),
             )
         )
         return exact.withColumn("rank", F.row_number().over(w)).filter(

@@ -277,7 +277,7 @@ def rotated_bq_search(
     return (
         df.select(id_col, emb_col).join(cand, on=id_col)
         .select(id_col, "hamming",
-                cosine_expr(F.col(emb_col), list(query_vec)).alias("sim"))
+                cosine_expr(emb_col, list(query_vec)).alias("sim"))
         .orderBy(F.desc("sim"), F.asc(id_col))
         .limit(top_k)
     )

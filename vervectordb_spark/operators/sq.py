@@ -276,7 +276,7 @@ def adc_search(df: DataFrame, stats: DataFrame, query_vec,
         raise ValueError(f"df needs {emb_col!r} or {code_col!r}")
     if scorer == "expr":
         scored = with_reconstruction(coded, stats, code_col=code_col) \
-            .select(id_col, cosine_expr(F.col("sq_recon"),
+            .select(id_col, cosine_expr("sq_recon",
                                         list(query_vec)).alias("_sq"))
     elif scorer == "arrow":
         id_type = coded.schema[id_col].dataType.simpleString()
@@ -293,7 +293,7 @@ def adc_search(df: DataFrame, stats: DataFrame, query_vec,
     return (
         base.join(cand, on=id_col)
         .select(id_col,
-                cosine_expr(F.col(emb_col), list(query_vec)).alias("sim"))
+                cosine_expr(emb_col, list(query_vec)).alias("sim"))
         .orderBy(F.desc("sim"), F.asc(id_col))
         .limit(top_k)
     )

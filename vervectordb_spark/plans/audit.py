@@ -115,7 +115,15 @@ def exchange_partitionings(plan: str) -> list[str]:
 
     so the old header-line regex `\\(\\d+\\) Exchange ([A-Za-z]+)` matched
     NOTHING and the keyed-shuffle contracts passed vacuously (ADVICE r11,
-    high). Parse the Arguments line of each block instead."""
+    high). Parse the Arguments line of each block instead.
+
+    Plan text without a single formatted `(N) Node` header is refused:
+    simple-mode text (`+- Exchange hashpartitioning(...)`) has none, and
+    a zero-match parse of it would let every shuffle contract pass
+    vacuously."""
+    assert re.search(r"^\(\d+\) \S", plan, re.M), (
+        "not a FORMATTED plan (no '(N) Node' header) — pass "
+        f"physical_plan(df), mode='formatted':\n{plan[:2000]}")
     return re.findall(
         r"^\(\d+\) Exchange\n(?:[^\n]+\n)*?Arguments: (\w+)", plan, re.M)
 

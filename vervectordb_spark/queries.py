@@ -485,7 +485,7 @@ SELECT vec_id, ROUND(dist, 6) AS dist FROM (
 )
 def topk_l2_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Euclidean nearest-10 — METRIC_L2, the PQ codebook-assignment
-    metric served as a query (functions/similarity.l2_expr: sequential
+    metric served as a query (functions/similarity.l2_sql: sequential
     Σ(a−b)² fold == DuckDB list_dot_product(diff, diff), bit-exact).
     `sim` is a DISTANCE here: ascending rank."""
     emb = load_table(spark, sf_dir, "embeddings")

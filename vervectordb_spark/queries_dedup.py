@@ -357,7 +357,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(F.col("vec_id").alias("dst_id"),
                    F.col("embedding").alias("_b"))
     rescored = (short.join(a, on="src_id").join(b, on="dst_id")
-                .withColumn("sim", cosine_expr(F.col("_a"), F.col("_b"))))
+                .withColumn("sim", cosine_expr("_a", "_b")))
     top = rescored.orderBy(F.desc("sim"), F.asc("src_id"),
                            F.asc("dst_id")).limit(20)
     return top.select("src_id", "dst_id", F.round("sim", 6).alias("sim"))

@@ -202,7 +202,7 @@ def chunk_retrieval_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     scored = cemb.select(
         (F.col("vec_id") / 1000).cast("long").alias("doc_id"),
-        cosine_expr(F.col("embedding"), qv).alias("sim"),
+        cosine_expr("embedding", qv).alias("sim"),
     )
     return (
         scored.groupBy("doc_id")

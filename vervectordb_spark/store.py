@@ -20,10 +20,21 @@ A user of the reference can switch 1:1:
                                       not a pickle blob — S4, S5)
 
 Mutability: the reference mutates the matrix in place; DataFrames are
-immutable, so update/delete are copy-on-write rewrites. Unlike the
+immutable, so update/delete are copy-on-write rewrites. Every assignment
+of the store frame (`df`) starts a new store VERSION. Unlike the
 reference (which leaves HNSW stale after update/delete —
 vervectordb/__init__.py:311-335), derived indexes here are invalidated on
 every mutation and rebuilt on demand, so they can never dangle.
+
+Serving: brute_force_search, filtered_search, ivf_search and batch_search
+read one SERVING FRAME per version — the store rows plus their self-dot
+(and, with an in-memory IVF index, their cluster_id), persisted
+MEMORY_AND_DISK. That derived state is computed on the first read of a
+new version and reused by every later read of it, which then scans
+cached columns instead of replaying the write lineage, the per-row norm
+fold and KMeans predict; the frame of the previous version is
+unpersisted. Writes never fill a frame. Written rows travel as one Arrow
+table (a LocalRelation), so no read forks a Python worker for them.
 
 Scale: vectors never visit the driver. Only query vectors, centroids
 (k×dim) and PQ codebooks (8×256×(dim/8)) are driver/broadcast state.
@@ -34,10 +45,12 @@ from __future__ import annotations
 import uuid
 from collections.abc import Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vervectordb_spark.functions.similarity import SS_COL, self_dot_expr
 from vervectordb_spark.operators import search as _search
 
 _ROW_SCHEMA = T.StructType(
@@ -47,6 +60,34 @@ _ROW_SCHEMA = T.StructType(
         T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
+_QUERY_SCHEMA = T.StructType([
+    T.StructField("query_id", T.IntegerType(), False),
+    T.StructField("q_embedding", T.ArrayType(T.FloatType(), False), False),
+])
+
+
+def _local_frame(spark: SparkSession, schema: T.StructType,
+                 columns: dict) -> DataFrame:
+    """Driver-side column lists as ONE Arrow table. Spark plans it as a
+    LocalRelation; a list of rows instead goes through parallelize into a
+    PythonRDD, which forks Python workers on every later read of any
+    frame built over it. Arrow's double→float conversion rounds to
+    nearest like the JVM cast, so float columns store the same values."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        pa.table(columns, schema=to_arrow_schema(schema)), schema)
+
+
+def _row_frame(spark: SparkSession, ids, vectors, metas) -> DataFrame:
+    """Store rows (_ROW_SCHEMA) from ids, vectors and metadata dicts."""
+    return _local_frame(spark, _ROW_SCHEMA, {
+        "vec_id": list(ids),
+        "embedding": [[float(x) for x in v] for v in vectors],
+        "metadata": [[(str(k), str(val)) for k, val in (m or {}).items()]
+                     for m in metas],
+    })
 
 
 class DimensionError(ValueError):
@@ -59,7 +100,11 @@ class VectorStore:
         self.spark = spark
         self.vector_dim = int(vector_dim)
         self.db_path = db_path
-        self.df: DataFrame = spark.createDataFrame([], _ROW_SCHEMA)
+        self._version = 0
+        #: the serving frame and the (version, IVF index) it was built for
+        self._frame: DataFrame | None = None
+        self._frame_for: tuple | None = None
+        self.df = spark.createDataFrame([], _ROW_SCHEMA)
         # Derived indexes are cleared (not flagged) on mutation: a shared
         # validity flag lets building ONE index mark the OTHER valid and
         # serve stale results. None == "rebuild before use" — per-index,
@@ -96,11 +141,45 @@ class VectorStore:
         self._rotbq: tuple[int, object] | None = None
         # provenance for same-path save-after-load (see save())
         self._loaded_from: str | None = None
-        self._ivf_from_disk = False
         # True only while self.df IS the persisted id-clustered layout
         # (set on load, cleared by any mutation): gates the file-skipping
         # get_by_id path — stats may only prune files the frame still reads
         self._base_pristine = False
+
+    @property
+    def df(self) -> DataFrame:
+        """The store rows (vec_id, embedding, metadata[, codes])."""
+        return self._df
+
+    @df.setter
+    def df(self, value: DataFrame) -> None:
+        # every new frame is a new version: the serving frame is rebuilt
+        # from it on the next read
+        self._df = value
+        self._version += 1
+
+    def _serving(self) -> DataFrame:
+        """The frame facade reads scan: `df` plus its row self-dot SS_COL
+        (cosine then folds once per row, not twice) and, when an
+        in-memory IVF index exists, the cluster_id its model assigns —
+        once per version, not once per query. Persisted here and filled
+        by the first read that scans it; the frame of an older version or
+        index is unpersisted first. Only reads call this: a write never
+        fills a frame. A loaded IVF layout (no fitted model) is not
+        folded in — its searches keep their partition-pruned scan."""
+        ivf = self._ivf
+        if ivf is not None and ivf.model is None:
+            ivf = None
+        if self._frame_for is None or self._frame_for[0] != self._version \
+                or self._frame_for[1] is not ivf:
+            if self._frame is not None:
+                self._frame.unpersist()
+            base = self.df if ivf is None else ivf.assign(self.df)
+            self._frame = base.withColumn(
+                SS_COL, self_dot_expr("embedding")).persist(
+                StorageLevel.MEMORY_AND_DISK)
+            self._frame_for = (self._version, ivf)
+        return self._frame
 
     # ------------------------------------------------------------------ DML
     def _check_rows(self, vectors: Sequence[Sequence[float]]) -> None:
@@ -124,12 +203,8 @@ class VectorStore:
         100 TB shape is `write.mode('append')` on a partitioned table."""
         self._check_rows(vectors)
         ids = [str(uuid.uuid4()) for _ in vectors]
-        metas = metadatas or [None] * len(vectors)
-        rows = [
-            (i, [float(x) for x in v], {str(k): str(val) for k, val in (m or {}).items()})
-            for i, v, m in zip(ids, vectors, metas)
-        ]
-        new = self.spark.createDataFrame(rows, _ROW_SCHEMA)
+        new = _row_frame(self.spark, ids, vectors,
+                         metadatas or [None] * len(vectors))
         # allowMissingColumns: after compress() the store carries pq_code;
         # new rows land with NULL codes (encode again to fill them)
         self.df = self.df.unionByName(new, allowMissingColumns=True)
@@ -175,11 +250,16 @@ class VectorStore:
         primary-key story a 100 TB table needs (proof via executed scan
         metrics in tests/test_layout.py). Any in-memory mutation falls
         back to the live frame, where the equality predicate still
-        row-group-skips via pushdown."""
+        row-group-skips via pushdown. A serving frame that a read of
+        this version already filled beats both: the probe filters cached
+        rows, and it is never a fill (update() looks ids up between
+        writes)."""
         import os as _os
 
         from vervectordb_spark.sources.layout import STATS_FILE, pruned_scan
 
+        if self._frame_for is not None and self._frame_for[0] == self._version:
+            return self._frame
         if self._base_pristine and self._loaded_from:
             vectors_dir = _os.path.join(self._loaded_from, "vectors")
             if _os.path.exists(_os.path.join(vectors_dir, STATS_FILE)):
@@ -212,9 +292,10 @@ class VectorStore:
         if new_vector is not None:
             self._check_rows([new_vector])
         old = self.get_by_id(vec_id)  # KeyError if absent, like the reference
-        vec = [float(x) for x in (new_vector if new_vector is not None else old["vector"])]
-        meta = {str(k): str(v) for k, v in (new_metadata if new_metadata is not None else old["metadata"]).items()}
-        replacement = self.spark.createDataFrame([(vec_id, vec, meta)], _ROW_SCHEMA)
+        replacement = _row_frame(
+            self.spark, [vec_id],
+            [new_vector if new_vector is not None else old["vector"]],
+            [new_metadata if new_metadata is not None else old["metadata"]])
         self.df = self.df.filter(F.col("vec_id") != vec_id).unionByName(
             replacement, allowMissingColumns=True
         )
@@ -260,7 +341,7 @@ class VectorStore:
         `similarity` is a distance)."""
         self._check_rows([query_vector])
         out = _search.brute_force_topk(
-            self.df, query_vector, top_k, pre_filter=pre_filter,
+            self._serving(), query_vector, top_k, pre_filter=pre_filter,
             extra_cols=("metadata",), metric=metric,
         )
         return [
@@ -380,16 +461,15 @@ class VectorStore:
         queries (the reference loops queries serially despite its
         batch_size arg, vervectordb/__init__.py:524-534)."""
         self._check_rows(query_vectors)
-        qdf = self.spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(query_vectors)],
-            T.StructType([
-                T.StructField("query_id", T.IntegerType(), False),
-                T.StructField("q_embedding", T.ArrayType(T.FloatType(), False), False),
-            ]),
-        )
-        out = _search.batch_topk(self.df, qdf, top_k).orderBy("query_id", "rank").collect()
+        qdf = _local_frame(self.spark, _QUERY_SCHEMA, {
+            "query_id": list(range(len(query_vectors))),
+            "q_embedding": [[float(x) for x in v] for v in query_vectors],
+        })
+        # Q×k rows: order them here — a distributed orderBy costs a
+        # sampling job and a range shuffle per call
+        out = _search.batch_topk(self._serving(), qdf, top_k).collect()
         results: list[list[dict]] = [[] for _ in query_vectors]
-        for r in out:
+        for r in sorted(out, key=lambda r: (r["query_id"], r["rank"])):
             results[r["query_id"]].append(
                 {"vector_id": r["vec_id"], "similarity": r["sim"]}
             )
@@ -400,7 +480,6 @@ class VectorStore:
         self._ivf = None
         self._ann = None
         self._imi = None
-        self._ivf_from_disk = False
         self._pq_res = None
         self._res_encoded = None
         self._base_pristine = False  # df no longer == the persisted layout
@@ -409,7 +488,6 @@ class VectorStore:
         from vervectordb_spark.operators.ivf import IVFIndex
 
         self._ivf = IVFIndex.build(self.df, n_clusters=n_clusters, seed=seed)
-        self._ivf_from_disk = False
         # the residual codec is fitted against the PREVIOUS centroids --
         # combining it with a rebuilt IVF silently mis-scores ADC
         self._pq_res = None
@@ -422,7 +500,9 @@ class VectorStore:
         vervectordb/__init__.py:441), rescore exactly inside them."""
         if self._ivf is None:
             self.build_ivf_index()
-        out = self._ivf.search(query_vector, top_k=top_k, nprobe=nprobe, pre_filter=pre_filter)
+        rows = None if self._ivf.model is None else self._serving()
+        out = self._ivf.search(query_vector, top_k=top_k, nprobe=nprobe,
+                               pre_filter=pre_filter, rows=rows)
         return [
             {"vector_id": r["vec_id"], "similarity": r["sim"], "cluster_id": r["cluster_id"]}
             for r in out.collect()
@@ -1000,7 +1080,6 @@ class VectorStore:
 
         try:
             store._ivf = IVFIndex.load(spark, f"{path}/ivf")
-            store._ivf_from_disk = True
         except AnalysisException:
             pass  # no IVF artifacts saved
         except ValueError as e:
