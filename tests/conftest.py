@@ -1,8 +1,10 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: the checkout these tests belong to, whatever directory it lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -13,6 +15,22 @@ def spark():
 
     s = get_spark("tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture()
+def ivf_fits(monkeypatch):
+    """Records every KMeans fit (IVFIndex.build call) made by the test."""
+    from vervectordb_spark.operators.ivf import IVFIndex
+
+    calls = []
+    real = IVFIndex.build.__func__
+
+    def counting(cls, *args, **kwargs):
+        calls.append(args)
+        return real(cls, *args, **kwargs)
+
+    monkeypatch.setattr(IVFIndex, "build", classmethod(counting))
+    return calls
 
 
 @pytest.fixture(scope="session")

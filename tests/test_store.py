@@ -3,9 +3,38 @@
 
 import math
 
+import numpy as np
 import pytest
 
 from vervectordb_spark.store import DimensionError, VectorStore
+
+
+def nearest_centroid(vec, centroids) -> int:
+    """MLlib KMeans predict: the Euclidean argmin over the centroids."""
+    v = np.asarray(vec, dtype=np.float32).astype(np.float64)
+    return int(np.argmin(((centroids - v) ** 2).sum(axis=1)))
+
+
+def assert_index_tracks_rows(store, centroids, probe_ids=()):
+    """The kept IVF index describes the store's CURRENT rows: the
+    centroids are the ones fitted before the writes, `assigned` holds
+    exactly the live rows with their current vectors, each in the model's
+    cluster for that vector, and an all-cluster ivf_search finds every
+    row in `probe_ids` by its own vector at similarity 1."""
+    ivf = store._ivf
+    assert ivf is not None and ivf.model is not None
+    assert np.array_equal(ivf.centroids, centroids)
+    live = {r["vec_id"]: list(r["embedding"])
+            for r in store.df.select("vec_id", "embedding").collect()}
+    rows = ivf.assigned.select("vec_id", "embedding", "cluster_id").collect()
+    assert len(rows) == len(live)
+    assert {r["vec_id"]: list(r["embedding"]) for r in rows} == live
+    for r in rows:
+        assert r["cluster_id"] == nearest_centroid(r["embedding"], centroids)
+    for vid in probe_ids:
+        hit = store.ivf_search(live[vid], top_k=1, nprobe=ivf.n_clusters)[0]
+        assert hit["vector_id"] == vid
+        assert abs(hit["similarity"] - 1.0) < 1e-9
 
 
 @pytest.fixture()
@@ -157,23 +186,33 @@ def test_pq_via_store(spark):
     assert rec.count() == 32
 
 
-def test_mutation_invalidates_index(store):
+def test_mutation_invalidates_index(store, ivf_fits):
+    """No write leaves the IVF index serving the old rows (the stale-HNSW
+    bug, SURVEY §1.3, stays fixed) — and none refits KMeans: the fitted
+    centroids are kept and only the rows are reassigned."""
     store.build_ivf_index(n_clusters=2)
-    assert store._ivf is not None
-    store.insert([0.2, 0.2, 0.2, 0.2], {})
-    assert store._ivf is None  # stale-index bug (SURVEY §1.3) fixed
+    centroids = store._ivf.centroids.copy()
+    ids = [r["vec_id"] for r in store.df.select("vec_id").collect()]
+    new = store.insert([0.2, 0.2, 0.2, 0.2], {})
+    assert_index_tracks_rows(store, centroids, [new])
+    store.update(ids[0], [0.1, 0.3, 0.5, 0.7])
+    assert_index_tracks_rows(store, centroids, [ids[0]])
+    store.delete(ids[1])
+    assert_index_tracks_rows(store, centroids)
+    assert len(ivf_fits) == 1  # the build_ivf_index() call only
 
 
-def test_index_validity_is_per_index(store):
-    """ADVICE r1 (medium): building ANN after a mutation must NOT mark the
-    IVF index valid — a shared flag served a stale pre-mutation IVF."""
+def test_index_validity_is_per_index(store, ivf_fits):
+    """ADVICE r1 (medium): building ANN after a mutation must not leave
+    the IVF index describing the pre-mutation rows — a shared validity
+    flag once served a stale IVF."""
     store.build_ivf_index(n_clusters=2)
-    store.insert([0.2, 0.2, 0.2, 0.2], {"text": "new row"})
+    centroids = store._ivf.centroids.copy()
+    new = store.insert([0.2, 0.2, 0.2, 0.2], {"text": "new row"})
     store.build_ann_index()  # building one index...
-    assert store._ivf is None  # ...must not resurrect the other
-    # and a subsequent ivf_search sees the new row (rebuild happened)
-    res = store.ivf_search([0.2, 0.2, 0.2, 0.2], top_k=1, nprobe=2)
-    assert abs(res[0]["similarity"] - 1.0) < 1e-9
+    # ...leaves the other on the current rows, without a refit
+    assert_index_tracks_rows(store, centroids, [new])
+    assert len(ivf_fits) == 1
 
 
 def test_compress_idempotent(spark):
@@ -249,9 +288,10 @@ def test_load_ignores_empty_pq_artifacts(spark, tmp_path):
     assert any("PQ artifacts" in str(x.message) for x in w)
 
 
-def test_merge_bulk_upsert(store, spark):
+def test_merge_bulk_upsert(store, spark, ivf_fits):
     """Bulk replace-or-insert by vec_id: updated rows replaced in place,
-    new ids appended, untouched rows intact, indexes invalidated."""
+    new ids appended, untouched rows intact, the IVF index reassigned to
+    the merged rows without a refit."""
     ids = [r["vec_id"] for r in store.df.select("vec_id").collect()]
     src = spark.createDataFrame(
         [
@@ -261,8 +301,10 @@ def test_merge_bulk_upsert(store, spark):
         "vec_id string, embedding array<float>, metadata map<string,string>",
     )
     store.build_ivf_index(n_clusters=2)
+    centroids = store._ivf.centroids.copy()
     store.merge(src)
-    assert store._ivf is None  # mutation invalidated the index
+    assert_index_tracks_rows(store, centroids, [ids[0], "brand-new"])
+    assert len(ivf_fits) == 1
     assert store.df.count() == 4
     got = store.get_by_id(ids[0])
     assert got["vector"] == [0.0, 0.0, 1.0, 0.0]
@@ -270,6 +312,47 @@ def test_merge_bulk_upsert(store, spark):
     assert store.get_by_id("brand-new")["metadata"] == {"text": "inserted"}
     # untouched row survives with its original payload
     assert store.get_by_id(ids[1])["vector"] == [0.0, 1.0, 0.0, 0.0]
+
+
+def test_kept_index_saves_live_rows_and_loaded_index_drops_on_write(
+        spark, tmp_path, ivf_fits):
+    """Writes → save → load with a kept (fitted) IVF index: the saved
+    layout holds exactly the live rows in the pre-write centroids'
+    clusters, and the loaded index serves them. A loaded index has no
+    model to assign new rows, so a write drops it and the next ivf_search
+    refits."""
+    path = str(tmp_path / "kept")
+    st = VectorStore(spark, vector_dim=4)
+    ids = st.batch_insert([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
+                           [0.9, 0.1, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]])
+    st.build_ivf_index(n_clusters=2)
+    centroids = st._ivf.centroids.copy()
+    new_vec = [0.2, 0.3, 0.4, 0.5]
+    new = st.insert(new_vec)
+    st.update(ids[0], [0.0, 0.5, 0.0, 1.0])
+    st.delete(ids[1])
+    st.save(path)
+    assert len(ivf_fits) == 1
+
+    live = {ids[0]: [0.0, 0.5, 0.0, 1.0], ids[2]: [0.9, 0.1, 0.0, 0.0],
+            ids[3]: [0.0, 0.0, 1.0, 0.0], new: new_vec}
+    saved = spark.read.parquet(f"{path}/ivf/vectors_by_cluster").collect()
+    assert len(saved) == len(live)
+    assert {r["vec_id"]: list(r["embedding"]) for r in saved} == {
+        k: [float(np.float32(x)) for x in v] for k, v in live.items()}
+    for r in saved:
+        assert r["cluster_id"] == nearest_centroid(r["embedding"], centroids)
+
+    loaded = VectorStore.load(spark, path)
+    assert loaded._ivf.model is None
+    assert np.array_equal(loaded._ivf.centroids, centroids)
+    hit = loaded.ivf_search(new_vec, top_k=1, nprobe=2)[0]
+    assert hit["vector_id"] == new and abs(hit["similarity"] - 1.0) < 1e-6
+
+    loaded.insert([0.5, 0.5, 0.5, 0.5])
+    assert loaded._ivf is None
+    loaded.ivf_search(new_vec, top_k=1, nprobe=2)
+    assert len(ivf_fits) == 2 and loaded._ivf.model is not None
 
 
 def test_merge_dim_check(store, spark):

@@ -16,7 +16,7 @@ import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 #: median-of-N timing (JVM/GC noise at these sizes is ±30%; the reference's
 #: own numbers in BASELINE.md are single-shot, so the comparison is

@@ -12,10 +12,11 @@ registry entries have an auditable in-repo record (VERDICT r5 #3).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 

@@ -14,7 +14,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 #: windows over bounded candidate sets (documented in the operator) —
 #: anything else that windows without a partition key is a bug
@@ -89,7 +90,7 @@ def main() -> int:
         f"{len(rows)} queries audited; {len(flagged)} flagged.",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"{len(rows)} queries audited; {len(flagged)} flagged -> PLANS.md")
     return 0

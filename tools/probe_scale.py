@@ -15,10 +15,11 @@ from __future__ import annotations
 
 import json
 import statistics
+import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 

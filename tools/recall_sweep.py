@@ -28,7 +28,7 @@ import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPEATS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
 N, DIM, N_QUERIES, TOP_K = 50_000, 128, 100, 10

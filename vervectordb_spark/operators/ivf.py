@@ -312,6 +312,30 @@ class IVFIndex:
         self.emb_col = emb_col
         #: the fitted KMeansModel (build() only): assigns clusters to rows
         self.model = model
+        #: rows bound by rebind() and not yet assigned
+        self._rows: DataFrame | None = None
+
+    @property
+    def assigned(self) -> DataFrame:
+        """The indexed rows plus `cluster_id`. Rows bound by `rebind` are
+        assigned here, on first use, by the fitted model's predict."""
+        if self._assigned is None and self._rows is not None:
+            self._assigned = self.assign(self._rows)
+        return self._assigned
+
+    @assigned.setter
+    def assigned(self, value: DataFrame) -> None:
+        self._assigned = value
+
+    def rebind(self, df: DataFrame) -> None:
+        """Keep the centroids and the fitted model, index the rows of `df`
+        instead: a new store version reuses the fit rather than refitting
+        KMeans. Only a fitted index (build()) can assign new rows. Nothing
+        runs here, not even the predict plan — `assigned` builds it on
+        first use."""
+        if self.model is None:
+            raise ValueError("rebind needs a fitted index (IVFIndex.build)")
+        self._rows, self._assigned = df, None
 
     @property
     def n_clusters(self) -> int:
@@ -336,7 +360,7 @@ class IVFIndex:
         model = km.fit(feats)
         centroids = np.array([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
         index = cls(None, centroids, id_col=id_col, emb_col=emb_col, model=model)
-        index.assigned = index.assign(df)
+        index.rebind(df)
         return index
 
     def assign(self, df: DataFrame) -> DataFrame:

@@ -23,8 +23,13 @@ Mutability: the reference mutates the matrix in place; DataFrames are
 immutable, so update/delete are copy-on-write rewrites. Every assignment
 of the store frame (`df`) starts a new store VERSION. Unlike the
 reference (which leaves HNSW stale after update/delete —
-vervectordb/__init__.py:311-335), derived indexes here are invalidated on
-every mutation and rebuilt on demand, so they can never dangle.
+vervectordb/__init__.py:311-335), no index here can dangle. A fitted IVF
+index keeps its centroids and KMeans model across writes and has its
+rows reassigned every version (lazily, on the first read that needs
+them) — the policy streaming/refresh.py applies to arriving batches;
+only build_ivf_index() refits. A loaded IVF layout has no model to
+assign new rows with, so a write drops it, like every other index, and
+the next search rebuilds.
 
 Serving: brute_force_search, filtered_search, ivf_search and batch_search
 read one SERVING FRAME per version — the store rows plus their self-dot
@@ -104,25 +109,28 @@ class VectorStore:
         #: the serving frame and the (version, IVF index) it was built for
         self._frame: DataFrame | None = None
         self._frame_for: tuple | None = None
-        self.df = spark.createDataFrame([], _ROW_SCHEMA)
         # Derived indexes are cleared (not flagged) on mutation: a shared
         # validity flag lets building ONE index mark the OTHER valid and
         # serve stale results. None == "rebuild before use" — per-index,
-        # unambiguous. The PQ codec is NOT an index: its codebooks are a
-        # sample-trained lossy codec, still valid for encoding new rows
-        # (the reference likewise trains once, vervectordb/__init__.py:493).
+        # unambiguous. A fitted IVF index is the exception: it is rebound
+        # to every new version's rows (see the df setter). The PQ codec is
+        # NOT an index: its codebooks are a sample-trained lossy codec,
+        # still valid for encoding new rows (the reference likewise trains
+        # once, vervectordb/__init__.py:493).
         #: blocks backing the CURRENT localCheckpoint of self.df /
         #: ivf.assigned, released when a newer checkpoint replaces them
         #: (finding #15 — DataFrame.unpersist() is a silent no-op here)
         self._df_ckpt_ids: set[int] = set()
         self._ivf_ckpt_ids: set[int] = set()
         self._ivf = None
+        self.df = spark.createDataFrame([], _ROW_SCHEMA)
         self._ann = None
         self._imi = None
         self._pq = None
         # residual codec (FAISS-style IVF-PQ): tied to the IVF centroids it
-        # was fitted against, so it IS index-like — cleared on mutation
-        # together with the IVF index; the encoded table is a cache.
+        # was fitted against, so it IS index-like — kept while they are,
+        # dropped with them; the encoded table is a cache of rows, cleared
+        # on every write.
         self._pq_res = None
         self._res_encoded = None
         # SQ8 scalar-quantization stats: per-dimension min/max, dim rows of
@@ -154,9 +162,13 @@ class VectorStore:
     @df.setter
     def df(self, value: DataFrame) -> None:
         # every new frame is a new version: the serving frame is rebuilt
-        # from it on the next read
+        # from it on the next read, and a fitted IVF index is bound to its
+        # rows (assigned on first use), so `_ivf.assigned` always
+        # describes the current df
         self._df = value
         self._version += 1
+        if self._ivf is not None and self._ivf.model is not None:
+            self._ivf.rebind(value)
 
     def _serving(self) -> DataFrame:
         """The frame facade reads scan: `df` plus its row self-dot SS_COL
@@ -287,8 +299,9 @@ class VectorStore:
         new_vector: Sequence[float] | None = None,
         new_metadata: dict | None = None,
     ) -> None:
-        """P2: copy-on-write row replacement. Unlike the reference, derived
-        indexes are invalidated (fixes the stale-HNSW quirk, SURVEY §1.3)."""
+        """P2: copy-on-write row replacement. Unlike the reference, no
+        index serves the old vector (fixes the stale-HNSW quirk, SURVEY
+        §1.3): a fitted IVF index reassigns the row, the others drop."""
         if new_vector is not None:
             self._check_rows([new_vector])
         old = self.get_by_id(vec_id)  # KeyError if absent, like the reference
@@ -477,14 +490,24 @@ class VectorStore:
 
     # ----------------------------------------------------- derived indexes
     def _invalidate(self) -> None:
-        self._ivf = None
+        """After a write. A fitted IVF index stays: the df setter already
+        rebound it to the new rows, and its centroids (with the residual
+        codec fitted to them) hold until build_ivf_index() refits. A
+        loaded IVF layout has no model to assign the new rows, so it
+        drops with the other indexes and the next search refits."""
+        if self._ivf is not None and self._ivf.model is None:
+            self._ivf = None
+            self._pq_res = None
         self._ann = None
         self._imi = None
-        self._pq_res = None
         self._res_encoded = None
         self._base_pristine = False  # df no longer == the persisted layout
 
     def build_ivf_index(self, n_clusters: int = 16, seed: int = 42):
+        """Q4: fit KMeans over the current rows — the one way the
+        centroids change. Writes keep them and only reassign rows (see
+        _invalidate); call this again to re-center clusters that drifted
+        (operators.ivf.centroid_drift measures by how much)."""
         from vervectordb_spark.operators.ivf import IVFIndex
 
         self._ivf = IVFIndex.build(self.df, n_clusters=n_clusters, seed=seed)
@@ -512,8 +535,8 @@ class VectorStore:
         """Two-level coarse quantizer over the store (operators/imi.py —
         beyond the reference's index set): k1*k2 cells from k1+k2 trained
         half-centroids. The cell-count answer when a flat IVF's k would
-        have to be impractically large; cleared on mutation like every
-        other index (None == rebuild before use)."""
+        have to be impractically large; cleared on mutation (None ==
+        rebuild before use)."""
         from vervectordb_spark.operators.imi import IMIIndex
 
         self._imi = IMIIndex.build(self.df, k1=k1, k2=k2,
@@ -922,8 +945,9 @@ class VectorStore:
 
     def restore_version(self, version: int) -> None:
         """Roll the store's vectors back to a prior checkpoint — published
-        as a NEW version (append-only log; nothing is destroyed). Derived
-        indexes are invalidated and rebuild lazily."""
+        as a NEW version (append-only log; nothing is destroyed). Like any
+        write: a fitted IVF index reassigns the restored rows, the other
+        indexes drop and rebuild lazily."""
         if getattr(self, "_versions", None) is None:
             raise ValueError("no versioned checkpoint yet")
         self._versions.rollback(version)
