@@ -102,39 +102,137 @@ def test_streaming_ingest_drops_bad_dims(spark, tmp_path):
     assert kept == {1, 3}
 
 
-def test_incremental_refresh_new_rows_searchable_before_rebuild(spark, tmp_path):
-    """Rows arriving AFTER the last full rebuild are assigned to the
-    published centroids and appended into the partitioned layout — the
-    loaded index serves them without waiting for the next rebuild."""
-    from vervectordb_spark.operators.ivf import IVFIndex
+def _vector_stream(spark, tmp_path, name):
+    """The 120 fixture vectors as a 4-file stream source read one file per
+    micro-batch, and the source frame."""
     from vervectordb_spark.schema import load_table
-    from vervectordb_spark.streaming.refresh import ingest_with_index_refresh
 
-    src = str(tmp_path / "vec_stream_inc")
-    store = str(tmp_path / "store_inc")
-    ckpt = str(tmp_path / "inc_ckpt")
+    src = str(tmp_path / f"vec_stream_{name}")
     emb = load_table(spark, SF_DIR, "embeddings").limit(120)
     emb.repartition(4).write.mode("overwrite").parquet(src)
-
     stream = (
         spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
+    return stream, emb
+
+
+def test_incremental_refresh_new_rows_searchable_before_rebuild(spark, tmp_path):
+    """Rows arriving AFTER the last full rebuild are assigned by the
+    rebuild's own rule (the fitted model's predict) and appended into the
+    partitioned layout — the loaded index serves them without waiting for
+    the next rebuild, and the PQ codes table carries the same clusters."""
+    from tests.test_store import nearest_centroid
+    from vervectordb_spark.operators.ivf import IVFIndex
+    from vervectordb_spark.streaming.refresh import ingest_with_index_refresh
+
+    store = str(tmp_path / "store_inc")
+    stream, emb = _vector_stream(spark, tmp_path, "inc")
     # 4 micro-batches, rebuild after the 3rd: the 4th batch reaches the
-    # index only via the incremental assign-to-centroids path
+    # index only via the append path
     q = ingest_with_index_refresh(
-        stream, store, ckpt, refresh_every=3, n_clusters=4, dim=64
+        stream, store, str(tmp_path / "inc_ckpt"), refresh_every=3,
+        n_clusters=4, dim=64, pq_subquantizers=8, pq_codebook_size=16,
     )
     q.awaitTermination(180)
     assert q._refresh_state["refreshes"] == 1
-    assert q._refresh_state["incremental_appends"] == 1
+    assert q._refresh_state["appends"]["ivf"] == 1
 
     idx = IVFIndex.load(spark, f"{store}/ivf")
     ingested = {r["vec_id"] for r in emb.select("vec_id").collect()}
-    indexed = {r["vec_id"] for r in idx.assigned.select("vec_id").collect()}
-    assert indexed == ingested  # batch-4 rows present pre-rebuild
+    layout = {r["vec_id"]: (r["cluster_id"], r["embedding"]) for r in
+              idx.assigned.select("vec_id", "cluster_id", "embedding").collect()}
+    assert set(layout) == ingested  # batch-4 rows present pre-rebuild
+    # every row, appended or rebuilt, sits in the cluster MLlib's predict
+    # (Euclidean argmin over the saved centroids) gives its vector
+    misplaced = sorted(vid for vid, (c, v) in layout.items()
+                       if c != nearest_centroid(v, idx.centroids))
+    assert misplaced == []
+    codes = spark.read.parquet(f"{store}/codes").select("vec_id", "cluster_id")
+    assert {r["vec_id"]: r["cluster_id"] for r in codes.collect()} \
+        == {vid: c for vid, (c, _v) in layout.items()}
     qv = [float(x) for x in emb.limit(1).collect()[0]["embedding"]]
     hits = idx.search(qv, top_k=5, nprobe=4).collect()
     assert len(hits) == 5
+
+
+def test_refresh_appends_every_layout(spark, tmp_path):
+    """Every layout on in one small stream: the rebuild after batch 3
+    fits all eight, batch 4 reaches each of them only through its append,
+    and each layout then holds every ingested row exactly once."""
+    from vervectordb_spark.streaming.refresh import ingest_with_index_refresh
+
+    store = str(tmp_path / "store_all")
+    stream, emb = _vector_stream(spark, tmp_path, "all")
+    q = ingest_with_index_refresh(
+        stream, store, str(tmp_path / "all_ckpt"), refresh_every=3,
+        n_clusters=4, dim=64, ann_tables=2, ann_bits=6,
+        pq_subquantizers=8, pq_codebook_size=16, bq_enabled=True,
+        sq_enabled=True, imi=(4, 4), imi_pq_subquantizers=8,
+        imi_pq_codebook_size=16, learned_bq_bits=32,
+    )
+    q.awaitTermination(300)
+    st = q._refresh_state
+    assert st["refreshes"] == 1
+    layouts = {"ivf": "ivf/vectors_by_cluster", "ann": "ann/signed",
+               "pq": "codes", "bq": "bq/codes", "sq": "sq/codes",
+               "imi": "imi/vectors_by_cell", "imipq": "imipq/codes",
+               "lbq": "lbq/codes"}
+    assert dict(st["appends"]) == {kind: 1 for kind in layouts}
+    ingested = sorted(r["vec_id"] for r in emb.select("vec_id").collect())
+    for kind, sub in layouts.items():
+        ids = sorted(r["vec_id"] for r in
+                     spark.read.parquet(f"{store}/{sub}").select("vec_id").collect())
+        assert ids == ingested, kind
+
+
+def test_refresh_append_releases_shared_blocks_when_a_write_fails(
+        spark, tmp_path, monkeypatch):
+    """The IVF assignment an append shares between the layout and the PQ
+    codes is pinned for the two writes; when the codes write raises, the
+    pin is released before the query fails (no leaked blocks)."""
+    from vervectordb_spark.functions.checkpoint import persistent_rdd_ids
+    from vervectordb_spark.operators.pq import PQCodec
+    from vervectordb_spark.streaming.refresh import ingest_with_index_refresh
+
+    real_encode = PQCodec.encode
+    sc = spark.sparkContext
+    baseline = persistent_rdd_ids(sc)
+    pinned = []  # ids pinned beyond the baseline at each encode call
+
+    def encode_fails_on_append(self, df, *args, **kwargs):
+        pinned.append(persistent_rdd_ids(sc) - baseline)
+        if len(pinned) > 1:  # the rebuild encodes first, the append second
+            raise RuntimeError("injected encode failure")
+        return real_encode(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(PQCodec, "encode", encode_fails_on_append)
+    stream, _emb = _vector_stream(spark, tmp_path, "leak")
+    q = ingest_with_index_refresh(
+        stream, str(tmp_path / "store_leak"), str(tmp_path / "leak_ckpt"),
+        refresh_every=3, n_clusters=4, dim=64, pq_subquantizers=8,
+        pq_codebook_size=16,
+    )
+    with pytest.raises(Exception, match="injected encode failure"):
+        q.awaitTermination(180)
+    assert len(pinned) == 2 and pinned[1]  # the append had pinned blocks
+    assert persistent_rdd_ids(sc) - baseline == set()
+
+
+def test_failed_eager_checkpoint_releases_its_blocks(spark):
+    """localCheckpoint marks the RDD persistent before its eager job runs:
+    when that job fails, eager_checkpoint must unmark it before raising."""
+    from vervectordb_spark.functions.checkpoint import (
+        eager_checkpoint, persistent_rdd_ids)
+
+    @F.udf("int")
+    def fails(x):
+        raise ValueError("injected row failure")
+
+    sc = spark.sparkContext
+    baseline = persistent_rdd_ids(sc)
+    with pytest.raises(Exception, match="injected row failure"):
+        eager_checkpoint(spark.range(4).withColumn("y", fails("id")))
+    assert persistent_rdd_ids(sc) - baseline == set()
 
 
 @pytest.mark.deep
@@ -195,7 +293,7 @@ def test_incremental_ann_signing_before_rebuild(spark, tmp_path):
     )
     q.awaitTermination(180)
     assert q._refresh_state["refreshes"] == 1
-    assert q._refresh_state["ann_incremental_appends"] == 1
+    assert q._refresh_state["appends"]["ann"] == 1
 
     idx = SignLSHIndex.load(spark, f"{store}/ann")
     ingested = {r["vec_id"] for r in emb.select("vec_id").collect()}
@@ -249,7 +347,7 @@ def test_incremental_pq_codes_before_rebuild(spark, tmp_path):
     )
     q.awaitTermination(180)
     assert q._refresh_state["refreshes"] == 1
-    assert q._refresh_state["pq_incremental_appends"] == 1
+    assert q._refresh_state["appends"]["pq"] == 1
 
     codes = spark.read.parquet(f"{store}/codes")
     ingested = {r["vec_id"] for r in emb.select("vec_id").collect()}
@@ -481,7 +579,7 @@ def test_incremental_ann_wide_bits_matches_prefix_layout(spark, tmp_path):
         ann_tables=2, ann_bits=16,
     )
     q.awaitTermination(180)
-    assert q._refresh_state["ann_incremental_appends"] == 1
+    assert q._refresh_state["appends"]["ann"] == 1
     idx = SignLSHIndex.load(spark, f"{store}/ann")  # loads = layout intact
     assert idx.prefix_shift == 4
     ingested = {r["vec_id"] for r in emb.select("vec_id").collect()}
@@ -553,9 +651,9 @@ def test_incremental_bq_sq_imi_before_rebuild(spark, tmp_path):
     q.awaitTermination(240)
     st = q._refresh_state
     assert st["refreshes"] == 1
-    assert st["bq_incremental_appends"] == 1
-    assert st["sq_incremental_appends"] == 1
-    assert st["imi_incremental_appends"] == 1
+    assert st["appends"]["bq"] == 1
+    assert st["appends"]["sq"] == 1
+    assert st["appends"]["imi"] == 1
 
     vectors = spark.read.parquet(f"{store}/vectors")
     ingested = {r["vec_id"] for r in vectors.select("vec_id").collect()}
@@ -655,9 +753,9 @@ def test_incremental_imipq_and_learned_bq_before_rebuild(spark, tmp_path):
     q.awaitTermination(240)
     st = q._refresh_state
     assert st["refreshes"] == 1
-    assert st["imi_incremental_appends"] == 1
-    assert st["imipq_incremental_appends"] == 1
-    assert st["lbq_incremental_appends"] == 1
+    assert st["appends"]["imi"] == 1
+    assert st["appends"]["imipq"] == 1
+    assert st["appends"]["lbq"] == 1
 
     vectors = spark.read.parquet(f"{store}/vectors")
     ingested = {r["vec_id"] for r in vectors.select("vec_id").collect()}

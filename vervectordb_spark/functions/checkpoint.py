@@ -62,7 +62,13 @@ def eager_checkpoint(df: DataFrame,
     still captured (and released) the same way."""
     sc = df.sparkSession.sparkContext
     before = persistent_rdd_ids(sc)
-    out = df.localCheckpoint(eager=eager)
+    try:
+        out = df.localCheckpoint(eager=eager)
+    except BaseException:
+        # the RDD is marked before the eager job runs: a failed job
+        # must not leave it pinned
+        release_blocks(sc, persistent_rdd_ids(sc) - before)
+        raise
     new_ids = persistent_rdd_ids(sc) - before
     if release:
         release_blocks(sc, release)

@@ -505,21 +505,8 @@ class SignLSHIndex:
         1× default."""
         from vervectordb_spark.sources.atomic import atomic_save
 
-        shift = max(self.bits - self.MAX_PARTITION_BITS, 0)
         with atomic_save(path) as tmp:
-            if shift == 0:
-                self.signed.write.mode("overwrite").partitionBy(
-                    "bucket_0"
-                ).parquet(f"{tmp}/signed")
-            else:
-                # wide hashes: at most 2^MAX_PARTITION_BITS directories,
-                # keyed by the bucket_0 prefix; bucket_0 stays a data
-                # column and probes add the prefix conjunct for pruning
-                self.signed.withColumn(
-                    "bucket_p0", F.expr(f"shiftright(bucket_0, {shift})")
-                ).write.mode("overwrite").partitionBy("bucket_p0").parquet(
-                    f"{tmp}/signed"
-                )
+            shift = self.write_layout(self.signed, tmp, "overwrite")
             spark = self.signed.sparkSession
             dim = len(self.planes[0]) if self.planes else 0
             meta = spark.createDataFrame(
@@ -529,6 +516,29 @@ class SignLSHIndex:
                 "emb_col string, prefix_shift int",
             )
             meta.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/meta")
+
+    def sign(self, df: DataFrame) -> DataFrame:
+        """`df` plus this index's bucket_<t> columns (the GEMM kernel) —
+        how rows arriving after the build are signed."""
+        return _sign_gemm(df, self.planes, self.n_tables, self.bits,
+                          self.emb_col, len(self.planes[0]))
+
+    def write_layout(self, signed: DataFrame, path: str, mode: str) -> int:
+        """Write signed rows into the bucket-partitioned layout under
+        `path` — `save` writes the whole index this way, and a streaming
+        append adds a batch's rows to it. Returns the prefix shift.
+
+        Hashes up to MAX_PARTITION_BITS wide partition by bucket_0. Wider
+        hashes partition by its prefix bucket_p0 = bucket_0 >> shift (at
+        most 2^MAX_PARTITION_BITS directories); bucket_0 stays a data
+        column and probes add the prefix conjunct for pruning."""
+        shift = max(self.bits - self.MAX_PARTITION_BITS, 0)
+        if shift:
+            signed = signed.withColumn(
+                "bucket_p0", F.expr(f"shiftright(bucket_0, {shift})"))
+        signed.write.mode(mode).partitionBy(
+            "bucket_p0" if shift else "bucket_0").parquet(f"{path}/signed")
+        return shift
 
     @classmethod
     def load(cls, spark, path: str) -> "SignLSHIndex":

@@ -94,12 +94,35 @@ class IMIIndex:
         #: rule without it
         self._probe_cdf: tuple[np.ndarray, np.ndarray] | None = None
 
-    def _cent_df(self, half: int) -> DataFrame:
+    def _cent_df(self, half: int, spark=None) -> DataFrame:
         cent = self.cent1 if half == 1 else self.cent2
-        return self.assigned.sparkSession.createDataFrame(
+        return (spark or self.assigned.sparkSession).createDataFrame(
             [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
             "cell_id int, centroid array<double>",
         )
+
+    def assign(self, df: DataFrame) -> DataFrame:
+        """`df` plus (cell1, cell2): each half of the vector goes to its
+        argmax-cosine half-centroid; rows with NULL embeddings are
+        dropped. The rule `from_centroids` indexes with, and the one a
+        streaming append assigns arriving rows by."""
+        spark = df.sparkSession
+        a = _assign_half(df, self._cent_df(1, spark), self.emb_col, self.dim,
+                         1, "cell1", self.id_col)
+        return _assign_half(a, self._cent_df(2, spark), self.emb_col,
+                            self.dim, 2, "cell2", self.id_col)
+
+    @staticmethod
+    def write_layout(assigned: DataFrame, path: str, mode: str) -> None:
+        """Write rows carrying (cell1, cell2) into the two-level layout
+        under `path`: partitioned BY cell1 (fan-out bounded by k1 —
+        filesystem-safe at any k1·k2) and SORTED by cell2 within each
+        file, so a rectangle probe prunes partitions on cell1 and row
+        groups on cell2. `save` writes the whole index this way, and a
+        streaming append adds a batch's rows to it."""
+        (assigned.repartition("cell1").sortWithinPartitions("cell2")
+         .write.mode(mode).partitionBy("cell1")
+         .parquet(f"{path}/vectors_by_cell"))
 
     # -- construction ------------------------------------------------
 
@@ -111,16 +134,15 @@ class IMIIndex:
         """Frozen-centroid construction — the oracle-replayable path.
         cent{1,2}_df: (cell_id int, centroid array<double>) of dim//2 and
         dim - dim//2 element centroids respectively."""
-        a = _assign_half(df, cent1_df, emb_col, dim, 1, "cell1", id_col)
-        a = _assign_half(a, cent2_df, emb_col, dim, 2, "cell2", id_col)
-
         def mat(cdf):
             rows = sorted(cdf.collect(), key=lambda r: r["cell_id"])
             return np.asarray([list(r["centroid"]) for r in rows],
                               dtype=np.float64)
 
-        return cls(a, mat(cent1_df), mat(cent2_df), dim,
-                   id_col=id_col, emb_col=emb_col)
+        index = cls(None, mat(cent1_df), mat(cent2_df), dim,
+                    id_col=id_col, emb_col=emb_col)
+        index.assigned = index.assign(df)
+        return index
 
     @classmethod
     def build(cls, df: DataFrame, k1: int = 32, k2: int = 32,
@@ -482,18 +504,14 @@ class IMIIndex:
     # -- persistence ---------------------------------------------------
 
     def save(self, path: str) -> None:
-        """Persist the two-level layout: data partitioned BY cell1 (fan-out
-        bounded by k1 — filesystem-safe at any k1·k2) and SORTED by cell2
-        within each partition file, so a rectangle probe prunes
-        partitions on cell1 and row groups on cell2. Write-then-swap
-        (sources/atomic.py): an interrupted save leaves the previous
-        complete artifact (the ivf.save contract)."""
+        """Persist the two-level layout (`write_layout`), the centroid
+        halves and the dim. Write-then-swap (sources/atomic.py): an
+        interrupted save leaves the previous complete artifact (the
+        ivf.save contract)."""
         from vervectordb_spark.sources.atomic import atomic_save
 
         with atomic_save(path) as tmp:
-            (self.assigned.repartition("cell1").sortWithinPartitions("cell2")
-             .write.mode("overwrite").partitionBy("cell1")
-             .parquet(f"{tmp}/vectors_by_cell"))
+            self.write_layout(self.assigned, tmp, "overwrite")
             for half, cent in ((1, self.cent1), (2, self.cent2)):
                 self._cent_df(half).coalesce(1).write.mode(
                     "overwrite").parquet(f"{tmp}/centroids{half}")

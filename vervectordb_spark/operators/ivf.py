@@ -803,11 +803,17 @@ class IVFIndex:
         from vervectordb_spark.sources.atomic import atomic_save
 
         with atomic_save(path) as tmp:
-            self.assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(
-                f"{tmp}/vectors_by_cluster"
-            )
+            self.write_layout(self.assigned, tmp, "overwrite")
             cent = self.centroids_df()
             cent.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
+
+    @staticmethod
+    def write_layout(assigned: DataFrame, path: str, mode: str) -> None:
+        """Write rows carrying `cluster_id` into the inverted layout under
+        `path`, one directory per cluster: `save` writes the whole index
+        this way, and a streaming append adds a batch's rows to it."""
+        assigned.write.mode(mode).partitionBy("cluster_id").parquet(
+            f"{path}/vectors_by_cluster")
 
     @classmethod
     def load(cls, spark, path: str, id_col: str = "vec_id",
