@@ -38,6 +38,15 @@ def test_cells_from_few_centroids(idx):
     assert len(stats) > 8    # genuinely 2-dimensional cell structure
 
 
+def test_build_is_partition_independent(corpus):
+    """One id-drawn, driver-sorted sample feeds both half fits, so the
+    same rows give the same half-centroids under any partitioning."""
+    one = IMIIndex.build(corpus.repartition(1), k1=8, k2=8, dim=16, seed=42)
+    seven = IMIIndex.build(corpus.repartition(7), k1=8, k2=8, dim=16, seed=42)
+    assert np.array_equal(one.cent1, seven.cent1)
+    assert np.array_equal(one.cent2, seven.cent2)
+
+
 def test_numpy_probe_matches_fold_probe(corpus, idx):
     qv = [float(x) for x in
           corpus.filter(F.col("vec_id") == 7).first()["embedding"]]

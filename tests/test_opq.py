@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vervectordb_spark.operators import opq
+from vervectordb_spark.operators.kmeans import _bounded_sample
 from vervectordb_spark.schema import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -146,7 +147,7 @@ def test_mix_none_rows_are_principal_directions(emb):
     R = opq.fit_learned_rotation(emb, 64, seed=42, order_col="vec_id",
                                  mix="none")
     assert np.abs(R @ R.T - np.eye(64)).max() < 1e-9
-    X = opq._bounded_sample(emb, "embedding", 10_000, 42, "vec_id")
+    X = _bounded_sample(emb, "embedding", 10_000, 42, "vec_id")
     Xc = X - X.mean(axis=0)
     var = ((Xc @ R.T) ** 2).sum(axis=0)
     assert var[0] == max(var)
@@ -188,9 +189,9 @@ def test_bounded_sample_overcap_deterministic_across_partitionings(spark, emb):
     """Over-cap selection with order_col is a hash-draw on row identity:
     the SAME rows (and therefore the same R) regardless of partitioning
     (ADVICE r6 — sample()+limit() was partitioning-dependent)."""
-    X1 = opq._bounded_sample(emb, "embedding", 100, 42, "vec_id")
-    X2 = opq._bounded_sample(emb.repartition(13), "embedding", 100, 42,
-                             "vec_id")
+    X1 = _bounded_sample(emb, "embedding", 100, 42, "vec_id")
+    X2 = _bounded_sample(emb.repartition(13), "embedding", 100, 42,
+                         "vec_id")
     assert X1.shape == X2.shape and X1.shape[0] <= 100
     assert np.array_equal(X1, X2)
     R1 = opq.fit_learned_rotation(emb, 64, sample_size=100, seed=42,

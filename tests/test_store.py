@@ -10,7 +10,7 @@ from vervectordb_spark.store import DimensionError, VectorStore
 
 
 def nearest_centroid(vec, centroids) -> int:
-    """MLlib KMeans predict: the Euclidean argmin over the centroids."""
+    """IVF predict: the Euclidean argmin over the centroids."""
     v = np.asarray(vec, dtype=np.float32).astype(np.float64)
     return int(np.argmin(((centroids - v) ** 2).sum(axis=1)))
 
@@ -18,11 +18,11 @@ def nearest_centroid(vec, centroids) -> int:
 def assert_index_tracks_rows(store, centroids, probe_ids=()):
     """The kept IVF index describes the store's CURRENT rows: the
     centroids are the ones fitted before the writes, `assigned` holds
-    exactly the live rows with their current vectors, each in the model's
-    cluster for that vector, and an all-cluster ivf_search finds every
-    row in `probe_ids` by its own vector at similarity 1."""
+    exactly the live rows with their current vectors, each in the nearest
+    centroid's cluster for that vector, and an all-cluster ivf_search
+    finds every row in `probe_ids` by its own vector at similarity 1."""
     ivf = store._ivf
-    assert ivf is not None and ivf.model is not None
+    assert ivf is not None
     assert np.array_equal(ivf.centroids, centroids)
     live = {r["vec_id"]: list(r["embedding"])
             for r in store.df.select("vec_id", "embedding").collect()}
@@ -314,13 +314,13 @@ def test_merge_bulk_upsert(store, spark, ivf_fits):
     assert store.get_by_id(ids[1])["vector"] == [0.0, 1.0, 0.0, 0.0]
 
 
-def test_kept_index_saves_live_rows_and_loaded_index_drops_on_write(
+def test_kept_index_saves_live_rows_and_loaded_index_survives_writes(
         spark, tmp_path, ivf_fits):
     """Writes → save → load with a kept (fitted) IVF index: the saved
     layout holds exactly the live rows in the pre-write centroids'
-    clusters, and the loaded index serves them. A loaded index has no
-    model to assign new rows, so a write drops it and the next ivf_search
-    refits."""
+    clusters, and the loaded index serves them. The loaded index is just
+    its centroids, so a write keeps it and reassigns the rows — no
+    refit."""
     path = str(tmp_path / "kept")
     st = VectorStore(spark, vector_dim=4)
     ids = st.batch_insert([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
@@ -344,15 +344,15 @@ def test_kept_index_saves_live_rows_and_loaded_index_drops_on_write(
         assert r["cluster_id"] == nearest_centroid(r["embedding"], centroids)
 
     loaded = VectorStore.load(spark, path)
-    assert loaded._ivf.model is None
-    assert np.array_equal(loaded._ivf.centroids, centroids)
+    kept = loaded._ivf
+    assert np.array_equal(kept.centroids, centroids)
     hit = loaded.ivf_search(new_vec, top_k=1, nprobe=2)[0]
     assert hit["vector_id"] == new and abs(hit["similarity"] - 1.0) < 1e-6
 
     loaded.insert([0.5, 0.5, 0.5, 0.5])
-    assert loaded._ivf is None
-    loaded.ivf_search(new_vec, top_k=1, nprobe=2)
-    assert len(ivf_fits) == 2 and loaded._ivf.model is not None
+    assert loaded._ivf is kept
+    assert_index_tracks_rows(loaded, centroids, [new])
+    assert len(ivf_fits) == 1
 
 
 def test_merge_dim_check(store, spark):

@@ -76,12 +76,3 @@ def affine_hash_sql(expr: str, i: int) -> str:
 def md5_long_sql(expr: str) -> str:
     """DuckDB twin of md5_long for oracle SQL composition."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def md5_long_hi_sql(expr: str) -> str:
-    """DuckDB twin of md5_long_hi."""
-    return f"(('0x' || substr(md5({expr}), 16, 15))::BIGINT)"
-
-
-def seeded_md5_long_sql(expr: str, seed: int) -> str:
-    return md5_long_sql(f"'{seed}:' || {expr}")

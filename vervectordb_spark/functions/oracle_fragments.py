@@ -52,10 +52,6 @@ def md5_sql(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
-def seeded_md5_sql(expr: str, seed: int) -> str:
-    return md5_sql(f"'{seed}:' || {expr}")
-
-
 def jaccard_sql(a: str, b: str) -> str:
     """Exact Jaccard of two DuckDB lists (== dedup.jaccard_expr)."""
     return (

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vervectordb_spark.functions.similarity import cosine_expr, to_double
+from vervectordb_spark.operators.kmeans import _bounded_sample, _lloyd_kmeans
 
 
 def _half_expr(emb_col: str, dim: int, half: int):
@@ -149,32 +150,23 @@ class IMIIndex:
               dim: int | None = None, seed: int = 42,
               id_col: str = "vec_id",
               emb_col: str = "embedding") -> "IMIIndex":
-        """Production fit: one MLlib KMeans per half (k1 + k2 centroids
-        TOTAL for k1*k2 cells — the whole point). Reuses the IVF build
-        machinery per half."""
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
+        """Production fit: one driver-side Lloyd k-means per half
+        (operators/kmeans.py) on ONE bounded sample of 256 × max(k1, k2)
+        rows drawn by id, so the same rows give the same centroids under
+        any partitioning — k1 + k2 centroids TOTAL for k1*k2 cells, the
+        whole point. Rows are then assigned by `assign`; NULL embeddings
+        neither train nor get a cell."""
         if dim is None:
             dim = df.select(F.size(emb_col).alias("d")).first()["d"]
-        spark = df.sparkSession
-        # NULL embeddings can neither train (array_to_vector NPEs) nor be
-        # assigned a meaningful cell — exclude them up front (ADVICE r5,
-        # the ivf._assign_with_sim contract)
-        df = df.filter(F.col(emb_col).isNotNull())
-        cents = []
-        for half, k in ((1, k1), (2, k2)):
-            feats = df.select(
-                array_to_vector(_half_expr(emb_col, dim, half))
-                .alias("_features"))
-            model = KMeans(k=k, seed=seed, featuresCol="_features").fit(feats)
-            cents.append(spark.createDataFrame(
-                [(i, [float(x) for x in c])
-                 for i, c in enumerate(model.clusterCenters())],
-                "cell_id int, centroid array<double>",
-            ))
-        return cls.from_centroids(df, cents[0], cents[1], dim,
-                                  id_col=id_col, emb_col=emb_col)
+        X = _bounded_sample(df, emb_col, 256 * max(k1, k2), seed, id_col)
+        mid = dim // 2
+        cent1 = _lloyd_kmeans(X[:, :mid], min(k1, len(X)), seed,
+                              init="k-means++")
+        cent2 = _lloyd_kmeans(X[:, mid:], min(k2, len(X)), seed,
+                              init="k-means++")
+        index = cls(None, cent1, cent2, dim, id_col=id_col, emb_col=emb_col)
+        index.assigned = index.assign(df)
+        return index
 
     # -- serving -----------------------------------------------------
 
@@ -225,7 +217,7 @@ class IMIIndex:
         # over xxhash64(seed, id), id-tiebroken — a bounded global-sort
         # prefix). Row membership depends only on (seed, row identity),
         # never on partitioning (the _bounded_sample contract,
-        # operators/opq.py), and the seed parameter actually reshuffles
+        # operators/kmeans.py), and the seed parameter actually reshuffles
         # which rows are drawn.
         df = self.assigned.select(self.id_col, self.emb_col).filter(
             F.col(self.emb_col).isNotNull())

@@ -7,7 +7,8 @@ clusters (:441), and rescores candidates exactly.
 
 Spark-first: the inverted list IS the partition layout.
 
-  * build  = MLlib KMeans (distributed fit, seeded) → `cluster_id` column
+  * build  = seeded driver-side Lloyd k-means on a bounded sample
+             (operators/kmeans.py) → `cluster_id` by MLlib predict
              → `write.partitionBy("cluster_id")` for persisted stores;
   * search = centroid scoring happens on the DRIVER against k×dim floats
              (broadcast-scale state, exactly like the reference's 16-row
@@ -28,12 +29,14 @@ vervectordb/__init__.py:463,481 — not reproduced).
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import cached_property
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vervectordb_spark.operators.kmeans import _bounded_sample, _lloyd_kmeans
 from vervectordb_spark.operators.search import brute_force_topk
 from vervectordb_spark.functions.identifiers import sql_ident
 
@@ -292,33 +295,46 @@ def centroid_drift(df: DataFrame, centroids_df: DataFrame, dim: int,
             .orderBy("cluster_id"))
 
 
-def _features(df: DataFrame, emb_col: str) -> DataFrame:
-    """`df` plus the MLlib vector column KMeans fits and predicts on."""
-    from pyspark.ml.functions import array_to_vector
+def _predict_model(centroids: np.ndarray):
+    """A `pyspark.ml` KMeansModel that predicts over `centroids` (the L2
+    argmin), reading `_features` and writing `cluster_id`. No fit runs:
+    an mllib `KMeansModel(Vector[])` is built from the centroids (each
+    through `Vectors.parse` of its repr, which round-trips every double)
+    and wrapped by ml's `KMeansModel(uid, parentModel)` constructor. That
+    constructor is `private[ml]` in Scala but public in the bytecode py4j
+    calls; tests/test_ivf.py pins that its predict is the L2 argmin."""
+    from pyspark.ml.clustering import KMeansModel
 
-    return df.withColumn(
-        "_features", array_to_vector(F.col(emb_col).cast("array<double>")))
+    sc = SparkSession.active().sparkContext
+    linalg = sc._jvm.org.apache.spark.mllib.linalg
+    centers = sc._gateway.new_array(linalg.Vector, len(centroids))
+    for i, c in enumerate(centroids):
+        centers[i] = linalg.Vectors.parse(repr([float(x) for x in c]))
+    parent = sc._jvm.org.apache.spark.mllib.clustering.KMeansModel(centers)
+    model = KMeansModel(
+        sc._jvm.org.apache.spark.ml.clustering.KMeansModel("ivf_predict", parent))
+    return model.setFeaturesCol("_features").setPredictionCol("cluster_id")
 
 
 class IVFIndex:
-    """cluster-assigned DataFrame + centroid matrix (driver state)."""
+    """cluster-assigned DataFrame + centroid matrix (driver state). The
+    centroids are the whole index: rows are assigned by a predict model
+    built from them, so a fitted, loaded or streamed index behaves the
+    same."""
 
     def __init__(self, assigned: DataFrame, centroids: np.ndarray,
-                 id_col: str = "vec_id", emb_col: str = "embedding",
-                 model=None):
+                 id_col: str = "vec_id", emb_col: str = "embedding"):
         self.assigned = assigned
         self.centroids = centroids
         self.id_col = id_col
         self.emb_col = emb_col
-        #: the fitted KMeansModel (build() only): assigns clusters to rows
-        self.model = model
         #: rows bound by rebind() and not yet assigned
         self._rows: DataFrame | None = None
 
     @property
     def assigned(self) -> DataFrame:
         """The indexed rows plus `cluster_id`. Rows bound by `rebind` are
-        assigned here, on first use, by the fitted model's predict."""
+        assigned here, on first use, by `assign`."""
         if self._assigned is None and self._rows is not None:
             self._assigned = self.assign(self._rows)
         return self._assigned
@@ -328,13 +344,10 @@ class IVFIndex:
         self._assigned = value
 
     def rebind(self, df: DataFrame) -> None:
-        """Keep the centroids and the fitted model, index the rows of `df`
-        instead: a new store version reuses the fit rather than refitting
-        KMeans. Only a fitted index (build()) can assign new rows. Nothing
-        runs here, not even the predict plan — `assigned` builds it on
-        first use."""
-        if self.model is None:
-            raise ValueError("rebind needs a fitted index (IVFIndex.build)")
+        """Keep the centroids, index the rows of `df` instead: a new store
+        version reuses the fit rather than refitting k-means. Nothing runs
+        here, not even the predict plan — `assigned` builds it on first
+        use."""
         self._rows, self._assigned = df, None
 
     @property
@@ -345,32 +358,34 @@ class IVFIndex:
     def build(cls, df: DataFrame, n_clusters: int = 16, seed: int = 42,
               id_col: str = "vec_id", emb_col: str = "embedding",
               max_iter: int = 20) -> "IVFIndex":
-        """Distributed k-means fit (the reference fits sklearn on a
-        float64 copy of the whole matrix, :416-418 — single-machine-bound;
-        MLlib iterates map-side partial sums instead)."""
-        from pyspark.ml.clustering import KMeans
-
-        feats = _features(df, emb_col)
-        # k <= N or the fit dies; limit(k).count() proves N >= k by scanning
-        # at most k rows instead of the whole table (a full count() at
-        # 100 TB is a complete scan spent on a sanity clamp)
-        n_clusters = max(1, min(n_clusters, feats.limit(n_clusters).count()))
-        km = KMeans(k=n_clusters, seed=seed, maxIter=max_iter,
-                    featuresCol="_features", predictionCol="cluster_id")
-        model = km.fit(feats)
-        centroids = np.array([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
-        index = cls(None, centroids, id_col=id_col, emb_col=emb_col, model=model)
+        """Seeded Lloyd k-means on the driver (the reference fits sklearn
+        on a float64 copy of the whole matrix, :416-418). The fit reads at
+        most 256 × n_clusters rows (FAISS's points-per-centroid default),
+        drawn by `id_col` so the same rows give the same centroids under
+        any partitioning; k is clamped to the rows drawn. Under the cap
+        the draw is one Spark job; rows are assigned lazily."""
+        X = _bounded_sample(df, emb_col, 256 * n_clusters, seed, id_col)
+        centroids = _lloyd_kmeans(X, max(1, min(n_clusters, len(X))), seed,
+                                  max_iter, init="k-means++")
+        index = cls(None, centroids, id_col=id_col, emb_col=emb_col)
         index.rebind(df)
         return index
 
+    @cached_property
+    def _model(self):
+        return _predict_model(self.centroids)
+
     def assign(self, df: DataFrame) -> DataFrame:
-        """`df` plus `cluster_id` from the fitted model's predict — lazy,
-        so every plan over the result reruns predict on every row: cache
-        the result when it is read more than once (the store's serving
-        frame does)."""
-        return self.model.transform(_features(df, self.emb_col)).drop("_features").withColumn(
-            "cluster_id", F.col("cluster_id").cast("int")
-        )
+        """`df` plus `cluster_id` = the nearest centroid by L2, by MLlib
+        predict — lazy, so every plan over the result reruns predict on
+        every row: cache the result when it is read more than once (the
+        store's serving frame does)."""
+        from pyspark.ml.functions import array_to_vector
+
+        feats = df.withColumn("_features", array_to_vector(
+            F.col(self.emb_col).cast("array<double>")))
+        return self._model.transform(feats).drop("_features").withColumn(
+            "cluster_id", F.col("cluster_id").cast("int"))
 
     def default_nprobe(self) -> int:
         """Reference default: max(n_clusters // 2, 8) — vervectordb/__init__.py:441."""
@@ -762,8 +777,8 @@ class IVFIndex:
 
         Assignment = argmax cosine(row, centroid) computed with the fold
         kernel on both engines, so the whole IVF query path — assignment,
-        probing, pruning, rescoring — is DuckDB-oracle-checkable (the MLlib
-        KMeans build path is graded by the recall harness instead; its
+        probing, pruning, rescoring — is DuckDB-oracle-checkable (the
+        k-means build path is graded by the recall harness instead; its
         centroids are not reproducible in SQL).
         """
         assigned = assign_by_centroids(df, centroids_df, id_col=id_col, emb_col=emb_col)

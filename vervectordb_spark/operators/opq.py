@@ -53,8 +53,8 @@ Kernels:
     in every serving chain absorbs it (same contract as sq's arrow
     scorer). NOT the oracle path.
 
-100 TB posture: fit is one bounded-sample collect (the PQ-train shape,
-operators/pq.py:151-176); apply is map-only (d² multiply-adds per row —
+100 TB posture: fit is one bounded-sample collect (the shared k-means
+sample, operators/kmeans.py); apply is map-only (d² multiply-adds per row —
 at dim ≥ 1024 prefer the arrow kernel, one GEMM per Arrow batch); serving
 scans never change shape (the rotation only moves WHICH bits the codec
 packs).
@@ -70,6 +70,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vervectordb_spark.functions.similarity import to_double
+from vervectordb_spark.operators.kmeans import _bounded_sample
 from vervectordb_spark.operators.rotation import hd_signs, next_pow2, pad_np
 
 
@@ -82,37 +83,6 @@ def hadamard(d: int) -> np.ndarray:
     while H.shape[0] < d:
         H = np.block([[H, H], [H, -H]])
     return H / np.sqrt(d)
-
-
-def _bounded_sample(df: DataFrame, emb_col: str, sample_size: int,
-                    seed: int, order_col: str | None) -> np.ndarray:
-    """The PQ-train sampling shape (operators/pq.py:151-176): limit-probe
-    the cap, subsample only over-cap corpora, collect once. With
-    order_col, BOTH the row SELECTION (over-cap: a hash-draw on the id —
-    xxhash64(seed, order_col) threshold — which rows survive depends only
-    on row identity, never on partitioning; sample()+limit() would pick a
-    partitioning-dependent subset) and the accumulation ORDER (driver-side
-    sort by order_col, then truncate to sample_size) are deterministic,
-    so the second-moment sum — and therefore R — is exactly reproducible
-    across partitionings/runs. Without order_col the over-cap subset is
-    seed-stable per partitioning only (documented, cheap path)."""
-    cols = [emb_col] if order_col is None else [order_col, emb_col]
-    sample = df.select(*cols).filter(F.col(emb_col).isNotNull())
-    over_cap = sample.limit(sample_size + 1).count() > sample_size
-    if over_cap:
-        n = sample.count()
-        frac = min(1.0, 1.2 * sample_size / n)
-        if order_col is not None:
-            denom = 1_000_000
-            sample = sample.filter(
-                F.pmod(F.xxhash64(F.lit(seed), F.col(order_col)),
-                       F.lit(denom)) < F.lit(max(1, int(denom * frac))))
-        else:
-            sample = sample.sample(fraction=frac, seed=seed).limit(sample_size)
-    rows = sample.collect()
-    if order_col is not None:
-        rows = sorted(rows, key=lambda r: r[order_col])[:sample_size]
-    return np.array([list(r[emb_col]) for r in rows], dtype=np.float64)
 
 
 def fit_learned_rotation(df: DataFrame, dim: int, sample_size: int = 10_000,

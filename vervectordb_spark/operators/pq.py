@@ -10,8 +10,8 @@ Reference behavior reproduced:
   * decode = codebook gather; compression ratio = dim·4B → m·1B.
 
 Spark-first design:
-  * fit: ONE distributed k-means per subspace over `F.slice` projections
-    (MLlib KMeans, seeded). Training reads a bounded sample
+  * fit: one seeded driver-side Lloyd k-means per subspace
+    (operators/kmeans.py) over a bounded sample collected once
     (reference train_pq samples min(10k, N), :493-494 → df.sample/limit);
   * codebooks: tiny (m × 256 × dim/m floats) — broadcast, never joined;
   * encode/decode: Arrow-batched mapInPandas, vectorized argmin/gather per
@@ -27,7 +27,7 @@ pass (no shuffle); the broadcast is ≤ 256·dim·8B. Re-encoding after
 codebook refresh is an idempotent full-scan rewrite.
 
 Oracle path: with codebooks FROZEN as a table, encode is expressible in
-SQL (argmin over 256 rows per subspace) — see queries_pq.py; the MLlib-fit
+SQL (argmin over 256 rows per subspace) — see queries_pq.py; the fitted
 codebooks themselves are graded by reconstruction-error tests (the
 reference's own acceptance metric, examples/datawhale.py:59-61).
 """
@@ -41,40 +41,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _lloyd_kmeans(X: np.ndarray, k: int, seed: int, max_iter: int = 20) -> np.ndarray:
-    """Seeded vectorized Lloyd's over a driver-resident sample. Empty
-    clusters keep their previous centroid (deterministic).
-
-    Assignment scores are float32 and skip the ‖x‖² term (constant per row
-    — argmin_c ‖x−c‖² == argmin_c (‖c‖² − 2x·c)), with in-place GEMM +
-    axpy so the (n × k) score matrix is allocated once, not 3× per
-    iteration. That's ~7× over the naive float64 broadcast expression
-    (26 → 4 ms/iter at n=10k, k=256, d=16 — the float64 temporaries, not
-    the GEMM, were the cost). Centroid UPDATES stay float64 (bincount
-    sums over the original X), so precision loss is confined to
-    assignment rounding on near-ties."""
-    rng = np.random.RandomState(seed)
-    centers = X[rng.choice(len(X), size=k, replace=False)].copy()
-    Xf = np.ascontiguousarray(X, dtype=np.float32)
-    scores = np.empty((len(X), k), dtype=np.float32)
-    for _ in range(max_iter):
-        cf = np.ascontiguousarray(centers.T, dtype=np.float32)
-        np.matmul(Xf, cf, out=scores)
-        scores *= -2.0
-        scores += (cf ** 2).sum(0)[None, :]
-        assign = scores.argmin(axis=1)
-        counts = np.bincount(assign, minlength=k)
-        sums = np.empty((k, X.shape[1]))
-        for j in range(X.shape[1]):  # d bincounts beat a k-loop of masks
-            sums[:, j] = np.bincount(assign, weights=X[:, j], minlength=k)
-        nonempty = counts > 0
-        new = centers.copy()
-        new[nonempty] = sums[nonempty] / counts[nonempty, None]
-        if np.allclose(new, centers):
-            break
-        centers = new
-    return centers
+from vervectordb_spark.operators.kmeans import _bounded_sample, _lloyd_kmeans
 
 
 def with_residual(df: DataFrame, centroids_df: DataFrame,
@@ -129,12 +96,12 @@ class PQCodec:
         sample_size: int = 10_000,
         max_iter: int = 20,
     ) -> "PQCodec":
-        """Per-subspace distributed k-means on a bounded sample.
+        """Per-subspace k-means on a bounded sample.
 
         Mirrors the reference's divisibility check (:163-164) and sampling
-        cap (:493-494). One MLlib KMeans job per subspace (m small jobs over
-        the same cached sample beats one giant concatenated job: each fit
-        sees only dim/m columns).
+        cap (:493-494). The sample is collected once; each subspace is one
+        seeded driver-side Lloyd fit (operators/kmeans.py) over its dim/m
+        columns.
         """
         if dim % n_subquantizers != 0:
             raise ValueError(
@@ -148,29 +115,10 @@ class PQCodec:
                 f"{codebook_size}"
             )
         sub_dim = dim // n_subquantizers
-        # Bounded-sample fit: probe whether the table exceeds the cap with
-        # limit(cap+1) (reads at most cap+1 rows — no count at all on the
-        # common under-cap path, the reasoning of IVFIndex.build's clamp).
-        # Only an over-cap corpus pays a count, and that one is a
-        # single-column projection (column-pruned scan) amortized into the
-        # one-time fit cost.
-        sample = df.select(emb_col)
-        over_cap = sample.limit(sample_size + 1).count() > sample_size
-        if over_cap:
-            n = sample.count()
-            sample = sample.sample(fraction=min(1.0, 1.2 * sample_size / n), seed=seed)
-            sample = sample.limit(sample_size)
-        # The sample is DRIVER-SIZED BY CONSTRUCTION (cap 10k rows × dim
-        # floats ≈ 5 MB at dim=128): collect once, fit m seeded Lloyd's
-        # k-means runs vectorized in NumPy. Launching 8 × maxIter Spark
-        # jobs to cluster 5 MB costs ~10× the arithmetic in scheduling
-        # (measured 14.5s MLlib vs ~1s local at the reference geometry);
-        # the DISTRIBUTED part of PQ is encode/decode over the full corpus,
-        # not the bounded-sample fit. (The reference fits sklearn on the
-        # same driver-resident sample, vervectordb/__init__.py:161-180.)
-        X = np.array(
-            [list(r[0]) for r in sample.collect()], dtype=np.float64
-        )
+        # cap 10k rows × dim floats ≈ 5 MB at dim=128: 8 × maxIter Spark
+        # jobs to cluster it cost ~10× the arithmetic in scheduling
+        # (measured 14.5s MLlib vs ~1s local at the reference geometry)
+        X = _bounded_sample(df, emb_col, sample_size, seed, None)
         k = min(codebook_size, len(X))
         books = []
         for s in range(n_subquantizers):

@@ -392,7 +392,7 @@ def knn_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q4/Q5 — IVF: assignment → probe → partition-pruned rescore
 # (vervectordb/__init__.py:411-487). Oracle-checkable via FIXED centroids
 # (= first 16 fixture embeddings): assignment/probing/rescoring all use the
-# fold cosine on both engines. The MLlib KMeans build path (IVFIndex.build)
+# fold cosine on both engines. The k-means build path (IVFIndex.build)
 # is graded by the recall harness in tests/test_ivf.py instead.
 # --------------------------------------------------------------------------
 

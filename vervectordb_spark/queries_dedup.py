@@ -36,12 +36,6 @@ def _md5_sql(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
-def _seeded_md5_sql(expr: str, seed: int) -> str:
-    return _md5_sql(f"'{seed}:' || {expr}")
-
-
-
-
 # ---------------------------------------------------------------------------
 # exact dedup — the fixture has no byte dups, so the query plants 20
 # deterministic copies (negative ids — collision-proof at any scale

@@ -52,10 +52,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events fixture, normalizing `ts` to epoch-nanos int64 —
     the parity-safe representation: all window/bucket/gap arithmetic stays

@@ -23,21 +23,20 @@ Mutability: the reference mutates the matrix in place; DataFrames are
 immutable, so update/delete are copy-on-write rewrites. Every assignment
 of the store frame (`df`) starts a new store VERSION. Unlike the
 reference (which leaves HNSW stale after update/delete —
-vervectordb/__init__.py:311-335), no index here can dangle. A fitted IVF
-index keeps its centroids and KMeans model across writes and has its
-rows reassigned every version (lazily, on the first read that needs
-them) — the policy streaming/refresh.py applies to arriving batches;
-only build_ivf_index() refits. A loaded IVF layout has no model to
-assign new rows with, so a write drops it, like every other index, and
-the next search rebuilds.
+vervectordb/__init__.py:311-335), no index here can dangle. An IVF
+index, fitted or loaded, is its centroid matrix: it keeps the centroids
+across writes and has its rows reassigned to the nearest one every
+version (lazily, on the first read that needs them) — the policy
+streaming/refresh.py applies to arriving batches; only build_ivf_index()
+refits. The other indexes drop on a write and rebuild on the next search.
 
 Serving: brute_force_search, filtered_search, ivf_search and batch_search
 read one SERVING FRAME per version — the store rows plus their self-dot
-(and, with an in-memory IVF index, their cluster_id), persisted
-MEMORY_AND_DISK. That derived state is computed on the first read of a
-new version and reused by every later read of it, which then scans
-cached columns instead of replaying the write lineage, the per-row norm
-fold and KMeans predict; the frame of the previous version is
+(and, with an IVF index, their cluster_id), persisted MEMORY_AND_DISK.
+That derived state is computed on the first read of a new version and
+reused by every later read of it, which then scans cached columns
+instead of replaying the write lineage, the per-row norm fold and the
+cluster predict; the frame of the previous version is
 unpersisted. Writes never fill a frame. Written rows travel as one Arrow
 table (a LocalRelation), so no read forks a Python worker for them.
 
@@ -112,8 +111,8 @@ class VectorStore:
         # Derived indexes are cleared (not flagged) on mutation: a shared
         # validity flag lets building ONE index mark the OTHER valid and
         # serve stale results. None == "rebuild before use" — per-index,
-        # unambiguous. A fitted IVF index is the exception: it is rebound
-        # to every new version's rows (see the df setter). The PQ codec is
+        # unambiguous. The IVF index is the exception: it is rebound to
+        # every new version's rows (see the df setter). The PQ codec is
         # NOT an index: its codebooks are a sample-trained lossy codec,
         # still valid for encoding new rows (the reference likewise trains
         # once, vervectordb/__init__.py:493).
@@ -123,7 +122,7 @@ class VectorStore:
         self._df_ckpt_ids: set[int] = set()
         self._ivf_ckpt_ids: set[int] = set()
         self._ivf = None
-        self.df = spark.createDataFrame([], _ROW_SCHEMA)
+        self.df = _row_frame(spark, [], [], [])
         self._ann = None
         self._imi = None
         self._pq = None
@@ -162,26 +161,22 @@ class VectorStore:
     @df.setter
     def df(self, value: DataFrame) -> None:
         # every new frame is a new version: the serving frame is rebuilt
-        # from it on the next read, and a fitted IVF index is bound to its
-        # rows (assigned on first use), so `_ivf.assigned` always
-        # describes the current df
+        # from it on the next read, and the IVF index is bound to its rows
+        # (assigned on first use), so `_ivf.assigned` always describes the
+        # current df
         self._df = value
         self._version += 1
-        if self._ivf is not None and self._ivf.model is not None:
+        if self._ivf is not None:
             self._ivf.rebind(value)
 
     def _serving(self) -> DataFrame:
         """The frame facade reads scan: `df` plus its row self-dot SS_COL
-        (cosine then folds once per row, not twice) and, when an
-        in-memory IVF index exists, the cluster_id its model assigns —
-        once per version, not once per query. Persisted here and filled
-        by the first read that scans it; the frame of an older version or
-        index is unpersisted first. Only reads call this: a write never
-        fills a frame. A loaded IVF layout (no fitted model) is not
-        folded in — its searches keep their partition-pruned scan."""
+        (cosine then folds once per row, not twice) and, when an IVF index
+        exists, the cluster_id it assigns — once per version, not once per
+        query. Persisted here and filled by the first read that scans it;
+        the frame of an older version or index is unpersisted first. Only
+        reads call this: a write never fills a frame."""
         ivf = self._ivf
-        if ivf is not None and ivf.model is None:
-            ivf = None
         if self._frame_for is None or self._frame_for[0] != self._version \
                 or self._frame_for[1] is not ivf:
             if self._frame is not None:
@@ -301,7 +296,7 @@ class VectorStore:
     ) -> None:
         """P2: copy-on-write row replacement. Unlike the reference, no
         index serves the old vector (fixes the stale-HNSW quirk, SURVEY
-        §1.3): a fitted IVF index reassigns the row, the others drop."""
+        §1.3): the IVF index reassigns the row, the others drop."""
         if new_vector is not None:
             self._check_rows([new_vector])
         old = self.get_by_id(vec_id)  # KeyError if absent, like the reference
@@ -411,13 +406,9 @@ class VectorStore:
             F.concat_ws("#", F.col(id_col).cast("string"),
                         F.col("chunk_id").cast("string")),
         )
-        # widen=False: ingest's output file layout would otherwise vary
-        # with the session core count, and the stored vectors feed
-        # IVFIndex.build (MLlib KMeans) downstream — fit inputs stay
-        # partition-stable (partitioning.py's rule; ADVICE r11)
         emb = embed_documents(
             chunks, dim=self.vector_dim, text_col="chunk_text",
-            id_col="_chunk_key", widen=False,
+            id_col="_chunk_key",
         )
         meta = chunks.select(
             F.col("_chunk_key").alias("vec_id"),
@@ -490,21 +481,16 @@ class VectorStore:
 
     # ----------------------------------------------------- derived indexes
     def _invalidate(self) -> None:
-        """After a write. A fitted IVF index stays: the df setter already
+        """After a write. The IVF index stays: the df setter already
         rebound it to the new rows, and its centroids (with the residual
-        codec fitted to them) hold until build_ivf_index() refits. A
-        loaded IVF layout has no model to assign the new rows, so it
-        drops with the other indexes and the next search refits."""
-        if self._ivf is not None and self._ivf.model is None:
-            self._ivf = None
-            self._pq_res = None
+        codec fitted to them) hold until build_ivf_index() refits."""
         self._ann = None
         self._imi = None
         self._res_encoded = None
         self._base_pristine = False  # df no longer == the persisted layout
 
     def build_ivf_index(self, n_clusters: int = 16, seed: int = 42):
-        """Q4: fit KMeans over the current rows — the one way the
+        """Q4: fit k-means over the current rows — the one way the
         centroids change. Writes keep them and only reassign rows (see
         _invalidate); call this again to re-center clusters that drifted
         (operators.ivf.centroid_drift measures by how much)."""
@@ -523,9 +509,8 @@ class VectorStore:
         vervectordb/__init__.py:441), rescore exactly inside them."""
         if self._ivf is None:
             self.build_ivf_index()
-        rows = None if self._ivf.model is None else self._serving()
         out = self._ivf.search(query_vector, top_k=top_k, nprobe=nprobe,
-                               pre_filter=pre_filter, rows=rows)
+                               pre_filter=pre_filter, rows=self._serving())
         return [
             {"vector_id": r["vec_id"], "similarity": r["sim"], "cluster_id": r["cluster_id"]}
             for r in out.collect()
@@ -946,7 +931,7 @@ class VectorStore:
     def restore_version(self, version: int) -> None:
         """Roll the store's vectors back to a prior checkpoint — published
         as a NEW version (append-only log; nothing is destroyed). Like any
-        write: a fitted IVF index reassigns the restored rows, the other
+        write: the IVF index reassigns the restored rows, the other
         indexes drop and rebuild lazily."""
         if getattr(self, "_versions", None) is None:
             raise ValueError("no versioned checkpoint yet")

@@ -79,8 +79,8 @@ def ingest_with_index_refresh(
     per-kind `appends` counts.
 
     Layouts by kind (directory under `store_path`; the fit):
-      ivf    ivf/ (IVFIndex.save): MLlib KMeans with n_clusters; rows go
-             to the fitted model's predict (IVFIndex.assign, as in the
+      ivf    ivf/ (IVFIndex.save): driver k-means with n_clusters; rows
+             go to the nearest centroid by L2 (IVFIndex.assign, as in the
              facade). Always on.
       ann    ann/ (SignLSHIndex.save): ann_tables × ann_bits hyperplanes,
              derived deterministically from (tables, bits, dim).
@@ -88,7 +88,7 @@ def ingest_with_index_refresh(
              layout; codec at pq/. Needs pq_subquantizers.
       bq     bq/codes/; midrange thresholds at bq/thresholds/.
       sq     sq/codes/; per-dim (min, max) at sq/stats/.
-      imi    imi/ (IMIIndex.save): one KMeans per half, k1 × k2 cells
+      imi    imi/ (IMIIndex.save): driver k-means per half, k1 × k2 cells
              from imi=(k1, k2).
       imipq  imipq/codes/ (vec_id, cell1, cell2, pq_code; partitioned by
              cell1); codec at imipq/pq/. Needs imi_pq_subquantizers and
