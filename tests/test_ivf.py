@@ -103,7 +103,7 @@ def test_loaded_index_assigns_rows_to_l2_argmin(ivf, emb, spark, tmp_path):
 
     ivf.save(str(tmp_path / "ivf"))
     loaded = IVFIndex.load(spark, str(tmp_path / "ivf"))
-    assert np.array_equal(np.array(loaded._model.clusterCenters()),
+    assert np.array_equal(np.array(loaded._model(spark).clusterCenters()),
                           loaded.centroids)
     rows = loaded.assign(emb).select("embedding", "cluster_id").collect()
     assert len(rows) == emb.count()

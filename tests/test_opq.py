@@ -201,6 +201,31 @@ def test_bounded_sample_overcap_deterministic_across_partitionings(spark, emb):
     assert np.array_equal(R1, R2)
 
 
+def test_bounded_sample_overcap_probe_is_a_plain_limit(emb, monkeypatch):
+    """The cap probe on an over-cap, many-partition table collects at most
+    cap + 1 rows through a plain limit. A global sort under the limit
+    (TakeOrderedAndProject) would send every partition's top cap + 1
+    rows, embeddings included, to the driver."""
+    collected = []
+    DataFrame = type(emb)
+    collect = DataFrame.collect
+
+    def recording_collect(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        rows = collect(df)
+        collected.append((len(rows), plan))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", recording_collect)
+    X = _bounded_sample(emb.repartition(13), "embedding", 100, 42, "vec_id")
+    monkeypatch.undo()
+    n_probe, probe_plan = collected[0]
+    assert n_probe == 101
+    assert "TakeOrderedAndProject" not in probe_plan
+    assert "Sort" not in probe_plan
+    assert 0 < len(X) <= 100
+
+
 def test_artifact_validation_memoized_per_codes_frame(spark, emb, R):
     """The codes word-width probe runs once per artifact object: after
     the first serving call the frame carries the validated width marker,

@@ -29,7 +29,6 @@ vervectordb/__init__.py:463,481 — not reproduced).
 from __future__ import annotations
 
 from collections.abc import Sequence
-from functools import cached_property
 
 import numpy as np
 
@@ -295,17 +294,17 @@ def centroid_drift(df: DataFrame, centroids_df: DataFrame, dim: int,
             .orderBy("cluster_id"))
 
 
-def _predict_model(centroids: np.ndarray):
+def _predict_model(sc, centroids: np.ndarray):
     """A `pyspark.ml` KMeansModel that predicts over `centroids` (the L2
-    argmin), reading `_features` and writing `cluster_id`. No fit runs:
-    an mllib `KMeansModel(Vector[])` is built from the centroids (each
-    through `Vectors.parse` of its repr, which round-trips every double)
-    and wrapped by ml's `KMeansModel(uid, parentModel)` constructor. That
-    constructor is `private[ml]` in Scala but public in the bytecode py4j
-    calls; tests/test_ivf.py pins that its predict is the L2 argmin."""
+    argmin) in SparkContext `sc`, reading `_features` and writing
+    `cluster_id`. No fit runs: an mllib `KMeansModel(Vector[])` is built
+    from the centroids (each through `Vectors.parse` of its repr, which
+    round-trips every double) and wrapped by ml's
+    `KMeansModel(uid, parentModel)` constructor. That constructor is
+    `private[ml]` in Scala but public in the bytecode py4j calls;
+    tests/test_ivf.py pins that its predict is the L2 argmin."""
     from pyspark.ml.clustering import KMeansModel
 
-    sc = SparkSession.active().sparkContext
     linalg = sc._jvm.org.apache.spark.mllib.linalg
     centers = sc._gateway.new_array(linalg.Vector, len(centroids))
     for i, c in enumerate(centroids):
@@ -330,6 +329,8 @@ class IVFIndex:
         self.emb_col = emb_col
         #: rows bound by rebind() and not yet assigned
         self._rows: DataFrame | None = None
+        #: (SparkContext, predict model over `centroids`), built by _model
+        self._predict = None
 
     @property
     def assigned(self) -> DataFrame:
@@ -371,9 +372,13 @@ class IVFIndex:
         index.rebind(df)
         return index
 
-    @cached_property
-    def _model(self):
-        return _predict_model(self.centroids)
+    def _model(self, spark: SparkSession):
+        """The predict model over `centroids` in `spark`'s JVM: built on
+        first use and again only when the session's context changes."""
+        sc = spark.sparkContext
+        if self._predict is None or self._predict[0] is not sc:
+            self._predict = (sc, _predict_model(sc, self.centroids))
+        return self._predict[1]
 
     def assign(self, df: DataFrame) -> DataFrame:
         """`df` plus `cluster_id` = the nearest centroid by L2, by MLlib
@@ -384,7 +389,8 @@ class IVFIndex:
 
         feats = df.withColumn("_features", array_to_vector(
             F.col(self.emb_col).cast("array<double>")))
-        return self._model.transform(feats).drop("_features").withColumn(
+        model = self._model(df.sparkSession)
+        return model.transform(feats).drop("_features").withColumn(
             "cluster_id", F.col("cluster_id").cast("int"))
 
     def default_nprobe(self) -> int:

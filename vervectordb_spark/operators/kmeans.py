@@ -19,34 +19,34 @@ from pyspark.sql import functions as F
 def _bounded_sample(df: DataFrame, emb_col: str, sample_size: int,
                     seed: int, order_col: str | None) -> np.ndarray:
     """At most `sample_size` non-NULL rows of `emb_col` as a float64
-    matrix: probe the cap, subsample only over-cap corpora, collect once.
-    With order_col, BOTH the row SELECTION (over-cap: a hash-draw on the
-    id — xxhash64(seed, order_col) threshold — which rows survive depends
-    only on row identity, never on partitioning; sample()+limit() would
-    pick a partitioning-dependent subset) and the row ORDER (sorted by
-    order_col, then truncated to sample_size) are deterministic, so a fit
-    on the matrix is exactly reproducible across partitionings/runs, and
-    an under-cap sample is one Spark job: the cap probe is an
-    order_col-ordered limit, which then already holds every row. Without
-    order_col the over-cap subset is seed-stable per partitioning only
-    (documented, cheap path)."""
+    matrix. One probe collects at most sample_size + 1 rows (a limit, so
+    the driver never receives more); under the cap those rows are the
+    sample. Only an over-cap corpus is subsampled, with a second collect.
+
+    With order_col the sample is partition-independent: over the cap the
+    rows are drawn by an xxhash64(seed, order_col) threshold, so which
+    rows survive depends only on row identity (sample()+limit() would
+    pick a partitioning-dependent subset), and the rows are sorted by
+    order_col on the driver (then truncated to sample_size), so a fit on
+    the matrix is reproducible across partitionings and runs. Without
+    order_col the rows keep the frame's order and an over-cap subset is
+    seed-stable per partitioning only (the cheap path)."""
     cols = [emb_col] if order_col is None else [order_col, emb_col]
     sample = df.select(*cols).filter(F.col(emb_col).isNotNull())
-    if order_col is None:
-        if sample.limit(sample_size + 1).count() > sample_size:
-            frac = min(1.0, 1.2 * sample_size / sample.count())
-            sample = sample.sample(fraction=frac, seed=seed).limit(sample_size)
-        rows = sample.collect()
-    else:
-        rows = sample.orderBy(order_col).limit(sample_size + 1).collect()
-        if len(rows) > sample_size:
-            frac = min(1.0, 1.2 * sample_size / sample.count())
+    rows = sample.limit(sample_size + 1).collect()
+    if len(rows) > sample_size:
+        frac = min(1.0, 1.2 * sample_size / sample.count())
+        if order_col is None:
+            rows = sample.sample(fraction=frac, seed=seed).limit(
+                sample_size).collect()
+        else:
             denom = 1_000_000
-            drawn = sample.filter(
+            rows = sample.filter(
                 F.pmod(F.xxhash64(F.lit(seed), F.col(order_col)),
-                       F.lit(denom)) < F.lit(max(1, int(denom * frac))))
-            rows = sorted(drawn.collect(),
-                          key=lambda r: r[order_col])[:sample_size]
+                       F.lit(denom)) < F.lit(max(1, int(denom * frac)))
+            ).collect()
+    if order_col is not None:
+        rows = sorted(rows, key=lambda r: r[order_col])[:sample_size]
     return np.array([list(r[emb_col]) for r in rows], dtype=np.float64)
 
 

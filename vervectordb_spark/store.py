@@ -172,16 +172,20 @@ class VectorStore:
     def _serving(self) -> DataFrame:
         """The frame facade reads scan: `df` plus its row self-dot SS_COL
         (cosine then folds once per row, not twice) and, when an IVF index
-        exists, the cluster_id it assigns — once per version, not once per
-        query. Persisted here and filled by the first read that scans it;
-        the frame of an older version or index is unpersisted first. Only
-        reads call this: a write never fills a frame."""
+        exists, each row's cluster_id — once per version, not once per
+        query. The rows come from `_ivf.assigned`, which always describes
+        the current df: predicted on first use after a build or a write,
+        read from the saved layout while a loaded store is unwritten (no
+        predict runs then). Persisted here and filled by the first read
+        that scans it; the frame of an older version or index is
+        unpersisted first. Only reads call this: a write never fills a
+        frame."""
         ivf = self._ivf
         if self._frame_for is None or self._frame_for[0] != self._version \
                 or self._frame_for[1] is not ivf:
             if self._frame is not None:
                 self._frame.unpersist()
-            base = self.df if ivf is None else ivf.assign(self.df)
+            base = self.df if ivf is None else ivf.assigned
             self._frame = base.withColumn(
                 SS_COL, self_dot_expr("embedding")).persist(
                 StorageLevel.MEMORY_AND_DISK)
