@@ -1,5 +1,7 @@
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -7,6 +9,22 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@contextlib.contextmanager
+def counting_jobs(sc):
+    """Tag the Spark jobs this thread starts inside the block with a fresh
+    job group; on exit the yielded list holds how many ran."""
+    group = f"counted-{uuid.uuid4().hex}"
+    out: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield out
+    finally:
+        sc._jsc.clearJobGroup()
+        # job events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
 
 
 @pytest.fixture(scope="session")

@@ -13,10 +13,61 @@ from tests.conftest import SF_DIR
 @pytest.fixture(scope="module")
 def exp(spark):
     """ONE materialized run of the chain shared by the module (the
-    chain itself is oracle-gated; these tests pin the sink)."""
+    chain itself is oracle-gated; these tests pin the sink). The stages
+    the export pins are released as soon as the checkpoint holds its
+    rows — left cached, the session's CacheManager would substitute them
+    into later tests' plans — and the checkpoint at teardown."""
+    from vervectordb_spark.functions.checkpoint import (
+        eager_checkpoint, release_checkpoint)
     from vervectordb_spark.queries_pretrain import export_frame
 
-    return export_frame(spark, SF_DIR).localCheckpoint(eager=True)
+    frame = export_frame(spark, SF_DIR)
+    out, _ = eager_checkpoint(frame)
+    release_checkpoint(frame)
+    yield out
+    release_checkpoint(out)
+
+
+def test_export_reads_each_stage_once_and_releases(spark, monkeypatch):
+    """pretraining_export_e2e plans each shared stage once: with every
+    cached relation counted once, its plan scans `documents` a handful
+    of times (225 before its multi-consumer stages were persisted).
+    Building it runs no widener probe job, and releasing the collected
+    aggregate frees every persisted RDD and CacheManager entry it made."""
+    from tests.conftest import counting_jobs
+    from vervectordb_spark.functions import partitioning
+    from vervectordb_spark.functions.checkpoint import (
+        persistent_rdd_ids, release_checkpoint)
+    from vervectordb_spark.plans.audit import file_scan_count
+    from vervectordb_spark.queries_pretrain import pretraining_export_e2e
+
+    sc = spark.sparkContext
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    # earlier modules' cached fixtures (a cached `documents` scan) would
+    # be substituted into this plan and hide its scans
+    spark.catalog.clearCache()
+    baseline = persistent_rdd_ids(sc)
+
+    probe_jobs: list[int] = []
+    real_probe = partitioning._plan_partitions
+
+    def probe(df):
+        with counting_jobs(sc) as jobs:
+            got = real_probe(df)
+        probe_jobs.extend(jobs)
+        return got
+
+    monkeypatch.setattr(partitioning, "_plan_partitions", probe)
+    df = pretraining_export_e2e(spark, SF_DIR)
+    assert probe_jobs and sum(probe_jobs) == 0, probe_jobs
+    assert len(df._persisted) == 4
+    assert file_scan_count(df) <= 6
+    try:
+        assert df.collect()
+    finally:
+        release_checkpoint(df)
+    assert persistent_rdd_ids(sc) == baseline
+    assert cache_manager.isEmpty()
 
 
 def test_export_frame_to_training_shards_manifest(spark, tmp_path, exp):

@@ -364,6 +364,25 @@ def test_merge_dim_check(store, spark):
         store.merge(src)
 
 
+def test_dim_checks_run_one_job(store, spark):
+    """ingest's and merge's dimension checks are one bounded probe each:
+    a rejected batch costs one Spark job, not limit(1).count()'s two."""
+    from tests.conftest import counting_jobs
+
+    bad = spark.createDataFrame(
+        [("x", [1.0, 0.0, 0.0, 0.0], None), ("y", [1.0, 2.0], None)],
+        "vec_id string, embedding array<float>, metadata map<string,string>",
+    )
+    with counting_jobs(spark.sparkContext) as jobs, \
+            pytest.raises(DimensionError):
+        store.ingest(bad)
+    assert jobs == [1]
+    with counting_jobs(spark.sparkContext) as jobs, \
+            pytest.raises(DimensionError):
+        store.merge(bad)
+    assert jobs == [1]
+
+
 def test_save_load_restores_ann_index(spark, tmp_path):
     """The MLlib ANN model rides save/load like IVF/PQ: a loaded store
     serves ann_search without rebuilding, with the same results."""

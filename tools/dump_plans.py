@@ -22,6 +22,7 @@ def main() -> int:
     os.makedirs(outdir, exist_ok=True)
 
     import __spark_entry__ as entry
+    from vervectordb_spark.functions.checkpoint import release_checkpoint
     from vervectordb_spark.session import get_spark
 
     spark = get_spark("dump-plans",
@@ -30,8 +31,11 @@ def main() -> int:
     qs = entry.queries()
     for name in names:
         df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        try:
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
+        finally:
+            release_checkpoint(df)  # as check_correctness.py does
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -26,6 +26,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
     import __spark_entry__ as entry
+    from vervectordb_spark.functions.checkpoint import release_checkpoint
     from vervectordb_spark.plans import audit as A
     from vervectordb_spark.session import get_spark
 
@@ -40,7 +41,12 @@ def main() -> int:
     for name, fn in sorted(entry.queries().items()):
         try:
             df = fn(spark, sf_dir)
-            plan = A.physical_plan(df)
+            try:
+                plan = A.physical_plan(df)
+            finally:
+                # frames and blocks a query pins (check_correctness.py
+                # does the same) must not leak into the next query's plan
+                release_checkpoint(df)
         except Exception as e:  # pragma: no cover - report, don't die
             rows.append((name, "-", "-", "-", "-", f"ERROR {type(e).__name__}"))
             continue

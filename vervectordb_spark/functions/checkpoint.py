@@ -17,7 +17,10 @@ This module is the ONE sanctioned way to localCheckpoint:
 
 For frames returned to callers (a trained vocab, an encoded corpus), the
 newly-persisted ids are attached as `df._ckpt_ids`; call
-`release_checkpoint(df)` when done instead of `df.unpersist()`.
+`release_checkpoint(df)` when done instead of `df.unpersist()`. A frame
+built over `DataFrame.persist`ed stages (the pretraining export) lists
+them as `df._persisted`, and the same `release_checkpoint(df)` unpersists
+them; `carry_release` moves both handles onto a frame derived from it.
 bench.py's post-entry state-hygiene assertion is the regression gate.
 """
 
@@ -52,14 +55,17 @@ def eager_checkpoint(df: DataFrame,
     (b) optionally frees a previous round's ids — the iterate-and-replace
     pattern without the per-round block leak.
 
-    eager=False defers materialization to the first job that touches the
-    frame: the plan becomes ONE RDD instance, so every consumer in the
-    final query shares its computation (and its persisted blocks) WITHOUT
-    a synchronous build-time job per table — measured on the r12 n-gram
-    type tables: eager barriers serialized work the old redundant plan
-    overlapped (trigram 1.5 → 3.4 s), lazy keeps the sharing and loses
-    the barriers. The persistence registers at mark time, so the ids are
-    still captured (and released) the same way."""
+    eager=False does NOT defer the whole build under AQE: marking
+    executes the frame's physical plan, and AdaptiveSparkPlanExec runs
+    every shuffle and broadcast stage below the root right then (one
+    job per stage — a one-shuffle frame ran 1 job at mark time, the
+    pretraining export's exact-dedup frame over 1000 documents ran 7).
+    Only the final, shuffle-free stage is left to the first job that
+    reads the frame, which then computes and pins it once for every
+    consumer. The persistence registers at mark time, so the ids are
+    captured (and released) the same way. A frame that must run no job
+    until it is read wants DataFrame.persist (release_checkpoint frees
+    those too)."""
     sc = df.sparkSession.sparkContext
     before = persistent_rdd_ids(sc)
     try:
@@ -76,10 +82,24 @@ def eager_checkpoint(df: DataFrame,
     return out, new_ids
 
 
+def carry_release(dst: DataFrame, src: DataFrame) -> DataFrame:
+    """Hand the frames and blocks `src` pins (_ckpt_ids, _persisted) to
+    `dst`, a frame built from it, so ONE release_checkpoint(dst) after
+    consuming `dst` frees them."""
+    for attr in ("_ckpt_ids", "_persisted"):
+        if hasattr(src, attr):
+            setattr(dst, attr, getattr(src, attr))
+    return dst
+
+
 def release_checkpoint(df: DataFrame) -> None:
-    """Free the checkpoint blocks backing a frame produced by
-    eager_checkpoint (attached as _ckpt_ids). The frame must not be used
-    afterwards. Safe on frames without attached ids (no-op)."""
+    """Free what a frame pins: the localCheckpoint blocks attached as
+    _ckpt_ids (eager_checkpoint) and the persisted frames attached as
+    _persisted (DataFrame.persist — unpersist drops their CacheManager
+    entries and blocks). The frame must not be used afterwards. Safe on
+    frames with neither attached (no-op)."""
     ids = getattr(df, "_ckpt_ids", None)
     if ids:
         release_blocks(df.sparkSession.sparkContext, ids)
+    for held in getattr(df, "_persisted", ()):
+        held.unpersist()

@@ -24,25 +24,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def _plan_partitions(df: DataFrame) -> int:
+def _plan_partitions(df: DataFrame) -> int | None:
     """Partition count of `df`'s physical plan, memoized per (session,
-    input-file-set): df.rdd.getNumPartitions() converts the whole plan to
-    an RDD DAG on the DRIVER — paying that on every operator call is the
-    same py4j-cost class the r11 SQL-string work removed (VERDICT r11
-    item 6). Call sites apply the widener to scan-rooted frames, whose
-    partition count is a function of the scanned files + session confs
-    alone, so the second and later probes of the same file set answer
-    from the cache (one inputFiles() plan walk instead of full physical
-    planning). Non-file-rooted frames (empty inputFiles) skip the cache."""
-    spark = df.sparkSession
-    files: tuple[str, ...] = ()
+    input-file-set), or None when the plan has no file leaf.
+
+    df.rdd.getNumPartitions() converts the whole plan to an RDD DAG on
+    the DRIVER — paying that on every operator call is the same py4j-cost
+    class the r11 SQL-string work removed (VERDICT r11 item 6). Call sites
+    apply the widener to scan-rooted frames, whose partition count is a
+    function of the scanned files + session confs alone, so the second
+    and later probes of the same file set answer from the cache (one
+    inputFiles() plan walk instead of full physical planning).
+
+    A frame with no file leaf (a persisted or local frame — the cached
+    relation hides its files) is never probed: under AQE, df.rdd executes
+    every shuffle stage of the plan at build time (probing the
+    pretraining export's persisted exact-dedup frame in
+    minhash_signatures ran 8 jobs, 9.9 s, on a 1000-document corpus).
+    Its partitioning is whatever its own shuffles produced, not a
+    one-file scan's."""
     try:
         files = tuple(sorted(df.inputFiles()))
     except Exception:  # noqa: BLE001 — plan without a file index
-        pass
+        return None
     if not files:
-        return df.rdd.getNumPartitions()
-    cache: dict = spark.__dict__.setdefault("_vv_scan_partitions", {})
+        return None
+    cache: dict = df.sparkSession.__dict__.setdefault("_vv_scan_partitions", {})
     got = cache.get(files)
     if got is None:
         got = cache[files] = df.rdd.getNumPartitions()

@@ -672,8 +672,10 @@ def _pin_types(df: DataFrame, ids: set[int], checkpoint: bool) -> DataFrame:
         return df
     from vervectordb_spark.functions.checkpoint import eager_checkpoint
 
-    # lazy: materializes inside the first job that needs it — no
-    # build-time barrier, and all consumers share the one RDD instance
+    # eager=False: all consumers share the one RDD instance. Under AQE
+    # marking still runs the table's shuffle stages (its gram-count
+    # aggregate) as build-time jobs; only the final map-side stage waits
+    # for the first job that reads the table
     out, new = eager_checkpoint(df, eager=False)
     ids |= new
     return out
@@ -955,7 +957,8 @@ def kn5_surprisal(df: DataFrame, text_col: str = "text",
                 .agg(F.count("*").cast("bigint").alias("cnt")))
 
     ckpt_ids: set[int] = set()
-    # Each type table is pinned once (lazy localCheckpoint): its 2-4
+    # Each type table is pinned once (localCheckpoint, eager=False —
+    # which still runs its aggregate's shuffle stage at mark time): its 2-4
     # consumers prune different columns, so no Exchange canonicalizes
     # equal and Catalyst/AQE re-ran the whole corpus subtree per
     # reference (measured: ~11 corpus passes in the r11 plan). The four

@@ -206,6 +206,31 @@ def executed_scan_metrics(df: DataFrame,
     raise AssertionError("no parquet scan node in executed plan")
 
 
+def file_scan_count(df: DataFrame) -> int:
+    """File-scan leaves of `df`'s physical plan, each cached relation's
+    plan counted once however many times the query reads it — the scans
+    one run of the query actually pays for. Plans only, no job:
+    AdaptiveSparkPlanExec is walked through its inputPlan()."""
+    jvm = df.sparkSession._jvm
+    seen: set[int] = set()
+
+    def walk(node) -> int:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.inputPlan())
+        n = int(name == "FileSourceScanExec")
+        if name == "InMemoryTableScanExec":
+            rel = node.relation()
+            key = jvm.java.lang.System.identityHashCode(rel.cacheBuilder())
+            if key not in seen:
+                seen.add(key)
+                n += walk(rel.cachedPlan())
+        ch = node.children()
+        return n + sum(walk(ch.apply(i)) for i in range(ch.size()))
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 def codegen_stage_count(plan: str) -> int:
     """How many whole-stage-codegen spans the plan compiled (wider is
     better — Python UDFs and some exprs break spans)."""

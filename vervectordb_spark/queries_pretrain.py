@@ -31,12 +31,24 @@ fragments the per-stage oracles gate in isolation.
 Eval split = doc_id % 97 == 0 (the decontaminate_ngrams convention);
 train corpus = the complement.
 
-Plan shape / 100 TB posture: the chain is lazy end-to-end. Corpus-sized
-shuffles: span gram-key agg + join, the doc-key span window, the exact
--dedup hash window, MinHash band agg, the n-gram join, the mix count
-agg, the BPE word-count job, the token-count agg, the packing window —
-each individually audited by its per-stage query; composition adds
-stages, not scans (the pipeline_spancut_e2e finding). Broadcasts are
+Plan shape / 100 TB posture: four stage frames feed two or more
+consumers each, and Spark reuses identical exchanges, not arbitrary
+subplans — left lazy, every consumer re-planned and re-ran its whole
+upstream chain (a 1000-document export planned 225 parquet scans of
+`documents` and ran 56 jobs). export_frame persists exactly those four
+(StorageLevel.MEMORY_AND_DISK): `dd` (exact-dedup output: MinHash pairs
++ survivor anti-join), `surv` (corpus n-grams + n-gram anti-join),
+`clean1` (semantic pairs + semantic anti-join) and `clean` (read three
+times by the temperature mix). persist runs no job at mark time; each frame is computed once,
+inside the first job that reads it, and spills to local disk past
+executor memory. Everything else stays lazy. Corpus-sized shuffles:
+span gram-key agg + join, the doc-key span window, the exact-dedup hash
+window, MinHash band agg, the n-gram join, the mix count agg, the BPE
+word-count job, the token-count agg, the packing window — each audited
+by its per-stage query. The persisted frames (and the trained BPE
+vocabulary's checkpoint blocks) ride on the returned frame and on the
+pretraining_export_e2e aggregate; release_checkpoint(frame) after the
+collect unpersists them all (functions/checkpoint.py). Broadcasts are
 bounded sides only: dup-span lists, rate tables, the eval n-gram set,
 the eval embedding matrix (GEMM prescreen, 65k fail-fast), the gated
 BPE vocabulary. The trained filter + semantic decontam share ONE
@@ -273,7 +285,26 @@ def export_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, lang, clean_text, n_tokens_removed, n_tok, bin_id) — also
     the frame tests hand to sources.tables.write_training_shards for the
     real shard sink (pinned n_shards = 8 matches the in-plan membership
-    expr)."""
+    expr).
+
+    It pins four persisted stage frames and the trained BPE vocabulary
+    (module docstring): release_checkpoint(frame) after consuming it."""
+    held: list[DataFrame] = []
+    try:
+        out = _export_chain(spark, sf_dir, held)
+    except BaseException:
+        for df in held:
+            df.unpersist()
+        raise
+    out._persisted = held  # type: ignore[attr-defined]
+    return out
+
+
+def _export_chain(spark: SparkSession, sf_dir: str,
+                  held: list[DataFrame]) -> DataFrame:
+    from pyspark import StorageLevel
+
+    from vervectordb_spark.functions.checkpoint import carry_release
     from vervectordb_spark.operators import text as TX
     from vervectordb_spark.operators.bpe import (
         maybe_broadcast_vocab, train_bpe)
@@ -285,6 +316,13 @@ def export_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vervectordb_spark.operators.quality import classifier_logit_expr
     from vervectordb_spark.operators.sampling import mix_by_temperature
     from vervectordb_spark.operators.spans import remove_duplicate_spans
+
+    def shared(df: DataFrame) -> DataFrame:
+        # a stage frame with two or more consumers: computed once, at its
+        # first read (persist runs no job at mark time), and kept in
+        # `held` for the caller to release
+        held.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return df
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 97 != 0).select(
@@ -305,13 +343,13 @@ def export_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained = feats.filter(
         classifier_logit_expr(F.col("embedding"), _QPW, _QPB) >= 0.0)
     # 4) exact dedup (lowest-id survivor)
-    dd = drop_exact_dups(trained, text_col="ctext")
+    dd = shared(drop_exact_dups(trained, text_col="ctext"))
     # 5) MinHash-LSH near dedup: larger id of each verified pair loses
     pairs = minhash_near_dup_pairs(
         dd, text_col="ctext", num_hashes=_NH, bands=_NB, shingle_n=3,
         threshold=_NEAR_TAU)
     losers = pairs.select(F.col("dst_id").alias("doc_id")).distinct()
-    surv = dd.join(losers, on="doc_id", how="left_anti")
+    surv = shared(dd.join(losers, on="doc_id", how="left_anti"))
     # 6) n-gram benchmark decontamination
     bench_ngrams = (shingle_table(evals_docs, shingle_n=3)
                     .select(F.explode("shingles").alias("ng")).distinct())
@@ -319,15 +357,15 @@ def export_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode("shingles").alias("ng"))
     ngcont = (corpus_ngrams.join(F.broadcast(bench_ngrams), on="ng")
               .select("doc_id").distinct())
-    clean1 = surv.join(ngcont, on="doc_id", how="left_anti")
+    clean1 = shared(surv.join(ngcont, on="doc_id", how="left_anti"))
     # 7) semantic decontamination — reuses the stage-3 embedding column
     ev_emb = embed_documents(evals_docs, dim=_DIM)
     sem = embedding_contamination_pairs(
         clean1.select(F.col("doc_id").alias("vec_id"), "embedding"),
         ev_emb, _SEM_TAU)
     semcont = sem.select(F.col("train_id").alias("doc_id")).distinct()
-    clean = clean1.join(semcont, on="doc_id", how="left_anti") \
-        .drop("embedding")
+    clean = shared(clean1.join(semcont, on="doc_id", how="left_anti")
+                   .drop("embedding"))
     # 8) temperature mix (alpha = 1/2, in-plan shares)
     kept = mix_by_temperature(clean, "lang", id_col="doc_id",
                               total=_MIX_TOTAL, alpha=0.5, seed=42)
@@ -346,27 +384,33 @@ def export_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp = (kw.join(maybe_broadcast_vocab(seg), on="word")
            .groupBy("doc_id", "lang", "n_tokens_removed")
            .agg(F.sum("_wtoks").cast("bigint").alias("n_tok")))
-    # 10) tokenizer-aware packing per lang stream
-    return pack_by_token_offset(exp, token_col="n_tok", budget=_PACK,
-                                order_col="doc_id", stream_col="lang")
+    # 10) tokenizer-aware packing per lang stream; the vocabulary's
+    #     checkpoint blocks travel with the frame
+    return carry_release(
+        pack_by_token_offset(exp, token_col="n_tok", budget=_PACK,
+                             order_col="doc_id", stream_col="lang"), vocab)
 
 
 @query("pretraining_export_e2e", oracle=_ORACLE)
 def pretraining_export_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full pretraining-export chain as ONE lazy plan (module
-    docstring) — per-lang export accounting: surviving docs, packed
-    context windows, shard spread, BPE tokens exported, span tokens cut.
-    Stage 11's shard membership is the write_training_shards expr
-    (sources/tables.py) evaluated in-plan at the pinned modulus."""
+    """The full pretraining-export chain (module docstring) — per-lang
+    export accounting: surviving docs, packed context windows, shard
+    spread, BPE tokens exported, span tokens cut. Stage 11's shard
+    membership is the write_training_shards expr (sources/tables.py)
+    evaluated in-plan at the pinned modulus. The aggregate carries the
+    export frame's pinned stages: release_checkpoint(result) after
+    collecting it."""
+    from vervectordb_spark.functions.checkpoint import carry_release
     from vervectordb_spark.functions.hashing import seeded_md5_long
 
-    packed = export_frame(spark, sf_dir).withColumn(
+    frame = export_frame(spark, sf_dir)
+    packed = frame.withColumn(
         "shard",
         F.pmod(seeded_md5_long(F.col("doc_id").cast("string"), 42),
                F.lit(_N_SHARDS)))
-    return packed.groupBy("lang").agg(
+    return carry_release(packed.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.count_distinct("bin_id").cast("long").alias("n_bins"),
         F.count_distinct("shard").cast("long").alias("n_shards"),
         F.sum("n_tok").cast("long").alias("sum_tokens"),
-        F.sum("n_tokens_removed").cast("long").alias("tokens_cut"))
+        F.sum("n_tokens_removed").cast("long").alias("tokens_cut")), frame)

@@ -94,6 +94,14 @@ def _row_frame(spark: SparkSession, ids, vectors, metas) -> DataFrame:
     })
 
 
+def _has_row(df: DataFrame) -> bool:
+    """Whether `df` has any row: a bounded limit(1).collect(), one job
+    over a shuffle-free frame of up to spark.sql.limit.initialNumPartitions
+    partitions — limit(1).count() plans a single-partition exchange and
+    runs two under AQE."""
+    return bool(df.limit(1).collect())
+
+
 class DimensionError(ValueError):
     """Analogue of the reference's dim-check ValueError
     (vervectordb/__init__.py:243-245)."""
@@ -224,9 +232,8 @@ class VectorStore:
 
     def ingest(self, df: DataFrame, emb_col: str = "embedding") -> None:
         """Bulk ingest an existing DataFrame (the real 100 TB entry point).
-        Dim constraint enforced as a plan-level filter + fail-fast count."""
-        bad = df.filter(F.size(F.col(emb_col)) != self.vector_dim).limit(1).count()
-        if bad:
+        Dim constraint enforced as a plan-level filter + fail-fast probe."""
+        if _has_row(df.filter(F.size(F.col(emb_col)) != self.vector_dim)):
             raise DimensionError(f"ingest contains rows with dim != {self.vector_dim}")
         cols = [F.col(c) for c in ("vec_id", "embedding", "metadata") if c in df.columns]
         base = df.select(*cols)
@@ -326,10 +333,7 @@ class VectorStore:
         constraint enforced as a plan-level fail-fast, like ingest()."""
         from vervectordb_spark.operators.merge import merge_upsert
 
-        bad = source.filter(
-            F.size(F.col("embedding")) != self.vector_dim
-        ).limit(1).count()
-        if bad:
+        if _has_row(source.filter(F.size(F.col("embedding")) != self.vector_dim)):
             raise DimensionError(f"merge contains rows with dim != {self.vector_dim}")
         src = source.select(
             F.col("vec_id").cast("string"),
