@@ -35,20 +35,41 @@ def spark():
     yield s
 
 
+def _recording_builds(monkeypatch, cls) -> list:
+    """Patch `cls.build` to record the arguments of every call."""
+    calls = []
+    real = cls.build.__func__
+
+    def counting(c, *args, **kwargs):
+        calls.append(args)
+        return real(c, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "build", classmethod(counting))
+    return calls
+
+
 @pytest.fixture()
 def ivf_fits(monkeypatch):
     """Records every KMeans fit (IVFIndex.build call) made by the test."""
     from vervectordb_spark.operators.ivf import IVFIndex
 
-    calls = []
-    real = IVFIndex.build.__func__
+    return _recording_builds(monkeypatch, IVFIndex)
 
-    def counting(cls, *args, **kwargs):
-        calls.append(args)
-        return real(cls, *args, **kwargs)
 
-    monkeypatch.setattr(IVFIndex, "build", classmethod(counting))
-    return calls
+@pytest.fixture()
+def imi_fits(monkeypatch):
+    """Records every IMI fit (IMIIndex.build call) made by the test."""
+    from vervectordb_spark.operators.imi import IMIIndex
+
+    return _recording_builds(monkeypatch, IMIIndex)
+
+
+@pytest.fixture()
+def ann_fits(monkeypatch):
+    """Records every BRP-LSH fit (LSHAnnIndex.build call) made by the test."""
+    from vervectordb_spark.operators.ann import LSHAnnIndex
+
+    return _recording_builds(monkeypatch, LSHAnnIndex)
 
 
 @pytest.fixture(scope="session")

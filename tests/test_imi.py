@@ -338,6 +338,34 @@ def test_calibration_sample_deterministic_across_partitionings(spark, skew_corpu
     assert np.array_equal(Fa[0], Fb[0]) and np.array_equal(Fa[1], Fb[1])
 
 
+def test_calibration_draw_collects_only_the_sample_vectors(skew_corpus,
+                                                           monkeypatch):
+    """Only the (hash, id) keys go through the global-sort prefix: the
+    collect that carries embeddings returns exactly sample_size rows and
+    has no TakeOrderedAndProject, which would send every partition's top
+    sample_size rows, embeddings included, to the driver."""
+    idx = IMIIndex.build(skew_corpus, k1=8, k2=8, dim=16, seed=42)
+    spread = IMIIndex(idx.assigned.repartition(13), idx.cent1, idx.cent2, 16)
+    collected = []
+    DataFrame = type(skew_corpus)
+    collect = DataFrame.collect
+
+    def recording_collect(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        rows = collect(df)
+        collected.append((df.columns, len(rows), plan))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", recording_collect)
+    spread.calibrate_probe(sample_size=100)
+    monkeypatch.undo()
+    vectors = [(n, plan) for cols, n, plan in collected if "embedding" in cols]
+    assert len(vectors) == 1
+    n, plan = vectors[0]
+    assert n == 100
+    assert "TakeOrderedAndProject" not in plan
+
+
 def test_calibration_seed_reshuffles_sample(spark, skew_corpus):
     """The seed parameter is live (ADVICE r7): a sub-corpus sample drawn
     with a different seed picks a different row subset, so the CDFs can

@@ -17,16 +17,17 @@ def nearest_centroid(vec, centroids) -> int:
 
 def assert_index_tracks_rows(store, centroids, probe_ids=()):
     """The kept IVF index describes the store's CURRENT rows: the
-    centroids are the ones fitted before the writes, `assigned` holds
-    exactly the live rows with their current vectors, each in the nearest
-    centroid's cluster for that vector, and an all-cluster ivf_search
-    finds every row in `probe_ids` by its own vector at similarity 1."""
+    centroids are the ones fitted before the writes, the store's IVF rows
+    hold exactly the live rows with their current vectors, each in the
+    nearest centroid's cluster for that vector, and an all-cluster
+    ivf_search finds every row in `probe_ids` by its own vector at
+    similarity 1."""
     ivf = store._ivf
     assert ivf is not None
     assert np.array_equal(ivf.centroids, centroids)
     live = {r["vec_id"]: list(r["embedding"])
             for r in store.df.select("vec_id", "embedding").collect()}
-    rows = ivf.assigned.select("vec_id", "embedding", "cluster_id").collect()
+    rows = store._ivf_rows().select("vec_id", "embedding", "cluster_id").collect()
     assert len(rows) == len(live)
     assert {r["vec_id"]: list(r["embedding"]) for r in rows} == live
     for r in rows:
@@ -35,6 +36,50 @@ def assert_index_tracks_rows(store, centroids, probe_ids=()):
         hit = store.ivf_search(live[vid], top_k=1, nprobe=ivf.n_clusters)[0]
         assert hit["vector_id"] == vid
         assert abs(hit["similarity"] - 1.0) < 1e-9
+
+
+def nearest_cells(vec, cent1, cent2) -> tuple[int, int]:
+    """IMI assignment: per half, the argmax-cosine half-centroid (ties to
+    the lower cell id)."""
+    v = np.asarray(vec, dtype=np.float32).astype(np.float64)
+    mid = len(v) // 2
+    out = []
+    for h, c in ((v[:mid], cent1), (v[mid:], cent2)):
+        cs = (c @ h) / (np.linalg.norm(c, axis=1) * np.linalg.norm(h))
+        out.append(int(np.argmax(cs)))
+    return out[0], out[1]
+
+
+def assert_imi_tracks_rows(store, cent1, cent2, probe_ids=()):
+    """The kept IMI index describes the store's CURRENT rows: a
+    whole-grid imi_search finds every row in `probe_ids` by its own
+    vector at similarity 1, the half-centroids are the ones fitted before
+    the writes, and the store's IMI rows hold exactly the live rows, each
+    in the cells `IMIIndex.assign` gives its current vector."""
+    imi = store._imi
+    live = {r["vec_id"]: list(r["embedding"])
+            for r in store.df.select("vec_id", "embedding").collect()}
+    for vid in probe_ids:
+        hit = store.imi_search(live[vid], top_k=1, a=len(cent1),
+                               b=len(cent2))[0]
+        assert hit["vector_id"] == vid
+        assert abs(hit["similarity"] - 1.0) < 1e-9
+    assert np.array_equal(imi.cent1, cent1)
+    assert np.array_equal(imi.cent2, cent2)
+    rows = store._imi_rows().select(
+        "vec_id", "embedding", "cell1", "cell2").collect()
+    assert len(rows) == len(live)
+    assert {r["vec_id"]: list(r["embedding"]) for r in rows} == live
+    for r in rows:
+        assert (r["cell1"], r["cell2"]) == nearest_cells(
+            r["embedding"], cent1, cent2)
+
+
+def _random_store(spark, db_path=None, n=60, dim=8, seed=31):
+    rng = np.random.default_rng(seed)
+    st = VectorStore(spark, vector_dim=dim, db_path=db_path)
+    ids = st.batch_insert(rng.normal(size=(n, dim)).tolist())
+    return st, ids, rng
 
 
 @pytest.fixture()
@@ -586,22 +631,29 @@ def test_save_refuses_versioned_path(spark, tmp_path):
 
 def test_build_ivf_clears_stale_residual_codec(spark):
     """A rebuilt IVF must not be combined with a residual codec fitted
-    against the previous centroids."""
+    against the previous centroids: the refit drops the codec, and the
+    residual codes a search reads next belong to the codec fitted after
+    it, not to the dropped one."""
     store = _small_store(spark)
+    q = [1.0, 0.0, 0.0, 0.0]
     store.train_residual_pq(n_subquantizers=2, n_bits=2, sample_size=4)
-    assert store._pq_res is not None
+    store.ivfpq_residual_search(q, top_k=1, nprobe=2)
+    old = store._pq_res
+    assert old is not None and store._frames["residual"][1] is old
     store.build_ivf_index(n_clusters=2)
-    assert store._pq_res is None and store._res_encoded is None
+    assert store._pq_res is None
+    store.train_residual_pq(n_subquantizers=2, n_bits=2, sample_size=4)
+    hit = store.ivfpq_residual_search(q, top_k=1, nprobe=2)
+    assert store._pq_res is not old
+    assert store._frames["residual"][1] is store._pq_res
+    assert hit[0]["similarity"] == pytest.approx(1.0)
 
 
 @pytest.mark.deep
-def test_store_imi_facade_and_persistence(spark, tmp_path):
-    """IMI via the store: build/search facade, mutation invalidation,
-    and save/load of the cell layout + centroids."""
-    import numpy as np
-
-    from vervectordb_spark.store import VectorStore
-
+def test_store_imi_facade_and_persistence(spark, tmp_path, imi_fits):
+    """IMI via the store: build/search facade, a write that keeps the fit
+    and reassigns the rows, and save/load of the cell layout +
+    centroids."""
     rng = np.random.default_rng(31)
     st = VectorStore(spark, vector_dim=8)
     ids = st.batch_insert(rng.normal(size=(80, 8)).tolist())
@@ -609,9 +661,11 @@ def test_store_imi_facade_and_persistence(spark, tmp_path):
     hits = st.imi_search(qv, top_k=3, a=2, b=2)
     assert hits[0]["vector_id"] == ids[7]
     assert abs(hits[0]["similarity"] - 1.0) < 1e-9
-    assert st._imi is not None
-    st.insert(rng.normal(size=8).tolist())
-    assert st._imi is None  # mutation invalidates
+    kept = st._imi
+    new = st.insert(rng.normal(size=8).tolist())
+    assert st._imi is kept  # a write keeps the fit
+    assert_imi_tracks_rows(st, kept.cent1, kept.cent2, [new])
+    assert len(imi_fits) == 1
     path = str(tmp_path / "imistore")
     st.build_imi_index(k1=4, k2=4)
     st.save(path)
@@ -619,3 +673,108 @@ def test_store_imi_facade_and_persistence(spark, tmp_path):
     assert loaded._imi is not None
     again = loaded.imi_search(qv, top_k=3, a=2, b=2)
     assert again[0]["vector_id"] == ids[7]
+
+
+def test_imi_keeps_its_fit_across_checkpoints_and_writes(spark, tmp_path,
+                                                         imi_fits):
+    """An IMI index built over checkpointed rows keeps serving after the
+    next checkpoint rewrites those files, and writes keep its
+    half-centroids and reassign the rows — one fit for the sequence."""
+    st, ids, rng = _random_store(spark, db_path=str(tmp_path / "db"))
+    st.checkpoint()
+    st.build_imi_index(k1=4, k2=4)
+    cents = (st._imi.cent1.copy(), st._imi.cent2.copy())
+    st.checkpoint()
+    assert_imi_tracks_rows(st, *cents, [ids[7]])
+    new = st.insert(rng.normal(size=8).tolist())
+    st.update(ids[3], rng.normal(size=8).tolist())
+    st.delete(ids[5])
+    assert_imi_tracks_rows(st, *cents, [new, ids[3]])
+    assert ids[5] not in {h["vector_id"] for h in st.imi_search(
+        st.get_by_id(ids[6])["vector"], top_k=60, a=4, b=4)}
+    assert len(imi_fits) == 1
+
+
+def test_loaded_imi_serves_after_same_path_save(spark, tmp_path, imi_fits):
+    """A loaded store's IMI index reads the saved cell layout; a save to
+    the same path retires those files, and the index keeps serving the
+    store's rows from the new version."""
+    path = str(tmp_path / "db")
+    st, ids, _ = _random_store(spark, db_path=path)
+    st.build_imi_index(k1=4, k2=4)
+    st.save()
+    loaded = VectorStore.load(spark, path)
+    cents = (loaded._imi.cent1, loaded._imi.cent2)
+    q = loaded.get_by_id(ids[7])["vector"]
+    assert loaded.imi_search(q, top_k=1, a=4, b=4)[0]["vector_id"] == ids[7]
+    loaded.save()
+    assert loaded.imi_search(q, top_k=1, a=4, b=4)[0]["vector_id"] == ids[7]
+    assert_imi_tracks_rows(loaded, *cents, [ids[8]])
+    assert len(imi_fits) == 1
+
+
+@pytest.mark.parametrize("read", ["ann", "residual"])
+def test_row_derived_frames_do_not_accumulate(spark, read):
+    """Write/read cycles hold the same number of persisted RDDs: each
+    version's ANN featurized rows or residual codes replace (unpersist)
+    the previous version's."""
+    from vervectordb_spark.functions.checkpoint import persistent_rdd_ids
+
+    st, ids, rng = _random_store(spark)
+    sc = spark.sparkContext
+    if read == "ann":
+        search = st.ann_search
+    else:
+        st.build_ivf_index(n_clusters=4)
+        st.train_residual_pq(n_subquantizers=2, n_bits=2, sample_size=60)
+
+        def search(q, top_k):
+            return st.ivfpq_residual_search(q, top_k=top_k, nprobe=4)
+    baseline = persistent_rdd_ids(sc)
+    held = []
+    for _ in range(4):
+        st.insert(rng.normal(size=8).tolist())
+        assert search(rng.normal(size=8).tolist(), top_k=3)
+        held.append(len(persistent_rdd_ids(sc) - baseline))
+    assert held == [held[0]] * 4, held
+
+
+def test_ann_after_writes_matches_a_fresh_build(spark, ann_fits):
+    """Writes keep the BRP-LSH model and featurize the new rows under
+    it: ann_search then returns the same ids and similarities as a fresh
+    build over the same rows."""
+    st, ids, rng = _random_store(spark)
+    st.build_ann_index(num_hash_tables=3, seed=7)
+    q = rng.normal(size=8).tolist()
+    st.ann_search(q, top_k=5)
+    kept = st._ann
+    new = st.insert(q)
+    st.update(ids[0], rng.normal(size=8).tolist())
+    st.delete(ids[1])
+    got = st.ann_search(q, top_k=5)
+    assert st._ann is kept and len(ann_fits) == 1
+    assert got[0]["vector_id"] == new
+    assert ids[1] not in {r["vector_id"] for r in got}
+    st.build_ann_index(num_hash_tables=3, seed=7)
+    fresh = st.ann_search(q, top_k=5)
+    assert [(r["vector_id"], r["similarity"]) for r in got] == \
+        [(r["vector_id"], r["similarity"]) for r in fresh]
+
+
+def test_ingest_uuid_pins_released_by_checkpoint(spark, tmp_path):
+    """ingest without vec_id pins each batch so its uuid ids stay put;
+    the next checkpoint() releases the pins once the rows are on disk,
+    and the ids survive it."""
+    from vervectordb_spark.functions.checkpoint import persistent_rdd_ids
+
+    sc = spark.sparkContext
+    st = VectorStore(spark, vector_dim=4, db_path=str(tmp_path / "db"))
+    baseline = persistent_rdd_ids(sc)
+    for i in range(3):
+        st.ingest(spark.createDataFrame([([float(i), 1.0, 0.0, 0.0],)],
+                                        "embedding array<float>"))
+    assert len(persistent_rdd_ids(sc) - baseline) == 3
+    ids = sorted(r["vec_id"] for r in st.df.collect())
+    st.checkpoint()
+    assert persistent_rdd_ids(sc) - baseline == set()
+    assert sorted(r["vec_id"] for r in st.df.collect()) == ids

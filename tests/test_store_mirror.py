@@ -1,20 +1,25 @@
 """VectorStore under random op sequences, checked against a NumPy mirror.
 
 Each step runs one facade call (insert, update, delete, checkpoint,
-brute/filtered/IVF search, get_by_id) on the store and the same write on
-perfbench's Mirror of the live rows, then asserts:
+brute/filtered/IVF/IMI/ANN search, get_by_id) on the store and the same
+write on perfbench's Mirror of the live rows; at two fixed steps the
+store takes a versioned checkpoint and later restores it, and the mirror
+rolls back with it. After every step it asserts:
 
   * no deleted row and no stale vector is served (every returned row is
     live and carries the similarity of its CURRENT vector; get_by_id
     returns the current vector, or KeyError once deleted);
   * exact top-k (brute force, filtered) equals NumPy's;
   * every IVF hit carries the cluster MLlib's predict rule gives its
-    CURRENT vector (Euclidean argmin over the index's centroids), and the
-    whole sequence fits KMeans once: writes reassign rows, they never
-    refit;
+    CURRENT vector (Euclidean argmin over the index's centroids), every
+    IMI hit the cells of its current vector, and the whole sequence fits
+    each index once: writes reassign rows, they never refit;
   * the persisted-RDD count does not grow with the number of store
-    versions — the serving frame of an old version is released.
+    versions — at most one frame per row-derived structure in use (the
+    serving frame, the IMI cells, the ANN featurized rows).
 """
+
+import copy
 
 import numpy as np
 import pytest
@@ -23,15 +28,24 @@ from pyspark.sql import functions as F
 from perfbench.mirror import Mirror
 from vervectordb_spark.functions.checkpoint import persistent_rdd_ids
 from vervectordb_spark.store import VectorStore
+from tests.test_store import nearest_cells
 
 DIM = 8
 N_BASE = 120
 LABELS = 3
 TOP_K = 5
 OPS = ("insert", "update", "delete", "checkpoint", "brute", "filtered",
-       "ivf", "get")
+       "ivf", "imi", "ann", "get")
 #: draw weights: reads dominate, like serving
-WEIGHTS = np.array([3, 3, 3, 1, 3, 3, 3, 3], dtype=float)
+WEIGHTS = np.array([3, 3, 3, 1, 3, 3, 3, 2, 2, 3], dtype=float)
+#: the steps that take a versioned checkpoint and restore it
+SNAPSHOT, RESTORE = 8, 20
+#: steps whose read kind is fixed, so every index serves across writes
+#: and across the restore whatever the draw
+FORCED = {4: "imi", 6: "ann", 22: "imi", 24: "ann"}
+#: the row-derived frame each read kind fills
+FRAME_OF = {"brute": "serving", "filtered": "serving", "ivf": "serving",
+            "imi": "imi", "ann": "ann"}
 
 
 def _vec(rng):
@@ -39,7 +53,8 @@ def _vec(rng):
 
 
 @pytest.mark.parametrize("seed", [1, 2])
-def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits):
+def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
+                                            imi_fits, ann_fits):
     rng = np.random.default_rng(seed)
     sc = spark.sparkContext
     x = rng.standard_normal((N_BASE, DIM)).astype(np.float32)
@@ -50,6 +65,8 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits):
     mirror = Mirror(ids, x, labels)
     baseline = persistent_rdd_ids(sc)
     versions = set()
+    in_use = set()
+    snapshot = None
 
     def live_id():
         return mirror.ids[int(rng.choice(np.nonzero(mirror.alive)[0]))]
@@ -59,7 +76,15 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits):
 
     for step in range(30):
         op = OPS[rng.choice(len(OPS), p=WEIGHTS / WEIGHTS.sum())]
+        op = FORCED.get(step, op)
         where = f"seed {seed} step {step} ({op})"
+        if step == SNAPSHOT:
+            store.checkpoint(versioned=True)
+            snapshot = (store.version_history()[0]["version"],
+                        copy.deepcopy(mirror))
+        elif step == RESTORE:
+            store.restore_version(snapshot[0])
+            mirror = copy.deepcopy(snapshot[1])
         if op == "insert":
             n = int(rng.integers(1, 4))
             vecs = [_vec(rng) for _ in range(n)]
@@ -92,16 +117,30 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits):
                     q, TOP_K, metadata_filter=F.col("metadata")["label"] == str(lab))
                 assert mirror.check_topk(*ids_sims(out), q, TOP_K, label=lab), where
             else:
-                out = store.ivf_search(q, TOP_K, nprobe=4)
+                if op == "ivf":
+                    out = store.ivf_search(q, TOP_K, nprobe=4)
+                elif op == "imi":
+                    if store._imi is None:
+                        store.build_imi_index(k1=4, k2=4)
+                    out = store.imi_search(q, TOP_K, a=2, b=2)
+                else:
+                    out = store.ann_search(q, TOP_K)
                 ok, _ = mirror.check_approx(*ids_sims(out), q, TOP_K)
                 assert ok and out, where
-                cents = store._ivf.centroids
                 for r in out:
                     x = mirror.x[mirror.pos[r["vector_id"]]].astype(np.float64)
-                    nearest = int(np.argmin(((cents - x) ** 2).sum(axis=1)))
-                    assert r["cluster_id"] == nearest, where
+                    if op == "ivf":
+                        cents = store._ivf.centroids
+                        nearest = int(np.argmin(((cents - x) ** 2).sum(axis=1)))
+                        assert r["cluster_id"] == nearest, where
+                    elif op == "imi":
+                        assert r["cell"] == nearest_cells(
+                            x, store._imi.cent1, store._imi.cent2), where
             versions.add(store._version)
-        # at most ONE serving frame is held, whatever the version count
-        assert len(persistent_rdd_ids(sc) - baseline) <= 1, where
+            in_use.add(FRAME_OF[op])
+        # at most ONE frame per row-derived structure in use, whatever
+        # the version count
+        assert len(persistent_rdd_ids(sc) - baseline) <= len(in_use), where
     assert len(versions) >= 3  # the bound was exercised across versions
-    assert len(ivf_fits) == 1  # the first ivf_search's fit, kept across writes
+    # each index was fitted by its first read alone, kept across writes
+    assert len(ivf_fits) == 1 and len(imi_fits) == 1 and len(ann_fits) == 1

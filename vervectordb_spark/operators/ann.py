@@ -572,32 +572,44 @@ class LSHAnnIndex:
     Euclidean distance on the unit sphere is 2-2·cos, so bucket locality in
     L2 == cosine locality. Stock estimator/model — save/load via MLlib."""
 
-    def __init__(self, model, featurized: DataFrame,
+    def __init__(self, model, df: DataFrame,
                  id_col: str = "vec_id", emb_col: str = "embedding"):
         self.model = model
-        self.featurized = featurized
         self.id_col = id_col
         self.emb_col = emb_col
+        #: the rows `search` scans: `df` featurized under `model`
+        self.featurized = self.featurize(df)
+
+    @staticmethod
+    def _features(df: DataFrame, emb_col: str) -> DataFrame:
+        """`df` plus `_features`, the unit-normalized embedding vector."""
+        from pyspark.ml.functions import array_to_vector
+
+        from vervectordb_spark.functions.similarity import normalize_expr
+
+        return df.withColumn(
+            "_features", array_to_vector(normalize_expr(F.col(emb_col))))
+
+    def featurize(self, df: DataFrame) -> DataFrame:
+        """`df` plus `_features` and their `_hashes` under this model.
+        The projections are seeded and do not depend on the rows, so
+        featurizing new rows under a kept model hashes them exactly as a
+        rebuild would. Lazy — the caller caches it when it is read more
+        than once."""
+        return self.model.transform(self._features(df, self.emb_col))
 
     @classmethod
     def build(cls, df: DataFrame, bucket_length: float = 2.0,
               num_hash_tables: int = 3, seed: int = 42,
               id_col: str = "vec_id", emb_col: str = "embedding") -> "LSHAnnIndex":
         from pyspark.ml.feature import BucketedRandomProjectionLSH
-        from pyspark.ml.functions import array_to_vector
 
-        from vervectordb_spark.functions.similarity import normalize_expr
-
-        feats = df.withColumn(
-            "_features",
-            array_to_vector(normalize_expr(F.col(emb_col))),
-        )
         lsh = BucketedRandomProjectionLSH(
             inputCol="_features", outputCol="_hashes",
             bucketLength=bucket_length, numHashTables=num_hash_tables, seed=seed,
         )
-        model = lsh.fit(feats)
-        return cls(model, model.transform(feats).cache(), id_col=id_col, emb_col=emb_col)
+        return cls(lsh.fit(cls._features(df, emb_col)), df,
+                   id_col=id_col, emb_col=emb_col)
 
     def save(self, path: str) -> None:
         """Persist the fitted MLlib model (its random planes are the only
@@ -611,15 +623,8 @@ class LSHAnnIndex:
         the index serves — hashes recompute deterministically from the
         loaded planes)."""
         from pyspark.ml.feature import BucketedRandomProjectionLSHModel
-        from pyspark.ml.functions import array_to_vector
 
-        from vervectordb_spark.functions.similarity import normalize_expr
-
-        model = BucketedRandomProjectionLSHModel.load(path)
-        feats = df.withColumn(
-            "_features", array_to_vector(normalize_expr(F.col(emb_col)))
-        )
-        return cls(model, model.transform(feats).cache(),
+        return cls(BucketedRandomProjectionLSHModel.load(path), df,
                    id_col=id_col, emb_col=emb_col)
 
     def search(self, query_vec: Sequence[float], top_k: int = 5) -> DataFrame:

@@ -209,22 +209,29 @@ class IMIIndex:
         (measured on the half-clustered corpus, RECALL.md 'Reading the
         IMI rows').
 
-        Cost shape: one bounded collect (the PQ-train cap pattern) + one
-        sample² NumPy pass driver-side; the CDFs are k1+k2 floats of
+        Cost shape: two bounded collects (sample_size keys per partition,
+        then sample_size vectors) + one sample² NumPy pass driver-side; the CDFs are k1+k2 floats of
         driver state, centroid-class. Call once per index build (or after
         drift); probe_cells_adaptive uses the calibration automatically."""
-        # deterministic seeded sample: a hash-ordered prefix (TakeOrdered
-        # over xxhash64(seed, id), id-tiebroken — a bounded global-sort
-        # prefix). Row membership depends only on (seed, row identity),
-        # never on partitioning (the _bounded_sample contract,
-        # operators/kmeans.py), and the seed parameter actually reshuffles
-        # which rows are drawn.
+        # deterministic seeded sample: the sample_size rows first in
+        # (xxhash64(seed, id), id) order. Row membership depends only on
+        # (seed, row identity), never on partitioning (the _bounded_sample
+        # contract, operators/kmeans.py), and the seed parameter actually
+        # reshuffles which rows are drawn. Only the (hash, id) keys go
+        # through the global-sort prefix (TakeOrderedAndProject sends
+        # every partition's top sample_size to the driver); the vectors
+        # are then fetched by a hash threshold — sample_size rows.
         df = self.assigned.select(self.id_col, self.emb_col).filter(
-            F.col(self.emb_col).isNotNull())
-        rows = [r[1] for r in
-                df.orderBy(F.xxhash64(F.lit(int(seed)), F.col(self.id_col)),
-                           F.col(self.id_col))
-                .limit(int(sample_size)).collect()]
+            F.col(self.emb_col).isNotNull()).withColumn(
+            "_h", F.xxhash64(F.lit(int(seed)), F.col(self.id_col)))
+        keys = [(r[0], r[1]) for r in
+                df.select("_h", self.id_col)
+                .orderBy("_h", self.id_col).limit(int(sample_size)).collect()]
+        rank = {k: i for i, k in enumerate(keys)}
+        fetched = df.filter(F.col("_h") <= keys[-1][0]).collect() if keys else []
+        rows = [r[self.emb_col] for r in sorted(
+            (r for r in fetched if (r["_h"], r[self.id_col]) in rank),
+            key=lambda r: rank[(r["_h"], r[self.id_col])])][:len(keys)]
         if len(rows) < 3:
             raise ValueError("calibrate_probe needs >= 3 sampled vectors")
         X = np.asarray([list(v) for v in rows], dtype=np.float64)

@@ -327,29 +327,8 @@ class IVFIndex:
         self.centroids = centroids
         self.id_col = id_col
         self.emb_col = emb_col
-        #: rows bound by rebind() and not yet assigned
-        self._rows: DataFrame | None = None
         #: (SparkContext, predict model over `centroids`), built by _model
         self._predict = None
-
-    @property
-    def assigned(self) -> DataFrame:
-        """The indexed rows plus `cluster_id`. Rows bound by `rebind` are
-        assigned here, on first use, by `assign`."""
-        if self._assigned is None and self._rows is not None:
-            self._assigned = self.assign(self._rows)
-        return self._assigned
-
-    @assigned.setter
-    def assigned(self, value: DataFrame) -> None:
-        self._assigned = value
-
-    def rebind(self, df: DataFrame) -> None:
-        """Keep the centroids, index the rows of `df` instead: a new store
-        version reuses the fit rather than refitting k-means. Nothing runs
-        here, not even the predict plan — `assigned` builds it on first
-        use."""
-        self._rows, self._assigned = df, None
 
     @property
     def n_clusters(self) -> int:
@@ -364,12 +343,12 @@ class IVFIndex:
         most 256 × n_clusters rows (FAISS's points-per-centroid default),
         drawn by `id_col` so the same rows give the same centroids under
         any partitioning; k is clamped to the rows drawn. Under the cap
-        the draw is one Spark job; rows are assigned lazily."""
+        the draw is one Spark job; `assigned` is the lazy `assign(df)`."""
         X = _bounded_sample(df, emb_col, 256 * n_clusters, seed, id_col)
         centroids = _lloyd_kmeans(X, max(1, min(n_clusters, len(X))), seed,
                                   max_iter, init="k-means++")
         index = cls(None, centroids, id_col=id_col, emb_col=emb_col)
-        index.rebind(df)
+        index.assigned = index.assign(df)
         return index
 
     def _model(self, spark: SparkSession):

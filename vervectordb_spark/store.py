@@ -23,22 +23,29 @@ Mutability: the reference mutates the matrix in place; DataFrames are
 immutable, so update/delete are copy-on-write rewrites. Every assignment
 of the store frame (`df`) starts a new store VERSION. Unlike the
 reference (which leaves HNSW stale after update/delete —
-vervectordb/__init__.py:311-335), no index here can dangle. An IVF
-index, fitted or loaded, is its centroid matrix: it keeps the centroids
-across writes and has its rows reassigned to the nearest one every
-version (lazily, on the first read that needs them) — the policy
-streaming/refresh.py applies to arriving batches; only build_ivf_index()
-refits. The other indexes drop on a write and rebuild on the next search.
+vervectordb/__init__.py:311-335), no index here can dangle, because the
+store's derived state is of two kinds:
+
+  * FITS — IVF centroids, IMI half-centroids, the BRP-LSH model and the
+    PQ, SQ, BQ, rotated-BQ and residual codecs. Only a build_*/train_*
+    call or load() changes a fit; writes never do (an IVF refit drops
+    the residual codec fitted against the old centroids).
+  * ROW-DERIVED FRAMES — the serving frame (which carries each row's
+    IVF cluster_id), the IMI cells, the ANN featurized rows and the
+    residual codes. Each is a function of (fit, version): built lazily
+    by the first read of a version, persisted MEMORY_AND_DISK, and
+    unpersisted when the next version's replaces it (`_derived`).
+
+So after a write every index keeps its fit and has its rows reassigned
+under it — the rule streaming/refresh.py applies to arriving batches.
 
 Serving: brute_force_search, filtered_search, ivf_search and batch_search
-read one SERVING FRAME per version — the store rows plus their self-dot
-(and, with an IVF index, their cluster_id), persisted MEMORY_AND_DISK.
-That derived state is computed on the first read of a new version and
-reused by every later read of it, which then scans cached columns
-instead of replaying the write lineage, the per-row norm fold and the
-cluster predict; the frame of the previous version is
-unpersisted. Writes never fill a frame. Written rows travel as one Arrow
-table (a LocalRelation), so no read forks a Python worker for them.
+read the version's serving frame — the store rows plus their self-dot
+(and, with an IVF index, their cluster_id). Every later read of the
+version scans cached columns instead of replaying the write lineage, the
+per-row norm fold and the cluster predict. Writes never fill a frame.
+Written rows travel as one Arrow table (a LocalRelation), so no read
+forks a Python worker for them.
 
 Scale: vectors never visit the driver. Only query vectors, centroids
 (k×dim) and PQ codebooks (8×256×(dim/8)) are driver/broadcast state.
@@ -46,6 +53,7 @@ Scale: vectors never visit the driver. Only query vectors, centroids
 
 from __future__ import annotations
 
+import copy
 import uuid
 from collections.abc import Sequence
 
@@ -107,43 +115,42 @@ class DimensionError(ValueError):
     (vervectordb/__init__.py:243-245)."""
 
 
+def _over(index, **rows):
+    """`index`'s fit serving other rows: a shallow copy with the row
+    attributes in `rows` (`assigned`, `featurized`) replaced, so the
+    store's kept fit is shared and never re-pinned."""
+    view = copy.copy(index)
+    vars(view).update(rows)
+    return view
+
+
 class VectorStore:
     def __init__(self, spark: SparkSession, vector_dim: int, db_path: str | None = None):
         self.spark = spark
         self.vector_dim = int(vector_dim)
         self.db_path = db_path
         self._version = 0
-        #: the serving frame and the (version, IVF index) it was built for
-        self._frame: DataFrame | None = None
-        self._frame_for: tuple | None = None
-        # Derived indexes are cleared (not flagged) on mutation: a shared
-        # validity flag lets building ONE index mark the OTHER valid and
-        # serve stale results. None == "rebuild before use" — per-index,
-        # unambiguous. The IVF index is the exception: it is rebound to
-        # every new version's rows (see the df setter). The PQ codec is
-        # NOT an index: its codebooks are a sample-trained lossy codec,
-        # still valid for encoding new rows (the reference likewise trains
-        # once, vervectordb/__init__.py:493).
-        #: blocks backing the CURRENT localCheckpoint of self.df /
-        #: ivf.assigned, released when a newer checkpoint replaces them
+        #: row-derived frames: name -> (version, fit, persisted frame)
+        self._frames: dict[str, tuple[int, object, DataFrame]] = {}
+        #: blocks pinned by localCheckpoints that `df` reads (same-path
+        #: save, ingest's uuid ids), released once the rows are on disk
         #: (finding #15 — DataFrame.unpersist() is a silent no-op here)
         self._df_ckpt_ids: set[int] = set()
-        self._ivf_ckpt_ids: set[int] = set()
-        self._ivf = None
+        #: (path, version) of the saved store `load` read: while the
+        #: version holds, df and every index's own rows ARE that layout
+        self._loaded: tuple[str, int] | None = None
         self.df = _row_frame(spark, [], [], [])
-        self._ann = None
+        # fits: only build_*/train_*/load change them, never a write
+        self._ivf = None
         self._imi = None
+        self._ann = None
         self._pq = None
-        # residual codec (FAISS-style IVF-PQ): tied to the IVF centroids it
-        # was fitted against, so it IS index-like — kept while they are,
-        # dropped with them; the encoded table is a cache of rows, cleared
-        # on every write.
+        # residual codec (FAISS-style IVF-PQ): fitted against the IVF
+        # centroids, so an IVF refit drops it
         self._pq_res = None
-        self._res_encoded = None
         # SQ8 scalar-quantization stats: per-dimension min/max, dim rows of
-        # driver state (centroid-class). A codec like PQ — kept across
-        # mutations; rows ingested outside the fitted range CLAMP to it
-        # (standard SQ behavior; refit to re-tighten).
+        # driver state (centroid-class). Rows ingested outside the fitted
+        # range CLAMP to it (standard SQ behavior; refit to re-tighten).
         self._sq_stats_pdf = None
         # BQ binary-quantization thresholds: per-dimension midrange, the
         # same centroid-class driver state and clamp-free semantics (a
@@ -151,15 +158,10 @@ class VectorStore:
         # all-0/all-1 bits on the drifted dims — refit to re-center).
         self._bq_thr_pdf = None
         # rotated-BQ codec: (seed, thresholds fit on the ROTATED
-        # coordinates) — same centroid-class semantics as _bq_thr_pdf,
-        # plus the rotation's (dim, seed) which IS the whole transform
+        # coordinates) — the rotation's (dim, seed) IS the whole transform
         self._rotbq: tuple[int, object] | None = None
-        # provenance for same-path save-after-load (see save())
-        self._loaded_from: str | None = None
-        # True only while self.df IS the persisted id-clustered layout
-        # (set on load, cleared by any mutation): gates the file-skipping
-        # get_by_id path — stats may only prune files the frame still reads
-        self._base_pristine = False
+        #: the VersionedTable of checkpoint(versioned=True)
+        self._versions = None
 
     @property
     def df(self) -> DataFrame:
@@ -168,37 +170,49 @@ class VectorStore:
 
     @df.setter
     def df(self, value: DataFrame) -> None:
-        # every new frame is a new version: the serving frame is rebuilt
-        # from it on the next read, and the IVF index is bound to its rows
-        # (assigned on first use), so `_ivf.assigned` always describes the
-        # current df
+        # the one place a version starts: every row-derived frame is
+        # rebuilt from the new rows by its next read
         self._df = value
         self._version += 1
-        if self._ivf is not None:
-            self._ivf.rebind(value)
+
+    def _derived(self, name: str, fit, build) -> DataFrame:
+        """The row-derived frame `name` of the current version under
+        `fit`: `build()`, persisted when the first read of the version
+        asks for it and reused by every later one. The frame it replaces (an older
+        version's, or another fit's) is unpersisted."""
+        held = self._frames.get(name)
+        if held is not None and held[0] == self._version and held[1] is fit:
+            return held[2]
+        if held is not None:
+            held[2].unpersist()
+        frame = build().persist(StorageLevel.MEMORY_AND_DISK)
+        self._frames[name] = (self._version, fit, frame)
+        return frame
+
+    def _pristine(self) -> bool:
+        """Whether df is still the layout `load` read."""
+        return self._loaded is not None and self._loaded[1] == self._version
+
+    def _index_rows(self, index) -> DataFrame:
+        """An IVF or IMI index's rows for the current version: its own
+        while the store is pristine (the saved layout `load` read, so no
+        assignment runs; or a build's assignment of those same rows),
+        else df assigned under the kept fit."""
+        return index.assigned if self._pristine() else index.assign(self.df)
 
     def _serving(self) -> DataFrame:
         """The frame facade reads scan: `df` plus its row self-dot SS_COL
-        (cosine then folds once per row, not twice) and, when an IVF index
-        exists, each row's cluster_id — once per version, not once per
-        query. The rows come from `_ivf.assigned`, which always describes
-        the current df: predicted on first use after a build or a write,
-        read from the saved layout while a loaded store is unwritten (no
-        predict runs then). Persisted here and filled by the first read
-        that scans it; the frame of an older version or index is
-        unpersisted first. Only reads call this: a write never fills a
-        frame."""
+        (cosine then folds once per row, not twice) and, when an IVF
+        index exists, each row's cluster_id — once per version, not once
+        per query. It doubles as the IVF index's rows (`_ivf_rows`)."""
         ivf = self._ivf
-        if self._frame_for is None or self._frame_for[0] != self._version \
-                or self._frame_for[1] is not ivf:
-            if self._frame is not None:
-                self._frame.unpersist()
-            base = self.df if ivf is None else ivf.assigned
-            self._frame = base.withColumn(
-                SS_COL, self_dot_expr("embedding")).persist(
-                StorageLevel.MEMORY_AND_DISK)
-            self._frame_for = (self._version, ivf)
-        return self._frame
+        return self._derived("serving", ivf, lambda: (
+            self.df if ivf is None else self._index_rows(ivf)
+        ).withColumn(SS_COL, self_dot_expr("embedding")))
+
+    def _ivf_rows(self) -> DataFrame:
+        """The current rows plus their IVF cluster_id (an index exists)."""
+        return self._serving().drop(SS_COL)
 
     # ------------------------------------------------------------------ DML
     def _check_rows(self, vectors: Sequence[Sequence[float]]) -> None:
@@ -227,7 +241,6 @@ class VectorStore:
         # allowMissingColumns: after compress() the store carries pq_code;
         # new rows land with NULL codes (encode again to fill them)
         self.df = self.df.unionByName(new, allowMissingColumns=True)
-        self._invalidate()
         return ids
 
     def ingest(self, df: DataFrame, emb_col: str = "embedding") -> None:
@@ -240,11 +253,15 @@ class VectorStore:
         if "vec_id" not in df.columns:
             # uuid() is nondeterministic: a task retry or AQE re-plan
             # between two actions would re-draw every id, so ids handed
-            # out by one query could vanish from the next. localCheckpoint
-            # (lazy) pins the batch at its first materialization.
-            base = base.withColumn("vec_id", F.expr("uuid()")).localCheckpoint(
-                eager=False
-            )
+            # out by one query could vanish from the next. A lazy
+            # localCheckpoint pins the batch at its first materialization;
+            # the next checkpoint() releases the pin once the rows are on
+            # disk.
+            from vervectordb_spark.functions.checkpoint import eager_checkpoint
+
+            base, ids = eager_checkpoint(
+                base.withColumn("vec_id", F.expr("uuid()")), eager=False)
+            self._df_ckpt_ids |= ids
         if "metadata" not in df.columns:
             base = base.withColumn(
                 "metadata", F.lit(None).cast("map<string,string>")
@@ -257,14 +274,13 @@ class VectorStore:
             ),
             allowMissingColumns=True,
         )
-        self._invalidate()
 
     # --------------------------------------------------------- point lookup
     def _point_frame(self, vec_id: str) -> DataFrame:
         """The frame an id probe scans: when this store still serves the
-        persisted id-clustered layout (load() set _base_pristine; save()
-        recorded per-file vec_id min/max stats), read ONLY the files whose
-        id envelope can hold the key — driver-side metadata skipping, the
+        persisted id-clustered layout (`_pristine`; save() recorded
+        per-file vec_id min/max stats), read ONLY the files whose id
+        envelope can hold the key — driver-side metadata skipping, the
         primary-key story a 100 TB table needs (proof via executed scan
         metrics in tests/test_layout.py). Any in-memory mutation falls
         back to the live frame, where the equality predicate still
@@ -276,10 +292,11 @@ class VectorStore:
 
         from vervectordb_spark.sources.layout import STATS_FILE, pruned_scan
 
-        if self._frame_for is not None and self._frame_for[0] == self._version:
-            return self._frame
-        if self._base_pristine and self._loaded_from:
-            vectors_dir = _os.path.join(self._loaded_from, "vectors")
+        held = self._frames.get("serving")
+        if held is not None and held[0] == self._version:
+            return held[2]
+        if self._pristine():
+            vectors_dir = _os.path.join(self._loaded[0], "vectors")
             if _os.path.exists(_os.path.join(vectors_dir, STATS_FILE)):
                 return pruned_scan(self.spark, vectors_dir,
                                    {"vec_id": (vec_id, vec_id)})
@@ -307,7 +324,7 @@ class VectorStore:
     ) -> None:
         """P2: copy-on-write row replacement. Unlike the reference, no
         index serves the old vector (fixes the stale-HNSW quirk, SURVEY
-        §1.3): the IVF index reassigns the row, the others drop."""
+        §1.3): every index keeps its fit and reassigns the row."""
         if new_vector is not None:
             self._check_rows([new_vector])
         old = self.get_by_id(vec_id)  # KeyError if absent, like the reference
@@ -318,12 +335,10 @@ class VectorStore:
         self.df = self.df.filter(F.col("vec_id") != vec_id).unionByName(
             replacement, allowMissingColumns=True
         )
-        self._invalidate()
 
     def delete(self, vec_id: str) -> None:
         """P3: anti-filter rewrite (Delta DELETE when available)."""
         self.df = self.df.filter(F.col("vec_id") != vec_id)
-        self._invalidate()
 
     def merge(self, source: DataFrame) -> None:
         """Bulk upsert: rows in `source` (store schema: vec_id, embedding,
@@ -342,7 +357,6 @@ class VectorStore:
              else F.lit(None)).cast("map<string,string>").alias("metadata"),
         )
         self.df = merge_upsert(self.df, src, "vec_id")
-        self._invalidate()
 
     # --------------------------------------------------------------- search
     def brute_force_search(
@@ -488,19 +502,10 @@ class VectorStore:
         return results
 
     # ----------------------------------------------------- derived indexes
-    def _invalidate(self) -> None:
-        """After a write. The IVF index stays: the df setter already
-        rebound it to the new rows, and its centroids (with the residual
-        codec fitted to them) hold until build_ivf_index() refits."""
-        self._ann = None
-        self._imi = None
-        self._res_encoded = None
-        self._base_pristine = False  # df no longer == the persisted layout
-
     def build_ivf_index(self, n_clusters: int = 16, seed: int = 42):
         """Q4: fit k-means over the current rows — the one way the
-        centroids change. Writes keep them and only reassign rows (see
-        _invalidate); call this again to re-center clusters that drifted
+        centroids change. Writes keep them and only reassign rows; call
+        this again to re-center clusters that drifted
         (operators.ivf.centroid_drift measures by how much)."""
         from vervectordb_spark.operators.ivf import IVFIndex
 
@@ -508,7 +513,6 @@ class VectorStore:
         # the residual codec is fitted against the PREVIOUS centroids --
         # combining it with a rebuilt IVF silently mis-scores ADC
         self._pq_res = None
-        self._res_encoded = None
         return self._ivf
 
     def ivf_search(self, query_vector, top_k: int = 5, nprobe: int | None = None,
@@ -528,13 +532,19 @@ class VectorStore:
         """Two-level coarse quantizer over the store (operators/imi.py —
         beyond the reference's index set): k1*k2 cells from k1+k2 trained
         half-centroids. The cell-count answer when a flat IVF's k would
-        have to be impractically large; cleared on mutation (None ==
-        rebuild before use)."""
+        have to be impractically large. Like IVF, the fit is kept across
+        writes: each version's rows get their cells from
+        `IMIIndex.assign`, the rule streaming appends use."""
         from vervectordb_spark.operators.imi import IMIIndex
 
         self._imi = IMIIndex.build(self.df, k1=k1, k2=k2,
                                    dim=self.vector_dim, seed=seed)
         return self._imi
+
+    def _imi_rows(self) -> DataFrame:
+        """The current rows plus their IMI (cell1, cell2)."""
+        imi = self._imi
+        return self._derived("imi", imi, lambda: self._index_rows(imi))
 
     def imi_search(self, query_vector: Sequence[float], top_k: int = 5,
                    a: int = 2, b: int = 2) -> list[dict]:
@@ -543,7 +553,8 @@ class VectorStore:
         index first if absent)."""
         if self._imi is None:
             self.build_imi_index()
-        out = self._imi.search(query_vector, top_k=top_k, a=a, b=b)
+        out = _over(self._imi, assigned=self._imi_rows()).search(
+            query_vector, top_k=top_k, a=a, b=b)
         return [
             {"vector_id": r["vec_id"], "similarity": r["sim"],
              "cell": (r["cell1"], r["cell2"])}
@@ -551,6 +562,10 @@ class VectorStore:
         ]
 
     def build_ann_index(self, bucket_length: float = 2.0, num_hash_tables: int = 3, seed: int = 42):
+        """Fit the BRP-LSH model. Its random projections are seeded and
+        do not depend on the rows, so the fit is kept across writes and
+        each version's rows are featurized under it — exactly what a
+        rebuild over them would hash."""
         from vervectordb_spark.operators.ann import LSHAnnIndex
 
         self._ann = LSHAnnIndex.build(
@@ -562,23 +577,18 @@ class VectorStore:
                    n_probes: int = 1) -> list[dict]:
         """Q2 intent (the reference's HNSW contract — its implementation
         returns ≤1 row due to bug B1 and is deliberately NOT reproduced).
-        n_probes > 1 = multi-probe LSH: probe the n_probes lowest-margin
-        neighbor buckets per table — recall without more tables."""
+        n_probes > 1 (multi-probe) is a sign-LSH feature
+        (operators.ann.SignLSHIndex); the store's BRP-LSH index has no
+        margin-ranked neighbor buckets to probe, so it is refused."""
+        if n_probes > 1:
+            raise ValueError(
+                "n_probes > 1 requires the sign-LSH index "
+                "(operators.ann.SignLSHIndex); the store's is BRP-LSH")
         if self._ann is None:
             self.build_ann_index()
-        if n_probes > 1:
-            # multi-probe is a sign-LSH feature; MLlib BRP-LSH has no
-            # margin-ranked neighbor buckets to probe
-            from vervectordb_spark.operators.ann import SignLSHIndex
-
-            if not isinstance(self._ann, SignLSHIndex):
-                raise ValueError(
-                    "n_probes > 1 requires the sign-LSH index "
-                    "(build_ann_index(kind='signlsh'))")
-            out = self._ann.search(query_vector, top_k=top_k,
-                                   n_probes=n_probes)
-        else:
-            out = self._ann.search(query_vector, top_k=top_k)
+        ann = self._ann
+        rows = self._derived("ann", ann, lambda: ann.featurize(self.df))
+        out = _over(ann, featurized=rows).search(query_vector, top_k=top_k)
         return [{"vector_id": r["vec_id"], "similarity": r["sim"]} for r in out.collect()]
 
     # hnsw_search kept as an alias so reference callers can switch 1:1.
@@ -675,7 +685,7 @@ class VectorStore:
         if self._ivf is None:
             self.build_ivf_index()
         probes = self._ivf.probe_clusters(query_vector, nprobe)
-        probed = self._ivf.assigned.filter(F.col("cluster_id").isin(probes))
+        probed = self._ivf_rows().filter(F.col("cluster_id").isin(probes))
         out = sq.adc_search(probed, self._sq_stats(), query_vector,
                             top_k=top_k, rerank_factor=rerank_factor,
                             scorer="expr")
@@ -695,7 +705,7 @@ class VectorStore:
         if self._ivf is None:
             self.build_ivf_index()
         probes = self._ivf.probe_clusters(query_vector, nprobe)
-        probed = self._ivf.assigned.filter(F.col("cluster_id").isin(probes))
+        probed = self._ivf_rows().filter(F.col("cluster_id").isin(probes))
         out = bq.hamming_search(probed, self._bq_thresholds(), query_vector,
                                 top_k=top_k, rerank_factor=rerank_factor)
         return [{"vector_id": r["vec_id"], "similarity": r["sim"],
@@ -822,35 +832,31 @@ class VectorStore:
         """Residual IVF-PQ codec (FAISS-style; beyond the reference's
         raw-vector PQ): fit on (embedding − assigned centroid). Builds the
         IVF index first if absent — the codec is tied to those centroids."""
-        from vervectordb_spark.operators.pq import PQCodec  # noqa: F401
-
         if self.vector_dim % n_subquantizers:
             raise DimensionError(
                 f"dim {self.vector_dim} not divisible by {n_subquantizers}"
             )
         if self._ivf is None:
             self.build_ivf_index()
-        self._pq_res = self._ivf.fit_residual_codec(
+        self._pq_res = _over(self._ivf, assigned=self._ivf_rows()).fit_residual_codec(
             n_subquantizers=n_subquantizers, codebook_size=2 ** n_bits,
             sample_size=sample_size, seed=seed,
         )
-        self._res_encoded = None
         return self._pq_res
 
     def ivfpq_residual_search(self, query_vector, top_k: int = 5,
                               nprobe: int | None = None) -> list[dict]:
         """Serving path over residual codes: probe → fused-LUT ADC →
-        exact rerank. The residual-encoded table is built lazily once and
-        cached (at scale: persisted partitionBy(cluster_id) like the plain
-        codes table, so the probe partition-prunes)."""
+        exact rerank. The residual codes are a row-derived frame of the
+        codec and the version (at scale: persisted partitionBy(cluster_id)
+        like the plain codes table, so the probe partition-prunes)."""
         if self._pq_res is None:
             self.train_residual_pq()
-        if self._res_encoded is None:
-            self._res_encoded = self._ivf.encode_residual(self._pq_res).select(
-                "vec_id", "cluster_id", "pq_code"
-            ).cache()
-        out = self._ivf.search_residual_pq(
-            self._pq_res, self._res_encoded, query_vector, top_k=top_k,
+        ivf, codec = self._ivf, self._pq_res
+        codes = self._derived("residual", codec, lambda: ivf.encode_residual(
+            codec, self._ivf_rows()).select("vec_id", "cluster_id", "pq_code"))
+        out = ivf.search_residual_pq(
+            codec, codes, query_vector, top_k=top_k,
             nprobe=nprobe, rerank=self.df.select("vec_id", "embedding"),
         )
         return [
@@ -870,7 +876,7 @@ class VectorStore:
 
         if self._ivf is None:
             self.build_ivf_index(n_clusters=n_clusters)
-        return within_cluster_pairs(self._ivf.assigned, threshold=threshold)
+        return within_cluster_pairs(self._ivf_rows(), threshold=threshold)
 
     def compress(self) -> DataFrame:
         """C4: adds pq_code ARRAY<TINYINT>; storage-only codec, like the
@@ -900,6 +906,9 @@ class VectorStore:
         checkpoints never write over the files the current plan reads,
         prior states stay readable (`version_history`), and
         `restore_version` rolls the store back without data loss."""
+        from vervectordb_spark.functions.checkpoint import (
+            eager_checkpoint, release_blocks)
+
         if versioned:
             from vervectordb_spark.sources.versioned import VersionedTable
 
@@ -910,42 +919,37 @@ class VectorStore:
             vt.overwrite(self.df)
             self.df = vt.read()
             self._versions = vt
-            return
-        path = path or (self.db_path and f"{self.db_path}/_checkpoint")
-        if not path:
-            raise ValueError("no db_path for checkpoint")
-        # a SECOND checkpoint reads the very path it overwrites -- Spark
-        # rejects overwrite-while-reading, so break the lineage first
-        from vervectordb_spark.functions.checkpoint import (
-            eager_checkpoint, release_blocks)
-
-        self.df, ids = eager_checkpoint(self.df,
-                                        release=self._df_ckpt_ids)
-        self._df_ckpt_ids = ids
-        self.df.write.mode("overwrite").parquet(path)
-        self.df = self.spark.read.parquet(path)
-        # df now scans the parquet it just wrote: the bridge checkpoint's
-        # blocks are garbage — free them (one leaked set per checkpoint()
-        # call otherwise)
-        release_blocks(self.spark.sparkContext, ids)
+        else:
+            path = path or (self.db_path and f"{self.db_path}/_checkpoint")
+            if not path:
+                raise ValueError("no db_path for checkpoint")
+            # a SECOND checkpoint reads the very path it overwrites --
+            # Spark rejects overwrite-while-reading, so break the lineage
+            # first (the bridge pins the rows; older pins are freed)
+            self.df, self._df_ckpt_ids = eager_checkpoint(
+                self.df, release=self._df_ckpt_ids)
+            self.df.write.mode("overwrite").parquet(path)
+            self.df = self.spark.read.parquet(path)
+        # df now scans the files just written: the blocks pinned for it
+        # (the bridge, ingest's uuid batches) are garbage
+        release_blocks(self.spark.sparkContext, self._df_ckpt_ids)
         self._df_ckpt_ids = set()
 
     def version_history(self) -> list[dict]:
         """Manifests of the versioned-checkpoint log, newest first."""
-        if getattr(self, "_versions", None) is None:
+        if self._versions is None:
             raise ValueError("no versioned checkpoint yet")
         return self._versions.history()
 
     def restore_version(self, version: int) -> None:
         """Roll the store's vectors back to a prior checkpoint — published
         as a NEW version (append-only log; nothing is destroyed). Like any
-        write: the IVF index reassigns the restored rows, the other
-        indexes drop and rebuild lazily."""
-        if getattr(self, "_versions", None) is None:
+        write: every index keeps its fit, and the restored rows are
+        reassigned under it by the next read."""
+        if self._versions is None:
             raise ValueError("no versioned checkpoint yet")
         self._versions.rollback(version)
         self.df = self._versions.read()
-        self._invalidate()
 
     # ---------------------------------------------------------- persistence
     def save(self, path: str | None = None,
@@ -959,9 +963,9 @@ class VectorStore:
         load guards detect (the reference's pickle save truncates in
         place, vervectordb/__init__.py:556-573).
 
-        Save-after-load to the SAME path is supported: the in-flight
-        DataFrames are materialized (localCheckpoint) first, because the
-        swap retires the very files their lineage reads. At 100 TB prefer
+        Save-after-load to the SAME path is supported: the store rows are
+        materialized (localCheckpoint) first, because the swap retires the
+        very files their lineage reads. At 100 TB prefer
         versioned destination dirs or a table format; the same-path
         rewrite is the small-store convenience.
 
@@ -986,20 +990,15 @@ class VectorStore:
         # materialize whenever the target is this store's own directory:
         # the swap retires _checkpoint files the current plan may read
         # (the old loaded_from==path guard missed the
-        # fresh-store-then-checkpoint() case)
-        same = self._loaded_from == path or path == self.db_path
-        if same:
+        # fresh-store-then-checkpoint() case). The bridge is a new
+        # version, so the index layouts written below are derived from it
+        # too; it replaces the previous save's bridge (finding #15).
+        if path == self.db_path or (self._loaded and self._loaded[0] == path):
             from vervectordb_spark.functions.checkpoint import (
                 eager_checkpoint)
 
-            # release the PREVIOUS save's checkpoint blocks as the new
-            # one replaces them — repeated save() calls leaked one
-            # blocks-set each otherwise (finding #15)
             self.df, self._df_ckpt_ids = eager_checkpoint(
                 self.df, release=self._df_ckpt_ids)
-            if self._ivf is not None:
-                self._ivf.assigned, self._ivf_ckpt_ids = eager_checkpoint(
-                    self._ivf.assigned, release=self._ivf_ckpt_ids)
         with atomic_save(path) as tmp:
             # id-clustered base layout: range-partition + sort by vec_id
             # and record per-file min/max id stats (sources/layout.py) so
@@ -1040,14 +1039,15 @@ class VectorStore:
                 # valid only with the centroids it was fitted against — the
                 # IVF artifacts saved below carry them
                 self._pq_res.save(f"{tmp}/pq_residual", self.spark)
+            # each index layout holds the current version's rows
             if self._ivf is not None:
-                self._ivf.save(f"{tmp}/ivf")
+                _over(self._ivf, assigned=self._ivf_rows()).save(f"{tmp}/ivf")
             if self._ann is not None:
                 # MLlib writer; model state is tiny (the random planes), the
                 # featurized table re-derives from vectors at load
                 self._ann.save(f"{tmp}/ann_model")
             if self._imi is not None:
-                self._imi.save(f"{tmp}/imi")
+                _over(self._imi, assigned=self._imi_rows()).save(f"{tmp}/imi")
 
     @classmethod
     def load(cls, spark: SparkSession, path: str, vector_dim: int | None = None) -> "VectorStore":
@@ -1060,9 +1060,6 @@ class VectorStore:
             row = df.select(F.size("embedding").alias("d")).limit(1).collect()
             vector_dim = row[0]["d"] if row else 0
         store = cls(spark, vector_dim, db_path=path)
-        store.df = df
-        store._loaded_from = path
-        store._base_pristine = True  # df IS the persisted layout right now
         from vervectordb_spark.operators.pq import PQCodec
 
         try:
@@ -1092,7 +1089,9 @@ class VectorStore:
             # have — drop it so search re-encodes consistently instead of
             # silently mixing refit query bits with stale corpus bits
             if "bq_rot_code" in df.columns:
-                store.df = store.df.drop("bq_rot_code")
+                df = df.drop("bq_rot_code")
+        store.df = df
+        store._loaded = (path, store._version)
         from vervectordb_spark.operators.ivf import IVFIndex
 
         try:
