@@ -27,6 +27,20 @@ def counting_jobs(sc):
         out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
 
 
+@contextlib.contextmanager
+def broadcast_threshold(spark, value):
+    """Set spark.sql.autoBroadcastJoinThreshold — the store's driver-tier
+    bound, -1 turns the tier off — inside the block; the previous value
+    is restored on exit."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from vervectordb_spark.session import get_spark

@@ -778,3 +778,213 @@ def test_ingest_uuid_pins_released_by_checkpoint(spark, tmp_path):
     st.checkpoint()
     assert persistent_rdd_ids(sc) - baseline == set()
     assert sorted(r["vec_id"] for r in st.df.collect()) == ids
+
+
+# ------------------------------------------------------------ driver tier
+INF, NAN = float("inf"), float("nan")
+#: rows whose scores hit every edge of the folds: a zero vector (cosine
+#: 0), NaN and ±inf components, and exact ties (the same vector under
+#: ids inserted out of id order, so only the id can order them)
+EDGE_ROWS = [
+    ("e-zero", [0.0, 0.0, 0.0, 0.0], {"kind": "zero"}),
+    ("e-nan", [1.0, NAN, 0.0, 0.0], {"kind": "nan"}),
+    ("e-pinf", [INF, 1.0, 0.0, 0.0], None),
+    ("e-ninf", [0.0, -INF, 1.0, 0.0], {"kind": "-inf"}),
+    ("e-tie-b", [0.5, 0.5, 0.5, 0.5], {"kind": "tie"}),
+    ("e-tie-a", [0.5, 0.5, 0.5, 0.5], {"kind": "tie"}),
+    ("e-tie-c", [0.5, 0.5, 0.5, 0.5], {}),
+]
+
+
+def _key(v):
+    """A float by its bits: NaN as one marker (Spark and NumPy may carry
+    different NaN payloads), anything else by float.hex (keeps -0.0)."""
+    return "nan" if math.isnan(v) else float(v).hex()
+
+
+def _exact(results):
+    """Search results with every float replaced by _key, so `==` is a
+    bit-for-bit comparison that holds for NaN too."""
+    if isinstance(results, dict):
+        return {k: _exact(v) for k, v in results.items()}
+    if isinstance(results, (list, tuple)):
+        return [_exact(v) for v in results]
+    return _key(results) if isinstance(results, float) else results
+
+
+def _twin_stores(spark, rows, dim=4, n_clusters=None):
+    """Two stores over the same rows and ids: `on` serves from the driver
+    tier, `off` from Spark (its version's first read ran with the tier
+    turned off, so it stays on Spark). With `n_clusters`, both fit IVF on
+    the rows before the finite EDGE_ROWS join them (the MLlib predict
+    that assigns clusters fails on a NaN vector, on either path)."""
+    from tests.conftest import broadcast_threshold
+    from vervectordb_spark.store import _row_frame
+
+    def frame(part):
+        # an Arrow LocalRelation, whose size Spark knows: a frame built
+        # from a Python list is an RDD of unknown size, never under a bound
+        return _row_frame(spark, *zip(*part)) if part else \
+            _row_frame(spark, [], [], [])
+
+    stores = []
+    for _ in range(2):
+        st = VectorStore(spark, vector_dim=dim)
+        st.ingest(frame(rows))
+        if n_clusters:
+            st.build_ivf_index(n_clusters=n_clusters, seed=3)
+            st.ingest(frame([r for r in EDGE_ROWS
+                             if all(map(math.isfinite, r[1]))]))
+        stores.append(st)
+    on, off = stores
+    on.brute_force_search([1.0] * dim, 1)
+    with broadcast_threshold(spark, -1):
+        off.brute_force_search([1.0] * dim, 1)
+    assert on._held_serving()[3] and off._held_serving()[3] is False
+    if n_clusters:
+        assert np.array_equal(on._ivf.centroids, off._ivf.centroids)
+    return on, off
+
+
+def _base_rows(n=40, dim=4, seed=7):
+    rng = np.random.default_rng(seed)
+    order = rng.permutation(n)  # insert out of id order
+    return [(f"r{i:03d}", [float(v) for v in rng.normal(size=dim)],
+             {"i": str(i)}) for i in order]
+
+
+EDGE_QUERIES = [
+    [0.3, -1.2, 0.7, 0.1],      # generic
+    [0.5, 0.5, 0.5, 0.5],       # the tie vector itself
+    [0.0, 0.0, 0.0, 0.0],       # zero query: every cosine 0, id order
+    [NAN, 1.0, 0.0, 0.0],       # every score NaN except cosine's guard
+    [INF, 0.0, -1.0, 2.0],
+]
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+def test_driver_tier_matches_spark_path_on_edge_values(spark, metric):
+    """The driver tier returns what the Spark path returns: the same ids
+    in the same order with bit-identical scores (NaN ranked above every
+    double, or below it for l2; exact ties by vec_id), the same metadata,
+    top_k beyond the live rows included."""
+    on, off = _twin_stores(spark, _base_rows() + EDGE_ROWS)
+    for q in EDGE_QUERIES:
+        for k in (3, 100):
+            tier = on.brute_force_search(q, k, metric=metric)
+            assert len(tier) == min(k, 47)
+            assert _exact(tier) == _exact(off.brute_force_search(
+                q, k, metric=metric)), (q, k)
+    for vid, _, _ in EDGE_ROWS:
+        assert _exact(on.get_by_id(vid)) == _exact(off.get_by_id(vid))
+    ranked = on.brute_force_search([0.5, 0.5, 0.5, 0.5], 100, metric=metric)
+    ids = [r["vector_id"] for r in ranked]
+    at = ids.index("e-tie-a")
+    assert ids[at:at + 3] == ["e-tie-a", "e-tie-b", "e-tie-c"]
+    nan = [math.isnan(r["similarity"]) for r in ranked]
+    assert any(nan) and nan == sorted(nan, reverse=metric != "l2")
+    if metric == "cosine":
+        assert ranked[ids.index("e-zero")]["similarity"] == 0.0
+
+
+def test_driver_tier_matches_spark_path_for_ivf_lookup_and_empty_store(spark):
+    """ivf_search (same probe set, same cluster_id, same scores and order)
+    and get_by_id (same vector, metadata, KeyError) agree on both paths,
+    edge rows included; an empty store answers empty both ways."""
+    on, off = _twin_stores(spark, _base_rows(), n_clusters=3)
+    for q in EDGE_QUERIES:
+        for nprobe in (1, 2, 3, "adaptive"):
+            tier = on.ivf_search(q, 100, nprobe=nprobe)
+            assert _exact(tier) == _exact(off.ivf_search(q, 100, nprobe=nprobe))
+    assert {r["cluster_id"] for r in on.ivf_search(EDGE_QUERIES[0], 100,
+                                                    nprobe=3)} == {0, 1, 2}
+    for vid in [r[0] for r in _base_rows()[:5]] + ["e-zero", "e-tie-c"]:
+        assert _exact(on.get_by_id(vid)) == _exact(off.get_by_id(vid))
+    for st in (on, off):
+        with pytest.raises(KeyError):
+            st.get_by_id("missing")
+
+    on, off = _twin_stores(spark, [])
+    for st in (on, off):
+        assert st.brute_force_search([1.0, 0.0, 0.0, 0.0], 5) == []
+        assert st.batch_search([[1.0, 0.0, 0.0, 0.0]], 5) == [[]]
+        with pytest.raises(KeyError):
+            st.get_by_id("r000")
+
+
+def test_batch_search_on_the_tier_equals_brute_force(spark):
+    """On the driver tier each batch_search result IS that query's
+    brute_force_search (same ids, order and score bits); over the bound
+    the GEMM kernel keeps its 1e-6 agreement with the exact fold."""
+    from tests.conftest import broadcast_threshold
+
+    st, _, rng = _random_store(spark, n=150, dim=8, seed=5)
+    qs = rng.normal(size=(6, 8)).tolist() + [[0.0] * 8]
+    exact = [[{"vector_id": r["vector_id"], "similarity": r["similarity"]}
+              for r in st.brute_force_search(q, 7)] for q in qs]
+    assert st._held_serving()[3]
+    assert _exact(st.batch_search(qs, 7)) == _exact(exact)
+    with broadcast_threshold(spark, -1):
+        st.df = st.df                  # a new version, read over the bound
+        gemm = st.batch_search(qs, 7)
+        assert st._held_serving()[3] is False
+    for got, want in zip(gemm, exact):
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            assert math.isclose(g["similarity"], w["similarity"], abs_tol=1e-6)
+
+
+def test_driver_tier_reads_run_no_spark_job(spark):
+    """The first read of a version runs one job (the Arrow collect that
+    fills the tier); later brute, ivf, get and batch reads of the version
+    run none. A write fills nothing. Over the bound every read keeps its
+    Spark job count."""
+    from tests.conftest import broadcast_threshold, counting_jobs
+
+    sc = spark.sparkContext
+    st, ids, rng = _random_store(spark, n=80, dim=8, seed=9)
+    st.build_ivf_index(n_clusters=4)
+    q = rng.normal(size=8).tolist()
+    reads = {
+        "brute": lambda: st.brute_force_search(q, 5),
+        "ivf": lambda: st.ivf_search(q, 5, nprobe=2),
+        "get": lambda: st.get_by_id(ids[0]),
+        "batch": lambda: st.batch_search([q, q], 5),
+    }
+
+    def jobs(read):
+        with counting_jobs(sc) as n:
+            read()
+        return n[0]
+
+    assert jobs(reads["ivf"]) == 1
+    assert {kind: jobs(read) for kind, read in reads.items()} == dict.fromkeys(reads, 0)
+    st.update(ids[1], rng.normal(size=8).tolist())
+    assert st._held_serving() is None            # the write filled nothing
+    reads["get"]()
+    assert st._held_serving() is None            # nor did a lookup
+    assert jobs(reads["brute"]) == 1 and jobs(reads["get"]) == 0
+
+    with broadcast_threshold(spark, 1):          # every frame is over 1 byte
+        st.delete(ids[2])
+        counts = {kind: jobs(read) for kind, read in reads.items()}
+        assert st._held_serving()[3] is False
+    assert counts == {"brute": 1, "ivf": 1, "get": 1, "batch": 2}
+
+
+def test_driver_tier_leaves_null_elements_to_spark(spark):
+    """A vector with a NULL element scores NULL on Spark (ranked last),
+    which no double can stand for: a version holding one stays on Spark."""
+    import pyarrow as pa
+
+    rows = pa.table({
+        "vec_id": ["a", "b"],
+        "embedding": pa.array([[1.0, None], [0.5, 0.5]], pa.list_(pa.float32())),
+        "metadata": pa.array([None, None], pa.map_(pa.string(), pa.string())),
+    })
+    st = VectorStore(spark, vector_dim=2)
+    st.ingest(spark.createDataFrame(rows))
+    out = st.brute_force_search([1.0, 0.0], 2)
+    assert st._held_serving()[3] is False
+    assert [r["vector_id"] for r in out] == ["b", "a"]
+    assert out[1]["similarity"] is None

@@ -16,10 +16,18 @@ rolls back with it. After every step it asserts:
     each index once: writes reassign rows, they never refit;
   * the persisted-RDD count does not grow with the number of store
     versions — at most one frame per row-derived structure in use (the
-    serving frame, the IMI cells, the ANN featurized rows).
+    serving frame, the IMI cells, the ANN featurized rows) — and the store
+    holds at most one driver matrix, dropping the one a newer version
+    replaces.
+
+The whole sequence runs with the driver tier on and off, and both runs
+must serve identical results.
 """
 
 import copy
+import random
+import uuid
+import weakref
 
 import numpy as np
 import pytest
@@ -28,6 +36,7 @@ from pyspark.sql import functions as F
 from perfbench.mirror import Mirror
 from vervectordb_spark.functions.checkpoint import persistent_rdd_ids
 from vervectordb_spark.store import VectorStore
+from tests.conftest import broadcast_threshold
 from tests.test_store import nearest_cells
 
 DIM = 8
@@ -54,12 +63,38 @@ def _vec(rng):
 
 @pytest.mark.parametrize("seed", [1, 2])
 def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
-                                            imi_fits, ann_fits):
+                                            imi_fits, ann_fits, monkeypatch):
+    """The sequence runs twice, on the driver tier (the default threshold)
+    and with the tier off (threshold -1, every read on Spark): each run
+    agrees with the mirror, fits each index once, and both runs return
+    identical results, step for step. The store's uuid4 ids are drawn
+    from a seeded stream, so both runs hold the same ids (and so the
+    same id-drawn index fits)."""
+    def seeded_ids():
+        draw = random.Random(seed)
+        monkeypatch.setattr(uuid, "uuid4", lambda: uuid.UUID(
+            int=draw.getrandbits(128), version=4))
+
+    fits = (ivf_fits, imi_fits, ann_fits)
+    seeded_ids()
+    on = _replay(spark, tmp_path / "on", seed, tier=True)
+    # each index was fitted by its first read alone, kept across writes
+    assert [len(f) for f in fits] == [1, 1, 1]
+    seeded_ids()
+    with broadcast_threshold(spark, -1):
+        off = _replay(spark, tmp_path / "off", seed, tier=False)
+    assert [len(f) for f in fits] == [2, 2, 2]
+    assert on == off
+
+
+def _replay(spark, path, seed, tier):
+    """One run of the seeded op sequence against a fresh store, checked
+    after every step; returns what each step served."""
     rng = np.random.default_rng(seed)
     sc = spark.sparkContext
     x = rng.standard_normal((N_BASE, DIM)).astype(np.float32)
     labels = rng.integers(0, LABELS, N_BASE)
-    store = VectorStore(spark, DIM, db_path=str(tmp_path / "db"))
+    store = VectorStore(spark, DIM, db_path=str(path / "db"))
     ids = store.batch_insert([[float(v) for v in r] for r in x],
                              [{"label": str(int(lab))} for lab in labels])
     mirror = Mirror(ids, x, labels)
@@ -67,6 +102,8 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
     versions = set()
     in_use = set()
     snapshot = None
+    transcript = []
+    last_matrix = None
 
     def live_id():
         return mirror.ids[int(rng.choice(np.nonzero(mirror.alive)[0]))]
@@ -77,7 +114,7 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
     for step in range(30):
         op = OPS[rng.choice(len(OPS), p=WEIGHTS / WEIGHTS.sum())]
         op = FORCED.get(step, op)
-        where = f"seed {seed} step {step} ({op})"
+        where = f"seed {seed} step {step} ({op}, tier {tier})"
         if step == SNAPSHOT:
             store.checkpoint(versioned=True)
             snapshot = (store.version_history()[0]["version"],
@@ -105,7 +142,9 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
             store.checkpoint()
         elif op == "get":
             vid = live_id()
-            assert mirror.check_row(vid, store.get_by_id(vid)), where
+            got = store.get_by_id(vid)
+            assert mirror.check_row(vid, got), where
+            transcript.append(got)
         else:
             q = _vec(rng)
             if op == "brute":
@@ -136,11 +175,20 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
                     elif op == "imi":
                         assert r["cell"] == nearest_cells(
                             x, store._imi.cent1, store._imi.cent2), where
+            transcript.append(out)
             versions.add(store._version)
             in_use.add(FRAME_OF[op])
         # at most ONE frame per row-derived structure in use, whatever
         # the version count
         assert len(persistent_rdd_ids(sc) - baseline) <= len(in_use), where
+        # at most one driver matrix, and none with the tier off; the one
+        # a newer version's replaced is gone, arrays and all
+        held = [h[3] for h in store._frames.values() if h[3]]
+        assert len(held) <= (1 if tier else 0), where
+        if held and (last_matrix is None or last_matrix() is not held[0]):
+            assert last_matrix is None or last_matrix() is None, where
+            last_matrix = weakref.ref(held[0])
     assert len(versions) >= 3  # the bound was exercised across versions
-    # each index was fitted by its first read alone, kept across writes
-    assert len(ivf_fits) == 1 and len(imi_fits) == 1 and len(ann_fits) == 1
+    if tier:
+        assert last_matrix is not None  # the tier served this run
+    return transcript

@@ -152,6 +152,37 @@ def l2_sql(a: str, b: str | Sequence[float]) -> str:
             "(acc, x) -> acc + x * x))")
 
 
+def fold_scores(xt, queries, metric: str = "cosine", ss=None):
+    """The parsed folds above over a driver matrix: `xt` holds one row
+    vector per COLUMN (dim × n, float64), `queries` one query per row
+    (Q × dim); returns Q × n scores. Vectorized over rows and queries,
+    folded left over dimensions from 0.0 in float64 — the products and
+    additions dot_sql, cosine_sql and l2_sql evaluate, in their order, so
+    every score equals the Spark value for the same row bit for bit.
+    Cosine reads each row's self-dot from `ss` (a serving frame's SS_COL)
+    and applies cosine_sql's zero guard."""
+    import numpy as np
+
+    q = np.asarray(queries, dtype=np.float64)
+    if metric not in ("cosine", "dot", "l2"):
+        raise ValueError(f"unknown metric {metric!r}")
+    acc = np.zeros((len(q), xt.shape[1]))
+    with np.errstate(all="ignore"):  # NaN and ±inf fold as IEEE, like Spark
+        for d in range(xt.shape[0]):
+            if metric == "l2":
+                t = xt[d] - q[:, d, None]
+                acc += t * t
+            else:
+                acc += xt[d] * q[:, d, None]
+        if metric == "l2":
+            return np.sqrt(acc)
+        if metric == "dot":
+            return acc
+        qss = np.array([self_dot(v) for v in q])[:, None]
+        return np.where((ss == 0.0) | (qss == 0.0), 0.0,
+                        acc / (np.sqrt(ss) * np.sqrt(qss)))
+
+
 def dot_expr(a: Column, b: Column) -> Column:
     """Sequential fold-left dot product in double precision."""
     return F.aggregate(

@@ -404,6 +404,15 @@ class IVFIndex:
         cap = min(max_nprobe or self.n_clusters, self.n_clusters)
         return [int(c) for c in order[: max(1, min(n, cap))]]
 
+    def probe_set(self, query_vec: Sequence[float], nprobe=None,
+                  mass: float = 0.8) -> list[int]:
+        """The clusters a query probes: nprobe="adaptive" sizes the set
+        from centroid-similarity mass (probe_clusters_adaptive), anything
+        else takes the nprobe nearest by cosine (probe_clusters)."""
+        if nprobe == "adaptive":
+            return self.probe_clusters_adaptive(query_vec, mass=mass)
+        return self.probe_clusters(query_vec, nprobe)
+
     def search(self, query_vec: Sequence[float], top_k: int = 5,
                nprobe: int | None = None, pre_filter: Column | None = None,
                probed: Sequence[int] | None = None,
@@ -416,10 +425,7 @@ class IVFIndex:
         `rows` replaces `assigned` as the frame searched — a cached copy
         carrying the same cluster_id (the store's serving frame)."""
         if probed is None:
-            if nprobe == "adaptive":
-                probed = self.probe_clusters_adaptive(query_vec, mass=mass)
-            else:
-                probed = self.probe_clusters(query_vec, nprobe)
+            probed = self.probe_set(query_vec, nprobe, mass=mass)
         # one parsed predicate: Column.isin pays a py4j call per value
         pred = F.expr(f"cluster_id IN ({', '.join(str(int(c)) for c in probed)})"
                       if len(probed) else "false")

@@ -47,8 +47,21 @@ per-row norm fold and the cluster predict. Writes never fill a frame.
 Written rows travel as one Arrow table (a LocalRelation), so no read
 forks a Python worker for them.
 
-Scale: vectors never visit the driver. Only query vectors, centroids
-(k×dim) and PQ codebooks (8×256×(dim/8)) are driver/broadcast state.
+Driver tier: a version whose serving frame is small enough is also held
+on the driver, like the reference's one in-memory matrix
+(vervectordb/__init__.py:228,248): the first read of the version
+collects it once through Arrow (`_Matrix.collect`), and brute_force_search,
+ivf_search, batch_search and — once that read has filled it — get_by_id
+answer from NumPy with no Spark job. Scores are the same left folds in
+float64 (functions.similarity.fold_scores) and the order is Spark's
+(score, then vec_id), so results are bit-identical to the Spark path.
+Reads with a Column predicate (pre_filter, filtered_search) stay on
+Spark. "Small enough" is spark.sql.autoBroadcastJoinThreshold, read at
+fill time (-1 turns the tier off).
+
+Scale: above that bound vectors never visit the driver. Only query
+vectors, centroids (k×dim) and PQ codebooks (8×256×(dim/8)) are
+driver/broadcast state.
 """
 
 from __future__ import annotations
@@ -57,12 +70,14 @@ import copy
 import uuid
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vervectordb_spark.functions.similarity import SS_COL, self_dot_expr
+from vervectordb_spark.functions.similarity import (
+    SS_COL, fold_scores, self_dot_expr)
 from vervectordb_spark.operators import search as _search
 
 _ROW_SCHEMA = T.StructType(
@@ -124,14 +139,116 @@ def _over(index, **rows):
     return view
 
 
+#: scores held at once while a batch is scored on the driver tier
+_SCORE_BLOCK = 1 << 20
+
+
+def _top(scores: np.ndarray, k: int, ascending: bool = False) -> np.ndarray:
+    """Indices of the first `k` of `scores` in Spark's order, for rows
+    already sorted by vec_id: by score — DESC with NaN above every double,
+    or ASC with NaN below — then by position, i.e. by id (a stable sort).
+    Only the rows whose score reaches the k-th are sorted."""
+    if k < 0:
+        raise ValueError(f"top_k must be >= 0, got {k}")
+    nan = np.isnan(scores)
+    key = np.where(nan, np.inf if ascending else -np.inf,
+                   scores if ascending else -scores)
+    cand = np.arange(len(key))
+    if 0 < k < len(key):
+        cand = np.flatnonzero(key <= np.partition(key, k - 1)[k - 1])
+    first = nan[cand] if ascending else ~nan[cand]
+    return cand[np.lexsort((key[cand], first))][:k]
+
+
+class _Matrix:
+    """The driver serving tier: one store version's serving frame held
+    in NumPy — vec_id, the float32 embeddings as a float64 matrix (one row
+    vector per column, so the fold reads each dimension contiguously),
+    the row self-dot, cluster_id (with an IVF index) and the raw Arrow
+    metadata column. Rows are sorted by vec_id, Spark's tie-break."""
+
+    def __init__(self, ids, xt, ss, cluster_id, metadata):
+        self.ids, self.xt, self.ss = ids, xt, ss
+        self.cluster_id, self.metadata = cluster_id, metadata
+        self._pos: dict | None = None
+
+    @classmethod
+    def collect(cls, serving: DataFrame, dim: int) -> "_Matrix | None":
+        """`serving` collected in one Arrow job, or None when it is over
+        the bound spark.sql.autoBroadcastJoinThreshold, read now (-1 turns
+        the tier off). The frame's optimized-plan size estimate must be
+        under it — Spark's own broadcast test, no job — and the collect is
+        limit(cap + 1) with cap = bound // (8·dim) rows, so a frame the
+        estimate undersized costs at most cap + 1 rows: that many rows
+        means over the bound. Null ids or vector elements and ragged
+        vectors, which the Spark folds score as NULL, also stay on
+        Spark."""
+        import pyarrow.compute as pc
+
+        jspark = serving.sparkSession._jsparkSession
+        bound = jspark.sessionState().conf().autoBroadcastJoinThreshold()
+        if bound < 0 or int(serving._jdf.queryExecution().optimizedPlan()
+                            .stats().sizeInBytes()) > bound:
+            return None
+        cap = bound // (8 * max(dim, 1))
+        cols = ["vec_id", "embedding", SS_COL, "metadata"] + (
+            ["cluster_id"] if "cluster_id" in serving.columns else [])
+        tbl = serving.select(*cols).limit(cap + 1).toArrow()
+        ids = tbl.column("vec_id")
+        emb = tbl.column("embedding").combine_chunks()
+        vals = emb.flatten()
+        if (tbl.num_rows > cap or ids.null_count or emb.null_count
+                or vals.null_count
+                or pc.any(pc.not_equal(pc.list_value_length(emb), dim)).as_py()):
+            return None
+        ids = np.array(ids.to_pylist(), dtype=object)
+        order = np.argsort(ids, kind="stable")
+        x = vals.to_numpy(zero_copy_only=False).reshape(len(ids), dim)[order]
+        cluster = (tbl.column("cluster_id").to_numpy()[order]
+                   if "cluster_id" in cols else None)
+        return cls(ids[order], np.ascontiguousarray(x.T, dtype=np.float64),
+                   tbl.column(SS_COL).to_numpy()[order], cluster,
+                   tbl.column("metadata").combine_chunks().take(order))
+
+    def topk(self, queries, k: int, metric: str = "cosine",
+             rows: np.ndarray | None = None) -> list[tuple]:
+        """Per query: (row indices, scores) of its top k over all rows or
+        the row indices `rows`, in Spark's order — the fold vectorized
+        over rows and over a block of queries at a time."""
+        xt, ss = self.xt, self.ss
+        if rows is not None:
+            xt, ss = xt[:, rows], ss[rows]
+        step = max(1, _SCORE_BLOCK // max(1, xt.shape[1]))
+        out = []
+        for b in range(0, len(queries), step):
+            for s in fold_scores(xt, queries[b:b + step], metric, ss):
+                top = _top(s, k, ascending=metric == "l2")
+                out.append((top if rows is None else rows[top], s[top]))
+        return out
+
+    def meta(self, rows: np.ndarray) -> list[dict]:
+        """The metadata dicts of `rows`."""
+        return [dict(m or {}) for m in self.metadata.take(rows).to_pylist()]
+
+    def row(self, vec_id: str) -> dict:
+        """get_by_id's answer; KeyError if absent."""
+        if self._pos is None:
+            self._pos = {v: i for i, v in enumerate(self.ids)}
+        i = self._pos[vec_id]
+        return {"vector_id": self.ids[i], "vector": self.xt[:, i].tolist(),
+                "metadata": self.meta([i])[0]}
+
+
 class VectorStore:
     def __init__(self, spark: SparkSession, vector_dim: int, db_path: str | None = None):
         self.spark = spark
         self.vector_dim = int(vector_dim)
         self.db_path = db_path
         self._version = 0
-        #: row-derived frames: name -> (version, fit, persisted frame)
-        self._frames: dict[str, tuple[int, object, DataFrame]] = {}
+        #: row-derived frames: name -> [version, fit, persisted frame,
+        #: driver matrix]; the matrix slot is the serving frame's tier
+        #: (`_matrix`): None until a read asks, False over the bound
+        self._frames: dict[str, list] = {}
         #: blocks pinned by localCheckpoints that `df` reads (same-path
         #: save, ingest's uuid ids), released once the rows are on disk
         #: (finding #15 — DataFrame.unpersist() is a silent no-op here)
@@ -178,15 +295,16 @@ class VectorStore:
     def _derived(self, name: str, fit, build) -> DataFrame:
         """The row-derived frame `name` of the current version under
         `fit`: `build()`, persisted when the first read of the version
-        asks for it and reused by every later one. The frame it replaces (an older
-        version's, or another fit's) is unpersisted."""
+        asks for it and reused by every later one. The entry it replaces
+        (an older version's, or another fit's) goes whole: its frame is
+        unpersisted and its driver matrix, if any, dropped."""
         held = self._frames.get(name)
         if held is not None and held[0] == self._version and held[1] is fit:
             return held[2]
         if held is not None:
             held[2].unpersist()
         frame = build().persist(StorageLevel.MEMORY_AND_DISK)
-        self._frames[name] = (self._version, fit, frame)
+        self._frames[name] = [self._version, fit, frame, None]
         return frame
 
     def _pristine(self) -> bool:
@@ -209,6 +327,22 @@ class VectorStore:
         return self._derived("serving", ivf, lambda: (
             self.df if ivf is None else self._index_rows(ivf)
         ).withColumn(SS_COL, self_dot_expr("embedding")))
+
+    def _matrix(self) -> _Matrix | None:
+        """The driver tier of the current version (under the current IVF
+        fit): the serving frame collected by the first read that asks,
+        None when the version is over the bound. Writes never fill it."""
+        serving = self._serving()
+        held = self._frames["serving"]
+        if held[3] is None:
+            held[3] = _Matrix.collect(serving, self.vector_dim) or False
+        return held[3] or None
+
+    def _held_serving(self) -> list | None:
+        """The serving entry a read of the current version already made
+        (under any fit: the rows are the same), else None."""
+        held = self._frames.get("serving")
+        return held if held is not None and held[0] == self._version else None
 
     def _ivf_rows(self) -> DataFrame:
         """The current rows plus their IVF cluster_id (an index exists)."""
@@ -285,15 +419,16 @@ class VectorStore:
         metrics in tests/test_layout.py). Any in-memory mutation falls
         back to the live frame, where the equality predicate still
         row-group-skips via pushdown. A serving frame that a read of
-        this version already filled beats both: the probe filters cached
+        this version already made beats both: the probe filters cached
         rows, and it is never a fill (update() looks ids up between
-        writes)."""
+        writes). get_by_id asks only when that frame has no driver
+        matrix."""
         import os as _os
 
         from vervectordb_spark.sources.layout import STATS_FILE, pruned_scan
 
-        held = self._frames.get("serving")
-        if held is not None and held[0] == self._version:
+        held = self._held_serving()
+        if held is not None:
             return held[2]
         if self._pristine():
             vectors_dir = _os.path.join(self._loaded[0], "vectors")
@@ -304,7 +439,13 @@ class VectorStore:
 
     def get_by_id(self, vec_id: str) -> dict:
         """P1: id → {vector_id, vector, metadata}; KeyError if absent
-        (reference vervectordb/__init__.py:301-309)."""
+        (reference vervectordb/__init__.py:301-309). Answered from the
+        driver matrix when a read of this version already filled it —
+        never a fill, so update()'s lookup runs no collect — else by a
+        point probe of `_point_frame`."""
+        held = self._held_serving()
+        if held is not None and held[3]:
+            return held[3].row(vec_id)
         rows = _search.point_lookup(self._point_frame(vec_id), vec_id).collect()
         if not rows:
             raise KeyError(vec_id)
@@ -370,6 +511,12 @@ class VectorStore:
         cosine (reference) | dot (MIPS) | l2 (nearest-first; the returned
         `similarity` is a distance)."""
         self._check_rows([query_vector])
+        m = self._matrix() if pre_filter is None else None
+        if m is not None:
+            [(rows, sims)] = m.topk([query_vector], top_k, metric)
+            return [{"vector_id": m.ids[i], "similarity": float(s),
+                     "metadata": meta}
+                    for i, s, meta in zip(rows, sims, m.meta(rows))]
         out = _search.brute_force_topk(
             self._serving(), query_vector, top_k, pre_filter=pre_filter,
             extra_cols=("metadata",), metric=metric,
@@ -483,10 +630,17 @@ class VectorStore:
     def batch_search(
         self, query_vectors: Sequence[Sequence[float]], top_k: int = 5
     ) -> list[list[dict]]:
-        """Q6, actually batched: one broadcast-join + window job for ALL
-        queries (the reference loops queries serially despite its
-        batch_size arg, vervectordb/__init__.py:524-534)."""
+        """Q6, actually batched: on the driver tier, the brute-force fold
+        vectorized over all queries (each result equals that query's
+        brute_force_search); over the bound, one broadcast GEMM + top-k
+        job for ALL queries (the reference loops queries serially despite
+        its batch_size arg, vervectordb/__init__.py:524-534)."""
         self._check_rows(query_vectors)
+        m = self._matrix()
+        if m is not None:
+            return [[{"vector_id": m.ids[i], "similarity": float(s)}
+                     for i, s in zip(rows, sims)]
+                    for rows, sims in m.topk(list(query_vectors), top_k)]
         qdf = _local_frame(self.spark, _QUERY_SCHEMA, {
             "query_id": list(range(len(query_vectors))),
             "q_embedding": [[float(x) for x in v] for v in query_vectors],
@@ -518,9 +672,19 @@ class VectorStore:
     def ivf_search(self, query_vector, top_k: int = 5, nprobe: int | None = None,
                    pre_filter: Column | None = None) -> list[dict]:
         """Q5: probe nprobe clusters (reference default max(k//2, 8),
-        vervectordb/__init__.py:441), rescore exactly inside them."""
+        vervectordb/__init__.py:441), rescore exactly inside them. On the
+        driver tier the probed rows are those whose collected cluster_id
+        is in the probe set — the rows the Spark path's filter keeps."""
         if self._ivf is None:
             self.build_ivf_index()
+        m = self._matrix() if pre_filter is None else None
+        if m is not None:
+            probed = self._ivf.probe_set(query_vector, nprobe)
+            [(rows, sims)] = m.topk([query_vector], top_k, rows=np.flatnonzero(
+                np.isin(m.cluster_id, probed)))
+            return [{"vector_id": m.ids[i], "similarity": float(s),
+                     "cluster_id": int(m.cluster_id[i])}
+                    for i, s in zip(rows, sims)]
         out = self._ivf.search(query_vector, top_k=top_k, nprobe=nprobe,
                                pre_filter=pre_filter, rows=self._serving())
         return [
