@@ -28,17 +28,18 @@ def counting_jobs(sc):
 
 
 @contextlib.contextmanager
-def broadcast_threshold(spark, value):
-    """Set spark.sql.autoBroadcastJoinThreshold — the store's driver-tier
-    bound, -1 turns the tier off — inside the block; the previous value
-    is restored on exit."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(value))
+def tier_bytes(value):
+    """Set the store's driver-tier budget (`store._TIER_BYTES`; 0 turns
+    the tier off) inside the block; the previous value is restored on
+    exit."""
+    from vervectordb_spark import store
+
+    old = store._TIER_BYTES
+    store._TIER_BYTES = value
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        store._TIER_BYTES = old
 
 
 @pytest.fixture(scope="session")

@@ -814,11 +814,11 @@ def _exact(results):
 
 def _twin_stores(spark, rows, dim=4, n_clusters=None):
     """Two stores over the same rows and ids: `on` serves from the driver
-    tier, `off` from Spark (its version's first read ran with the tier
-    turned off, so it stays on Spark). With `n_clusters`, both fit IVF on
+    tier, `off` from Spark (its version's second read, which fills the
+    tier, ran with a zero tier budget, so it stays on Spark). With `n_clusters`, both fit IVF on
     the rows before the finite EDGE_ROWS join them (the MLlib predict
     that assigns clusters fails on a NaN vector, on either path)."""
-    from tests.conftest import broadcast_threshold
+    from tests.conftest import tier_bytes
     from vervectordb_spark.store import _row_frame
 
     def frame(part):
@@ -837,9 +837,11 @@ def _twin_stores(spark, rows, dim=4, n_clusters=None):
                              if all(map(math.isfinite, r[1]))]))
         stores.append(st)
     on, off = stores
-    on.brute_force_search([1.0] * dim, 1)
-    with broadcast_threshold(spark, -1):
-        off.brute_force_search([1.0] * dim, 1)
+    for _ in range(2):                  # the second read fills the tier
+        on.brute_force_search([1.0] * dim, 1)
+    with tier_bytes(0):
+        for _ in range(2):
+            off.brute_force_search([1.0] * dim, 1)
     assert on._held_serving()[3] and off._held_serving()[3] is False
     if n_clusters:
         assert np.array_equal(on._ivf.centroids, off._ivf.centroids)
@@ -914,9 +916,9 @@ def test_driver_tier_matches_spark_path_for_ivf_lookup_and_empty_store(spark):
 
 def test_batch_search_on_the_tier_equals_brute_force(spark):
     """On the driver tier each batch_search result IS that query's
-    brute_force_search (same ids, order and score bits); over the bound
+    brute_force_search (same ids, order and score bits); off the tier
     the GEMM kernel keeps its 1e-6 agreement with the exact fold."""
-    from tests.conftest import broadcast_threshold
+    from tests.conftest import tier_bytes
 
     st, _, rng = _random_store(spark, n=150, dim=8, seed=5)
     qs = rng.normal(size=(6, 8)).tolist() + [[0.0] * 8]
@@ -924,22 +926,23 @@ def test_batch_search_on_the_tier_equals_brute_force(spark):
               for r in st.brute_force_search(q, 7)] for q in qs]
     assert st._held_serving()[3]
     assert _exact(st.batch_search(qs, 7)) == _exact(exact)
-    with broadcast_threshold(spark, -1):
-        st.df = st.df                  # a new version, read over the bound
-        gemm = st.batch_search(qs, 7)
+    with tier_bytes(0):
+        st.df = st.df                  # a new version, read over the budget
+        gemm = [st.batch_search(qs, 7) for _ in range(2)]
         assert st._held_serving()[3] is False
-    for got, want in zip(gemm, exact):
+    for got, want in zip(gemm[0] + gemm[1], exact + exact):
         assert len(got) == len(want)
         for g, w in zip(got, want):
             assert math.isclose(g["similarity"], w["similarity"], abs_tol=1e-6)
 
 
 def test_driver_tier_reads_run_no_spark_job(spark):
-    """The first read of a version runs one job (the Arrow collect that
-    fills the tier); later brute, ivf, get and batch reads of the version
-    run none. A write fills nothing. Over the bound every read keeps its
-    Spark job count."""
-    from tests.conftest import broadcast_threshold, counting_jobs
+    """The first read of a version runs on Spark; the second runs one job,
+    the Arrow collect that fills the tier; later brute, ivf, get and
+    batch reads of the version run none. A write fills nothing, and
+    neither does a version's only read. Over the budget every read keeps
+    its Spark job count."""
+    from tests.conftest import counting_jobs, tier_bytes
 
     sc = spark.sparkContext
     st, ids, rng = _random_store(spark, n=80, dim=8, seed=9)
@@ -957,15 +960,18 @@ def test_driver_tier_reads_run_no_spark_job(spark):
             read()
         return n[0]
 
-    assert jobs(reads["ivf"]) == 1
+    assert jobs(reads["ivf"]) == 1 and st._held_serving()[3] is None
+    assert jobs(reads["brute"]) == 1 and st._held_serving()[3]
     assert {kind: jobs(read) for kind, read in reads.items()} == dict.fromkeys(reads, 0)
     st.update(ids[1], rng.normal(size=8).tolist())
     assert st._held_serving() is None            # the write filled nothing
     reads["get"]()
     assert st._held_serving() is None            # nor did a lookup
-    assert jobs(reads["brute"]) == 1 and jobs(reads["get"]) == 0
+    assert jobs(reads["brute"]) == 1 and jobs(reads["get"]) == 1
+    assert st._held_serving()[3] is None         # nor did the first read
+    assert jobs(reads["batch"]) == 1 and jobs(reads["get"]) == 0
 
-    with broadcast_threshold(spark, 1):          # every frame is over 1 byte
+    with tier_bytes(1):                          # not one row fits in 1 byte
         st.delete(ids[2])
         counts = {kind: jobs(read) for kind, read in reads.items()}
         assert st._held_serving()[3] is False
@@ -984,7 +990,49 @@ def test_driver_tier_leaves_null_elements_to_spark(spark):
     })
     st = VectorStore(spark, vector_dim=2)
     st.ingest(spark.createDataFrame(rows))
-    out = st.brute_force_search([1.0, 0.0], 2)
+    out = [st.brute_force_search([1.0, 0.0], 2) for _ in range(2)][1]
     assert st._held_serving()[3] is False
     assert [r["vector_id"] for r in out] == ["b", "a"]
     assert out[1]["similarity"] is None
+
+
+def test_driver_tier_budget_counts_collected_metadata(spark, tmp_path):
+    """The tier budget counts every byte the fill collects, not only the
+    vectors: rows whose vectors fit but whose metadata text does not stay
+    on Spark. That holds after a checkpoint too, where Spark's size
+    estimate is the compressed parquet size and lets the frame through,
+    so the collected table's own size decides. Either way the reads
+    answer exactly as the tier does under a budget they fit."""
+    from tests.conftest import tier_bytes
+    from vervectordb_spark.store import _row_frame
+
+    def estimate():
+        return int(st._serving()._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes())
+
+    rng = np.random.default_rng(11)
+    text = "lorem ipsum dolor sit amet " * 200      # ~5.4 KB a row
+    rows = [(f"m{i:03d}", rng.normal(size=4).tolist(), {"text": text})
+            for i in range(40)]
+    st = VectorStore(spark, vector_dim=4, db_path=str(tmp_path / "db"))
+    st.ingest(_row_frame(spark, *zip(*rows)))
+    q = [1.0, 0.0, 0.5, -0.5]
+    budget = 64 << 10        # the vectors are 40·4·8 B, the text ~216 KB
+
+    def reads():  # the version's second read is the one that fills
+        return [st.brute_force_search(q, 5) for _ in range(2)][1]
+
+    with tier_bytes(budget):
+        assert estimate() < budget
+        before = reads()
+        assert st._held_serving()[3] is False
+        st.checkpoint()
+        assert estimate() < budget
+        after = reads()
+        assert st._held_serving()[3] is False
+    with tier_bytes(1 << 20):
+        st.df = st.df
+        tier = reads()
+        assert st._held_serving()[3]
+    assert _exact(tier) == _exact(before) == _exact(after)
+    assert tier[0]["metadata"] == {"text": text}

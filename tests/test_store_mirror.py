@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from perfbench.mirror import Mirror
 from vervectordb_spark.functions.checkpoint import persistent_rdd_ids
 from vervectordb_spark.store import VectorStore
-from tests.conftest import broadcast_threshold
+from tests.conftest import tier_bytes
 from tests.test_store import nearest_cells
 
 DIM = 8
@@ -64,8 +64,8 @@ def _vec(rng):
 @pytest.mark.parametrize("seed", [1, 2])
 def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
                                             imi_fits, ann_fits, monkeypatch):
-    """The sequence runs twice, on the driver tier (the default threshold)
-    and with the tier off (threshold -1, every read on Spark): each run
+    """The sequence runs twice, on the driver tier (the default budget)
+    and with the tier off (budget 0, every read on Spark): each run
     agrees with the mirror, fits each index once, and both runs return
     identical results, step for step. The store's uuid4 ids are drawn
     from a seeded stream, so both runs hold the same ids (and so the
@@ -81,7 +81,7 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
     # each index was fitted by its first read alone, kept across writes
     assert [len(f) for f in fits] == [1, 1, 1]
     seeded_ids()
-    with broadcast_threshold(spark, -1):
+    with tier_bytes(0):
         off = _replay(spark, tmp_path / "off", seed, tier=False)
     assert [len(f) for f in fits] == [2, 2, 2]
     assert on == off

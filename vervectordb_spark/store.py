@@ -49,17 +49,20 @@ forks a Python worker for them.
 
 Driver tier: a version whose serving frame is small enough is also held
 on the driver, like the reference's one in-memory matrix
-(vervectordb/__init__.py:228,248): the first read of the version
-collects it once through Arrow (`_Matrix.collect`), and brute_force_search,
-ivf_search, batch_search and — once that read has filled it — get_by_id
-answer from NumPy with no Spark job. Scores are the same left folds in
+(vervectordb/__init__.py:228,248): the version's second read collects
+it once through Arrow (`_Matrix.collect`; the first read is Spark's, so
+a version read once never pays the collect), and from then on
+brute_force_search, ivf_search, batch_search and get_by_id answer from
+NumPy with no Spark job. Scores are the same left folds in
 float64 (functions.similarity.fold_scores) and the order is Spark's
 (score, then vec_id), so results are bit-identical to the Spark path.
 Reads with a Column predicate (pre_filter, filtered_search) stay on
-Spark. "Small enough" is spark.sql.autoBroadcastJoinThreshold, read at
-fill time (-1 turns the tier off).
+Spark. "Small enough" is the fixed driver budget `_TIER_BYTES`: the
+fill's peak — the collected Arrow table plus the float64 matrix — must
+fit in it (tools/tier_crossover.py measures where the tier stops
+paying).
 
-Scale: above that bound vectors never visit the driver. Only query
+Scale: above that budget vectors never visit the driver. Only query
 vectors, centroids (k×dim) and PQ codebooks (8×256×(dim/8)) are
 driver/broadcast state.
 """
@@ -141,6 +144,9 @@ def _over(index, **rows):
 
 #: scores held at once while a batch is scored on the driver tier
 _SCORE_BLOCK = 1 << 20
+#: driver budget of the serving tier: a version is held on the driver
+#: when the fill's peak (Arrow table plus float64 matrix) fits in it
+_TIER_BYTES = 32 << 20
 
 
 def _top(scores: np.ndarray, k: int, ascending: bool = False) -> np.ndarray:
@@ -175,22 +181,23 @@ class _Matrix:
     @classmethod
     def collect(cls, serving: DataFrame, dim: int) -> "_Matrix | None":
         """`serving` collected in one Arrow job, or None when it is over
-        the bound spark.sql.autoBroadcastJoinThreshold, read now (-1 turns
-        the tier off). The frame's optimized-plan size estimate must be
-        under it — Spark's own broadcast test, no job — and the collect is
-        limit(cap + 1) with cap = bound // (8·dim) rows, so a frame the
-        estimate undersized costs at most cap + 1 rows: that many rows
-        means over the bound. Null ids or vector elements and ragged
-        vectors, which the Spark folds score as NULL, also stay on
-        Spark."""
+        the driver budget `_TIER_BYTES` (read now). The fill's peak —
+        the collected Arrow table (ids, float32 vectors, metadata) plus
+        the float64 matrix built from it — must fit. Spark's size
+        estimate of the frame's optimized plan rejects a large frame
+        with no job; the collect is limit(cap + 1) with cap the rows
+        whose float64 vectors alone fit, so a frame the estimate
+        undersized (compressed parquet, metadata text) costs at most
+        cap + 1 rows, and its actual bytes decide. Null ids or vector
+        elements and ragged vectors, which the Spark folds score as
+        NULL, also stay on Spark."""
         import pyarrow.compute as pc
 
-        jspark = serving.sparkSession._jsparkSession
-        bound = jspark.sessionState().conf().autoBroadcastJoinThreshold()
-        if bound < 0 or int(serving._jdf.queryExecution().optimizedPlan()
-                            .stats().sizeInBytes()) > bound:
+        budget = _TIER_BYTES
+        cap = budget // (8 * max(dim, 1))
+        if cap == 0 or int(serving._jdf.queryExecution().optimizedPlan()
+                           .stats().sizeInBytes()) > budget:
             return None
-        cap = bound // (8 * max(dim, 1))
         cols = ["vec_id", "embedding", SS_COL, "metadata"] + (
             ["cluster_id"] if "cluster_id" in serving.columns else [])
         tbl = serving.select(*cols).limit(cap + 1).toArrow()
@@ -199,6 +206,7 @@ class _Matrix:
         vals = emb.flatten()
         if (tbl.num_rows > cap or ids.null_count or emb.null_count
                 or vals.null_count
+                or tbl.nbytes + 8 * dim * tbl.num_rows > budget
                 or pc.any(pc.not_equal(pc.list_value_length(emb), dim)).as_py()):
             return None
         ids = np.array(ids.to_pylist(), dtype=object)
@@ -247,7 +255,8 @@ class VectorStore:
         self._version = 0
         #: row-derived frames: name -> [version, fit, persisted frame,
         #: driver matrix]; the matrix slot is the serving frame's tier
-        #: (`_matrix`): None until a read asks, False over the bound
+        #: (`_matrix`): None until the version's second read asks, False
+        #: over the budget
         self._frames: dict[str, list] = {}
         #: blocks pinned by localCheckpoints that `df` reads (same-path
         #: save, ingest's uuid ids), released once the rows are on disk
@@ -330,12 +339,17 @@ class VectorStore:
 
     def _matrix(self) -> _Matrix | None:
         """The driver tier of the current version (under the current IVF
-        fit): the serving frame collected by the first read that asks,
-        None when the version is over the bound. Writes never fill it."""
-        serving = self._serving()
-        held = self._frames["serving"]
+        fit), or None. The version's first read is served by Spark and
+        builds the serving frame; a read that finds that frame built
+        collects it (None for good when the version is over the budget).
+        A fill costs more than one Spark top-k read, so a version that is
+        read once, as when every read follows a write, never pays it
+        (tools/tier_crossover.py). Writes never fill the tier."""
+        held = self._frames.get("serving")
+        if held is None or held[0] != self._version or held[1] is not self._ivf:
+            return None
         if held[3] is None:
-            held[3] = _Matrix.collect(serving, self.vector_dim) or False
+            held[3] = _Matrix.collect(held[2], self.vector_dim) or False
         return held[3] or None
 
     def _held_serving(self) -> list | None:
@@ -632,8 +646,8 @@ class VectorStore:
     ) -> list[list[dict]]:
         """Q6, actually batched: on the driver tier, the brute-force fold
         vectorized over all queries (each result equals that query's
-        brute_force_search); over the bound, one broadcast GEMM + top-k
-        job for ALL queries (the reference loops queries serially despite
+        brute_force_search); off it (a version's first read, or one over
+        the budget), one broadcast GEMM + top-k job for ALL queries (the reference loops queries serially despite
         its batch_size arg, vervectordb/__init__.py:524-534)."""
         self._check_rows(query_vectors)
         m = self._matrix()
