@@ -76,13 +76,14 @@ def _ms(fn):
 def run(spark, n, dim, reps, versions, work):
     from vervectordb_spark import store as store_mod
 
-    fills = []
+    last = []  # the latest fill only: older ones must be freed
     collect = store_mod._Matrix.collect.__func__
+    budget = store_mod._TIER_BYTES
 
     def recording(cls, serving, d):
         m = collect(cls, serving, d)
         if m is not None:
-            fills.append(m)
+            last[:] = [m]
         return m
 
     store_mod._Matrix.collect = classmethod(recording)
@@ -124,7 +125,7 @@ def run(spark, n, dim, reps, versions, work):
                          for k, v in ms[tier].items()}
             total = sum(len(v) for v in ms[tier].values())
             out[name]["tier_hits"] = f"{hits[tier]}/{total}"
-        m = fills[-1]
+        m = last[0]
         out["matrix_mb"] = round((m.xt.nbytes + m.metadata.nbytes) / 2**20, 1)
         # the Arrow table the fill collects, as _Matrix.collect selects it
         tbl = st._serving().select(
@@ -135,6 +136,7 @@ def run(spark, n, dim, reps, versions, work):
         return out
     finally:
         store_mod._Matrix.collect = classmethod(collect)
+        store_mod._TIER_BYTES = budget
 
 
 def main():

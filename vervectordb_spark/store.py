@@ -145,7 +145,9 @@ def _over(index, **rows):
 #: scores held at once while a batch is scored on the driver tier
 _SCORE_BLOCK = 1 << 20
 #: driver budget of the serving tier: a version is held on the driver
-#: when the fill's peak (Arrow table plus float64 matrix) fits in it
+#: when the fill's peak (Arrow table plus float64 matrix) fits in it.
+#: 32 MB is ~40k rows at dim 64, where a fill costs ~1.6 warm Spark
+#: reads (tools/tier_crossover.py; 2.2 at 128k rows)
 _TIER_BYTES = 32 << 20
 
 
