@@ -2,9 +2,11 @@
 (CRUD semantics from vervectordb/__init__.py:247-335, search :337-365)."""
 
 import math
+import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from vervectordb_spark.store import DimensionError, VectorStore
 
@@ -936,16 +938,25 @@ def test_batch_search_on_the_tier_equals_brute_force(spark):
             assert math.isclose(g["similarity"], w["similarity"], abs_tol=1e-6)
 
 
-def test_driver_tier_reads_run_no_spark_job(spark):
-    """The first read of a version runs on Spark; the second runs one job,
-    the Arrow collect that fills the tier; later brute, ivf, get and
-    batch reads of the version run none. A write fills nothing, and
-    neither does a version's only read. Over the budget every read keeps
-    its Spark job count."""
+def test_driver_tier_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
+    """Once a version's matrix is filled, writes carry it on:
+    batch_insert, update and delete run no Spark job, checkpoint() in
+    either form starts a version that has the matrix, and the next brute,
+    ivf, get and batch reads run none. A carried version's
+    filtered_search runs one job over the matrix's own rows. Every other
+    version starts from scratch with the counts a store without the carry
+    has: its first read runs on Spark, its second fills the tier in one
+    job, and later reads run none. That holds after merge, ingest, a
+    refit, a NaN insert and compress, and over the budget every read
+    keeps its Spark job count. A NaN insert returns its ids with no job
+    and no cluster predict."""
     from tests.conftest import counting_jobs, tier_bytes
+    from vervectordb_spark.operators.ivf import IVFIndex
+    from vervectordb_spark.store import _row_frame
 
     sc = spark.sparkContext
-    st, ids, rng = _random_store(spark, n=80, dim=8, seed=9)
+    st, ids, rng = _random_store(spark, db_path=str(tmp_path / "db"),
+                                 n=80, dim=8, seed=9)
     st.build_ivf_index(n_clusters=4)
     q = rng.normal(size=8).tolist()
     reads = {
@@ -954,28 +965,96 @@ def test_driver_tier_reads_run_no_spark_job(spark):
         "get": lambda: st.get_by_id(ids[0]),
         "batch": lambda: st.batch_search([q, q], 5),
     }
+    none = dict.fromkeys(reads, 0)
+    assigns = []
+    assign = IVFIndex.assign
+    monkeypatch.setattr(IVFIndex, "assign", lambda index, df: (
+        assigns.append(df), assign(index, df))[1])
 
-    def jobs(read):
+    def jobs(call):
         with counting_jobs(sc) as n:
-            read()
+            call()
         return n[0]
 
-    assert jobs(reads["ivf"]) == 1 and st._held_serving()[3] is None
-    assert jobs(reads["brute"]) == 1 and st._held_serving()[3]
-    assert {kind: jobs(read) for kind, read in reads.items()} == dict.fromkeys(reads, 0)
-    st.update(ids[1], rng.normal(size=8).tolist())
-    assert st._held_serving() is None            # the write filled nothing
-    reads["get"]()
-    assert st._held_serving() is None            # nor did a lookup
-    assert jobs(reads["brute"]) == 1 and jobs(reads["get"]) == 1
-    assert st._held_serving()[3] is None         # nor did the first read
-    assert jobs(reads["batch"]) == 1 and jobs(reads["get"]) == 0
+    def warm():
+        return {kind: jobs(read) for kind, read in reads.items()}
+
+    def matrix():
+        """The matrix slot of the current version under the current fit
+        (None: no entry yet)."""
+        held = st._frames.get("serving")
+        return held[3] if held is not None and held[0] == st._version \
+            and held[1] is st._ivf else None
+
+    def from_scratch(first=1):
+        """The counts without a carry: `first` jobs for the Spark read
+        (4 once merge's anti-join shuffle is in the lineage: AQE runs
+        each shuffle stage as a job), 1 for the fill, then none."""
+        assert matrix() is None
+        assert jobs(reads["ivf"]) == first and matrix() is None
+        assert jobs(reads["brute"]) == 1 and matrix()
+        assert warm() == none
+
+    def vec():
+        return rng.normal(size=8).tolist()
+
+    from_scratch()
+    assert jobs(lambda: st.batch_insert([vec() for _ in range(3)])) == 0
+    assert matrix() and warm() == none
+    assert jobs(lambda: st.update(ids[1], vec())) == 0 and warm() == none
+    assert jobs(lambda: st.update(ids[1], new_metadata={"k": "v"})) == 0
+    assert jobs(lambda: st.delete(ids[2])) == 0 and warm() == none
+    for versioned in (False, True):
+        st.checkpoint(versioned=versioned)
+        assert matrix() and warm() == none
+    assert jobs(lambda: st.filtered_search(
+        q, 5, metadata_filter=F.col("vec_id") != ids[3])) == 1
+    assert warm() == none
 
     with tier_bytes(1):                          # not one row fits in 1 byte
-        st.delete(ids[2])
-        counts = {kind: jobs(read) for kind, read in reads.items()}
-        assert st._held_serving()[3] is False
+        st.delete(ids[4])
+        counts = warm()
+        assert matrix() is False
     assert counts == {"brute": 1, "ivf": 1, "get": 1, "batch": 2}
+
+    st.merge(_row_frame(spark, [ids[5], "m-new"], [vec(), vec()], [None, None]))
+    from_scratch(4)
+    st.ingest(_row_frame(spark, ["i-new"], [vec()], [None]))
+    from_scratch(4)
+    st.build_ivf_index(n_clusters=3)
+    from_scratch(4)
+
+    assigns.clear()
+    st.batch_insert([vec()])
+    assert matrix() and len(assigns) == 1       # the new row's cluster
+    with counting_jobs(sc) as n:
+        nan_ids = st.batch_insert([[float("nan")] + vec()[1:]])
+    assert n == [0] and len(nan_ids) == 1 and len(assigns) == 1
+    st.delete(nan_ids[0])
+    from_scratch(4)
+
+    st.train_pq(n_subquantizers=2, n_bits=2)
+    st.compress()
+    from_scratch(4)
+    st.batch_insert([vec()])                     # the store frame has pq_code
+    from_scratch(4)
+
+
+def test_checkpoint_rows_sit_under_a_listed_leaf(spark, tmp_path):
+    """checkpoint() writes the rows to {db_path}/_checkpoint/rows. Spark's
+    file index skips a root path whose own name starts with "_", so the
+    re-read of a `_checkpoint` root would rely on a path Spark ignores;
+    under the `rows` leaf it lists the files just written."""
+    from urllib.parse import urlparse
+
+    st, ids, _ = _random_store(spark, db_path=str(tmp_path / "db"), n=20)
+    for vid in ids[:2]:
+        st.delete(vid)
+        st.checkpoint()
+        files = st.df.inputFiles()
+        assert files and {os.path.dirname(urlparse(f).path) for f in files} \
+            == {str(tmp_path / "db" / "_checkpoint" / "rows")}
+    assert st.df.count() == 18
 
 
 def test_driver_tier_leaves_null_elements_to_spark(spark):

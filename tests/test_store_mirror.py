@@ -1,10 +1,13 @@
 """VectorStore under random op sequences, checked against a NumPy mirror.
 
-Each step runs one facade call (insert, update, delete, checkpoint,
-brute/filtered/IVF/IMI/ANN search, get_by_id) on the store and the same
-write on perfbench's Mirror of the live rows; at two fixed steps the
-store takes a versioned checkpoint and later restores it, and the mirror
-rolls back with it. After every step it asserts:
+Each step runs one facade call (insert, update, delete, merge, ingest,
+checkpoint, brute/filtered/IVF/IMI/ANN/batch search, get_by_id) on the
+store and the same write on perfbench's Mirror of the live rows: merge
+is an upsert, ingest with vec_id an append. At two fixed steps the store
+takes a versioned checkpoint and later restores it, and the mirror rolls
+back with it; at fixed steps in between it takes two versioned
+checkpoints in a row, and after the restore it is saved to another path
+and loaded from there (the identity). After every step it asserts:
 
   * no deleted row and no stale vector is served (every returned row is
     live and carries the similarity of its CURRENT vector; get_by_id
@@ -18,14 +21,19 @@ rolls back with it. After every step it asserts:
     versions — at most one frame per row-derived structure in use (the
     serving frame, the IMI cells, the ANN featurized rows) — and the store
     holds at most one driver matrix, dropping the one a newer version
-    replaces.
+    replaces;
+  * a matrix a write carried on to a version equals, bit for bit, the
+    one a fill of that version's rows would collect.
 
 The whole sequence runs with the driver tier on and off, and both runs
-must serve identical results.
+must serve identical results. Writes carry the tier's matrix from version
+to version, so on the tier most reads after a write never touch Spark;
+merge, ingest, the restore and the load start a version from scratch.
 """
 
 import copy
 import random
+import types
 import uuid
 import weakref
 
@@ -34,8 +42,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from perfbench.mirror import Mirror
+from vervectordb_spark import store as store_module
 from vervectordb_spark.functions.checkpoint import persistent_rdd_ids
-from vervectordb_spark.store import VectorStore
+from vervectordb_spark.functions.similarity import SS_COL, self_dot_expr
+from vervectordb_spark.store import VectorStore, _Matrix, _row_frame
 from tests.conftest import tier_bytes
 from tests.test_store import nearest_cells
 
@@ -43,18 +53,24 @@ DIM = 8
 N_BASE = 120
 LABELS = 3
 TOP_K = 5
-OPS = ("insert", "update", "delete", "checkpoint", "brute", "filtered",
-       "ivf", "imi", "ann", "get")
+OPS = ("insert", "update", "delete", "merge", "ingest", "checkpoint",
+       "brute", "filtered", "ivf", "imi", "ann", "batch", "get")
 #: draw weights: reads dominate, like serving
-WEIGHTS = np.array([3, 3, 3, 1, 3, 3, 3, 2, 2, 3], dtype=float)
+WEIGHTS = np.array([3, 3, 3, 1, 1, 1, 3, 3, 3, 2, 2, 2, 3], dtype=float)
 #: the steps that take a versioned checkpoint and restore it
 SNAPSHOT, RESTORE = 8, 20
-#: steps whose read kind is fixed, so every index serves across writes
-#: and across the restore whatever the draw
-FORCED = {4: "imi", 6: "ann", 22: "imi", 24: "ann"}
+STEPS = 32
+#: steps whose op is fixed, so every index serves across writes, the
+#: restore and the load, and every op that ends or keeps a carry runs,
+#: whatever the draw; "versioned" takes two
+#: versioned checkpoints in a row, "reload" saves the store to another
+#: path and loads it from there
+FORCED = {3: "ivf", 4: "imi", 6: "ann", 10: "merge", 12: "batch",
+          14: "versioned", 17: "ingest", 22: "imi", 24: "ann", 26: "reload",
+          27: "ivf", 30: "batch"}
 #: the row-derived frame each read kind fills
 FRAME_OF = {"brute": "serving", "filtered": "serving", "ivf": "serving",
-            "imi": "imi", "ann": "ann"}
+            "batch": "serving", "imi": "imi", "ann": "ann"}
 
 
 def _vec(rng):
@@ -69,11 +85,13 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
     agrees with the mirror, fits each index once, and both runs return
     identical results, step for step. The store's uuid4 ids are drawn
     from a seeded stream, so both runs hold the same ids (and so the
-    same id-drawn index fits)."""
+    same id-drawn index fits). Only the store module's uuid is replaced:
+    other uuid4 callers (pyspark.ml draws one per Params class the first
+    time it is imported) must not shift the stream of one run."""
     def seeded_ids():
         draw = random.Random(seed)
-        monkeypatch.setattr(uuid, "uuid4", lambda: uuid.UUID(
-            int=draw.getrandbits(128), version=4))
+        monkeypatch.setattr(store_module, "uuid", types.SimpleNamespace(
+            uuid4=lambda: uuid.UUID(int=draw.getrandbits(128), version=4)))
 
     fits = (ivf_fits, imi_fits, ann_fits)
     seeded_ids()
@@ -85,6 +103,25 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
         off = _replay(spark, tmp_path / "off", seed, tier=False)
     assert [len(f) for f in fits] == [2, 2, 2]
     assert on == off
+
+
+def _fill(store):
+    """The driver matrix a fill of the store's current version collects,
+    from a serving frame built over its rows the Spark way."""
+    rows = store.df if store._ivf is None else store._ivf.assign(store.df)
+    return _Matrix.collect(rows.withColumn(SS_COL, self_dot_expr("embedding")),
+                           store.vector_dim)
+
+
+def _same_matrix(a, b):
+    """Same rows in the same order: ids, vector and self-dot bits, cluster
+    ids and metadata."""
+    return (b is not None and list(a.ids) == list(b.ids)
+            and np.array_equal(a.xt, b.xt) and np.array_equal(a.ss, b.ss)
+            and (a.cluster_id is None) == (b.cluster_id is None)
+            and (a.cluster_id is None
+                 or np.array_equal(a.cluster_id, b.cluster_id))
+            and a.metadata.to_pylist() == b.metadata.to_pylist())
 
 
 def _replay(spark, path, seed, tier):
@@ -111,7 +148,14 @@ def _replay(spark, path, seed, tier):
     def ids_sims(out):
         return [r["vector_id"] for r in out], [r["similarity"] for r in out]
 
-    for step in range(30):
+    def rows(vec_ids, labs):
+        """Store rows with fresh vectors under `vec_ids`, as the Arrow
+        LocalRelation a bulk write reads."""
+        vecs = [_vec(rng) for _ in vec_ids]
+        return vecs, _row_frame(spark, vec_ids, vecs, [
+            {"label": str(int(lab))} for lab in labs])
+
+    for step in range(STEPS):
         op = OPS[rng.choice(len(OPS), p=WEIGHTS / WEIGHTS.sum())]
         op = FORCED.get(step, op)
         where = f"seed {seed} step {step} ({op}, tier {tier})"
@@ -138,13 +182,52 @@ def _replay(spark, path, seed, tier):
             mirror.delete(vid)
             with pytest.raises(KeyError):
                 store.get_by_id(vid)
+        elif op == "merge":
+            # an upsert: live rows replaced (their label kept), new appended
+            old = list(dict.fromkeys(live_id() for _ in range(2)))
+            new = [f"m{step}-{i}" for i in range(int(rng.integers(1, 3)))]
+            labs = [mirror.labels[mirror.pos[v]] for v in old] + \
+                list(rng.integers(0, LABELS, len(new)))
+            vecs, src = rows(old + new, labs)
+            store.merge(src)
+            for vid, v in zip(old, vecs):
+                mirror.update(vid, v)
+            mirror.insert(new, vecs[len(old):], labs[len(old):])
+        elif op == "ingest":
+            new = [f"g{step}-{i}" for i in range(int(rng.integers(1, 4)))]
+            labs = rng.integers(0, LABELS, len(new))
+            vecs, src = rows(new, labs)
+            store.ingest(src)
+            mirror.insert(new, vecs, labs)
         elif op == "checkpoint":
             store.checkpoint()
+        elif op == "versioned":
+            store.checkpoint(versioned=True)
+            store.checkpoint(versioned=True)
+        elif op == "reload":
+            old = store
+            store.save(str(path / "copy"))
+            store = VectorStore.load(spark, str(path / "copy"), DIM)
+            # the dropped store's persisted frames are its owner's to free
+            for held in old._frames.values():
+                if held[2] is not None:
+                    held[2].unpersist()
+            del old
         elif op == "get":
             vid = live_id()
             got = store.get_by_id(vid)
             assert mirror.check_row(vid, got), where
             transcript.append(got)
+        elif op == "batch":
+            qs = [_vec(rng) for _ in range(3)]
+            out = store.batch_search(qs, TOP_K)
+            for q, res in zip(qs, out):
+                assert mirror.check_topk(*ids_sims(res), q, TOP_K), where
+            # off the tier the GEMM kernel's scores agree within 1e-6, not
+            # bit for bit: the transcript keeps the ids
+            transcript.append([ids_sims(res)[0] for res in out])
+            versions.add(store._version)
+            in_use.add(FRAME_OF[op])
         else:
             q = _vec(rng)
             if op == "brute":
@@ -178,6 +261,10 @@ def _replay(spark, path, seed, tier):
             transcript.append(out)
             versions.add(store._version)
             in_use.add(FRAME_OF[op])
+        held = store._frames.get("serving")
+        if held is not None and held[0] == store._version and held[2] is None:
+            # a matrix a write carried on: exactly what a fill collects
+            assert _same_matrix(held[3], _fill(store)), where
         # at most ONE frame per row-derived structure in use, whatever
         # the version count
         assert len(persistent_rdd_ids(sc) - baseline) <= len(in_use), where

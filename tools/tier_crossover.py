@@ -5,22 +5,30 @@ clusters) and then runs versions in pairs: a one-row batch_insert starts
 a version, whose reads run with the tier (the driver budget
 `store._TIER_BYTES` raised so every size fits) or without it (budget 0,
 every read on Spark), the two sides alternating version by version so
-drift and warm-up favour neither. Each version is read three ways:
+drift and warm-up favour neither. Each version is read three ways, then
+written:
 
   first    its first brute_force_search, a Spark top-k job on both
-           sides. A workload that writes before every read pays only
-           this;
+           sides: the version before it was the other side's, so it
+           starts from scratch, as after a merge or a load;
   second   its second brute_force_search: on the tier the fill (a full
            Arrow collect of the cached serving frame), on Spark a warm
            top-k job;
   warm     then brute_force_search, ivf_search (nprobe 2), get_by_id and
            batch_search(32), `--reps` each: what a workload that reads a
-           version many times pays per read.
+           version many times pays per read;
+  delta    then one batch_insert of 16 rows, one update and one delete:
+           on the tier each carries the version's driver matrix on to the
+           next version (its cluster assign, the matrix edit and the size
+           check), on Spark each only extends the lineage. Set next to
+           `second` (one fill), this is what the carry saves a version
+           that would otherwise fill again.
 
 Prints one JSON line per size: per side, the median of each kind of read
-in ms; tier hits (reads answered from the driver matrix) of all reads;
-the fill's peak bytes (the collected Arrow table plus the float64
-matrix, what the budget counts) and the driver Python process's RSS.
+and write in ms; tier hits (reads answered from the driver matrix) of
+all reads; the fill's peak bytes (the collected Arrow table plus the
+float64 matrix, what the budget counts) and the driver Python process's
+RSS.
 
 Run from the repository root:
 
@@ -105,7 +113,14 @@ def run(spark, n, dim, reps, versions, work):
             "get": lambda: st.get_by_id(ids[n // 2]),
             "batch32": lambda: st.batch_search(qs, 10),
         }
-        ms = {side: {k: [] for k in ("first", "second", *reads)}
+        writes = {
+            "insert16": lambda v: st.batch_insert(
+                rng.standard_normal((16, dim)).tolist()),
+            "update": lambda v: st.update(ids[n // 3 + v],
+                                          rng.standard_normal(dim).tolist()),
+            "delete": lambda v: st.delete(ids[n // 4 + v]),
+        }
+        ms = {side: {k: [] for k in ("first", "second", *reads, *writes)}
               for side in (0, 1)}
         hits = {0: 0, 1: 0}
         for v in range(versions):
@@ -117,13 +132,18 @@ def run(spark, n, dim, reps, versions, work):
             for _ in range(reps):
                 for kind, read in reads.items():
                     ms[tier][kind].append(_ms(read))
-            held = st._held_serving()[3]
+            held = st._frames["serving"][3]
             hits[tier] += (len(reads) * reps) if held else 0
+            for kind, write in writes.items():
+                ms[tier][kind].append(_ms(lambda: write(v)))
+            held = st._frames["serving"]
+            # on the tier every write carried the matrix on
+            assert not tier or (held[0] == st._version and held[3])
         out = {"n": n, "dim": dim, "versions_per_side": versions // 2}
         for tier, name in ((0, "spark"), (1, "tier")):
             out[name] = {k: round(statistics.median(v), 2)
                          for k, v in ms[tier].items()}
-            total = sum(len(v) for v in ms[tier].values())
+            total = sum(len(ms[tier][k]) for k in ("first", "second", *reads))
             out[name]["tier_hits"] = f"{hits[tier]}/{total}"
         m = last[0]
         out["matrix_mb"] = round((m.xt.nbytes + m.metadata.nbytes) / 2**20, 1)

@@ -43,24 +43,36 @@ Serving: brute_force_search, filtered_search, ivf_search and batch_search
 read the version's serving frame — the store rows plus their self-dot
 (and, with an IVF index, their cluster_id). Every later read of the
 version scans cached columns instead of replaying the write lineage, the
-per-row norm fold and the cluster predict. Writes never fill a frame.
-Written rows travel as one Arrow table (a LocalRelation), so no read
-forks a Python worker for them.
+per-row norm fold and the cluster predict. Written rows travel as one
+Arrow table (a LocalRelation), so no read forks a Python worker for them.
 
 Driver tier: a version whose serving frame is small enough is also held
 on the driver, like the reference's one in-memory matrix
-(vervectordb/__init__.py:228,248): the version's second read collects
-it once through Arrow (`_Matrix.collect`; the first read is Spark's, so
-a version read once never pays the collect), and from then on
-brute_force_search, ivf_search, batch_search and get_by_id answer from
-NumPy with no Spark job. Scores are the same left folds in
-float64 (functions.similarity.fold_scores) and the order is Spark's
-(score, then vec_id), so results are bit-identical to the Spark path.
+(vervectordb/__init__.py:228,248), and brute_force_search, ivf_search,
+batch_search and get_by_id answer from NumPy with no Spark job. Scores
+are the same left folds in float64 (functions.similarity.fold_scores)
+and the order is Spark's (score, then vec_id), so results are
+bit-identical to the Spark path. A version gets its matrix one of two
+ways:
+
+  * CARRIED — insert/batch_insert, update, delete and checkpoint() hand
+    the current version's matrix on to the next one, edited the way the
+    reference edits its matrix (vervectordb/__init__.py:247-267,311-322):
+    minus the touched ids, plus the written rows, with their self-dot
+    and IVF cluster_id computed on the driver (`_write`). No write runs
+    a Spark job for it, so the reads after a write stay on the driver.
+  * FILLED — every other version (after ingest, merge, restore_version,
+    load, a refit, a codec column, a non-finite written vector) starts
+    from scratch: its first read is Spark's, and its second collects the
+    serving frame once through Arrow (`_Matrix.collect`), so a version
+    read once never pays the collect.
+
 Reads with a Column predicate (pre_filter, filtered_search) stay on
-Spark. "Small enough" is the fixed driver budget `_TIER_BYTES`: the
-fill's peak — the collected Arrow table plus the float64 matrix — must
-fit in it (tools/tier_crossover.py measures where the tier stops
-paying).
+Spark; on a carried version their serving frame is the matrix's own
+rows as one LocalRelation. "Small enough" is the fixed driver budget
+`_TIER_BYTES`, checked at every fill and every carry: the fill's peak —
+the collected Arrow table plus the float64 matrix — must fit in it
+(tools/tier_crossover.py measures where the tier stops paying).
 
 Scale: above that budget vectors never visit the driver. Only query
 vectors, centroids (k×dim) and PQ codebooks (8×256×(dim/8)) are
@@ -80,7 +92,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vervectordb_spark.functions.similarity import (
-    SS_COL, fold_scores, self_dot_expr)
+    SS_COL, fold_scores, self_dot, self_dot_expr)
 from vervectordb_spark.operators import search as _search
 
 _ROW_SCHEMA = T.StructType(
@@ -97,27 +109,39 @@ _QUERY_SCHEMA = T.StructType([
 
 
 def _local_frame(spark: SparkSession, schema: T.StructType,
-                 columns: dict) -> DataFrame:
-    """Driver-side column lists as ONE Arrow table. Spark plans it as a
-    LocalRelation; a list of rows instead goes through parallelize into a
-    PythonRDD, which forks Python workers on every later read of any
-    frame built over it. Arrow's double→float conversion rounds to
-    nearest like the JVM cast, so float columns store the same values."""
+                 columns) -> DataFrame:
+    """Driver-side columns (a dict of lists, or an Arrow table) as ONE
+    Arrow table. Spark plans it as a LocalRelation; a list of rows
+    instead goes through parallelize into a PythonRDD, which forks Python
+    workers on every later read of any frame built over it. Arrow's
+    double→float conversion rounds to nearest like the JVM cast, so float
+    columns store the same values."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    return spark.createDataFrame(
-        pa.table(columns, schema=to_arrow_schema(schema)), schema)
+    arrow = to_arrow_schema(schema)
+    table = (columns.cast(arrow) if isinstance(columns, pa.Table)
+             else pa.table(columns, schema=arrow))
+    return spark.createDataFrame(table, schema)
 
 
-def _row_frame(spark: SparkSession, ids, vectors, metas) -> DataFrame:
-    """Store rows (_ROW_SCHEMA) from ids, vectors and metadata dicts."""
-    return _local_frame(spark, _ROW_SCHEMA, {
+def _row_table(ids, vectors, metas):
+    """Store rows (_ROW_SCHEMA) from ids, vectors and metadata dicts, as
+    the Arrow table `_row_frame` hands to Spark."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.table({
         "vec_id": list(ids),
         "embedding": [[float(x) for x in v] for v in vectors],
         "metadata": [[(str(k), str(val)) for k, val in (m or {}).items()]
                      for m in metas],
-    })
+    }, schema=to_arrow_schema(_ROW_SCHEMA))
+
+
+def _row_frame(spark: SparkSession, ids, vectors, metas) -> DataFrame:
+    """Store rows (_ROW_SCHEMA) from ids, vectors and metadata dicts."""
+    return _local_frame(spark, _ROW_SCHEMA, _row_table(ids, vectors, metas))
 
 
 def _has_row(df: DataFrame) -> bool:
@@ -173,11 +197,13 @@ class _Matrix:
     in NumPy — vec_id, the float32 embeddings as a float64 matrix (one row
     vector per column, so the fold reads each dimension contiguously),
     the row self-dot, cluster_id (with an IVF index) and the raw Arrow
-    metadata column. Rows are sorted by vec_id, Spark's tie-break."""
+    metadata column, plus the serving frame's schema. Rows are sorted by
+    vec_id, Spark's tie-break."""
 
-    def __init__(self, ids, xt, ss, cluster_id, metadata):
+    def __init__(self, ids, xt, ss, cluster_id, metadata, schema):
         self.ids, self.xt, self.ss = ids, xt, ss
         self.cluster_id, self.metadata = cluster_id, metadata
+        self.schema = schema
         self._pos: dict | None = None
 
     @classmethod
@@ -218,7 +244,78 @@ class _Matrix:
                    if "cluster_id" in cols else None)
         return cls(ids[order], np.ascontiguousarray(x.T, dtype=np.float64),
                    tbl.column(SS_COL).to_numpy()[order], cluster,
-                   tbl.column("metadata").combine_chunks().take(order))
+                   tbl.column("metadata").combine_chunks().take(order),
+                   serving.schema)
+
+    @property
+    def nbytes(self) -> int:
+        """What a fill of these rows would hold at its peak, the budget's
+        measure (`collect`): the Arrow table — ids (by their length),
+        float32 vectors, self-dot, metadata, cluster_id — plus the float64
+        matrix."""
+        dim, n = self.xt.shape
+        return (sum(map(len, self.ids)) + 8 * (n + 1) + 12 * dim * n + 8 * n
+                + self.metadata.nbytes
+                + (0 if self.cluster_id is None else 4 * n))
+
+    @property
+    def complete(self) -> bool:
+        """Whether the matrix holds every column of its serving frame (a
+        store frame with codec columns has more)."""
+        return set(self.schema.names) <= {
+            "vec_id", "embedding", "metadata", "cluster_id", SS_COL}
+
+    def apply(self, drop: Sequence[str], rows=None, x=None,
+              cluster=None) -> "_Matrix":
+        """The matrix of the next store version: these rows minus every
+        row whose id is in `drop`, plus `rows` (an Arrow table of
+        _ROW_SCHEMA) with float32 vectors `x` (rows × dim) and, with an
+        IVF index, cluster ids `cluster`, kept sorted by vec_id. The new
+        self-dots are similarity.self_dot's left fold, the value the Spark
+        frame's SS_COL holds."""
+        import pyarrow as pa
+
+        keep = np.ones(len(self.ids), dtype=bool)
+        for vec_id in drop:
+            keep &= self.ids != vec_id
+        ids, xt, ss = self.ids[keep], self.xt[:, keep], self.ss[keep]
+        cid = None if self.cluster_id is None else self.cluster_id[keep]
+        meta = self.metadata.filter(pa.array(keep))
+        if rows is not None:
+            ids = np.concatenate([ids, np.array(
+                rows.column("vec_id").to_pylist(), dtype=object)])
+            order = np.argsort(ids, kind="stable")
+            ids = ids[order]
+            xt = np.concatenate([xt, x.T], axis=1)[:, order]
+            ss = np.concatenate([ss, [self_dot(v) for v in x]])[order]
+            if cid is not None:
+                cid = np.concatenate([cid, cluster])[order]
+            meta = pa.concat_arrays([meta, rows.column("metadata")
+                                     .combine_chunks().cast(meta.type)]
+                                    ).take(pa.array(order))
+        return _Matrix(ids, np.ascontiguousarray(xt, dtype=np.float64), ss,
+                       cid, meta, self.schema)
+
+    def frame(self, spark: SparkSession) -> DataFrame:
+        """The serving frame these rows stand for, built from the held
+        columns as one Arrow LocalRelation with the serving schema — no
+        replay of the store lineage and no cluster assignment."""
+        import pyarrow as pa
+
+        dim, n = self.xt.shape
+        cols = {
+            "vec_id": pa.array(self.ids.tolist(), pa.string()),
+            "embedding": pa.ListArray.from_arrays(
+                pa.array(np.arange(0, n * dim + 1, dim, dtype=np.int32)),
+                pa.array(self.xt.T.astype(np.float32).ravel())),
+            "metadata": self.metadata,
+            SS_COL: pa.array(self.ss),
+        }
+        if self.cluster_id is not None:
+            cols["cluster_id"] = pa.array(self.cluster_id, pa.int32())
+        names = self.schema.names
+        return _local_frame(spark, self.schema,
+                            pa.table([cols[c] for c in names], names=names))
 
     def topk(self, queries, k: int, metric: str = "cosine",
              rows: np.ndarray | None = None) -> list[tuple]:
@@ -308,11 +405,16 @@ class VectorStore:
         `fit`: `build()`, persisted when the first read of the version
         asks for it and reused by every later one. The entry it replaces
         (an older version's, or another fit's) goes whole: its frame is
-        unpersisted and its driver matrix, if any, dropped."""
+        unpersisted and its driver matrix, if any, dropped. A serving
+        entry a write carried on has a matrix and no frame yet: its frame
+        is the matrix's own rows (`_Matrix.frame`)."""
         held = self._frames.get(name)
         if held is not None and held[0] == self._version and held[1] is fit:
+            if held[2] is None:
+                held[2] = held[3].frame(self.spark).persist(
+                    StorageLevel.MEMORY_AND_DISK)
             return held[2]
-        if held is not None:
+        if held is not None and held[2] is not None:
             held[2].unpersist()
         frame = build().persist(StorageLevel.MEMORY_AND_DISK)
         self._frames[name] = [self._version, fit, frame, None]
@@ -341,18 +443,77 @@ class VectorStore:
 
     def _matrix(self) -> _Matrix | None:
         """The driver tier of the current version (under the current IVF
-        fit), or None. The version's first read is served by Spark and
-        builds the serving frame; a read that finds that frame built
-        collects it (None for good when the version is over the budget).
-        A fill costs more than one Spark top-k read, so a version that is
-        read once, as when every read follows a write, never pays it
-        (tools/tier_crossover.py). Writes never fill the tier."""
+        fit), or None. A version a write carried the tier on to has its
+        matrix from the start (`_write`). Any other version's first read
+        is served by Spark and builds the serving frame; a read that finds
+        that frame built collects it (None for good when the version is
+        over the budget). A fill costs more than one Spark top-k read, so
+        a version that is read once never pays it
+        (tools/tier_crossover.py)."""
         held = self._frames.get("serving")
         if held is None or held[0] != self._version or held[1] is not self._ivf:
             return None
         if held[3] is None:
             held[3] = _Matrix.collect(held[2], self.vector_dim) or False
         return held[3] or None
+
+    def _write(self, drop: Sequence[str] = (), rows=None) -> None:
+        """The copy-on-write edit behind insert, update and delete: a new
+        version whose rows are the current ones minus every row whose id
+        is in `drop`, plus `rows` (an Arrow table of _ROW_SCHEMA). When
+        the current version holds a complete driver matrix under the
+        current IVF fit, the new version gets that matrix with the same
+        edit — the reference's in-place vstack and row edits — and runs
+        no Spark job: the new rows' cluster_id comes from
+        `IVFIndex.assign` over their LocalRelation, which Spark evaluates
+        while planning the collect. A written vector with a non-finite
+        element starts the version from scratch (MLlib's predict fails on
+        it), as does a matrix over the budget."""
+        df = self.df
+        for vec_id in drop:
+            df = df.filter(F.col("vec_id") != vec_id)
+        if rows is not None:
+            new = _local_frame(self.spark, _ROW_SCHEMA, rows)
+            # allowMissingColumns: after compress() the store carries
+            # pq_code; new rows land with NULL codes (encode again to
+            # fill them)
+            df = df.unionByName(new, allowMissingColumns=True)
+        m = self._carried()
+        self.df = df
+        if m is None:
+            return
+        x = cluster = None
+        if rows is not None:
+            x = (rows.column("embedding").combine_chunks().flatten()
+                 .to_numpy(zero_copy_only=False).reshape(-1, self.vector_dim))
+            if not np.isfinite(x).all():
+                return
+            if self._ivf is not None:
+                cluster = np.array([r[0] for r in self._ivf.assign(new)
+                                    .select("cluster_id").collect()], np.int32)
+        self._carry(m.apply(drop, rows, x, cluster))
+
+    def _carried(self) -> _Matrix | None:
+        """The current version's driver matrix, filled or carried under
+        the current IVF fit, when it can be handed on to the next version:
+        it holds every column of the serving frame. Never a fill."""
+        held = self._frames.get("serving")
+        if (held is None or held[0] != self._version
+                or held[1] is not self._ivf or not held[3]):
+            return None
+        return held[3] if held[3].complete else None
+
+    def _carry(self, m: _Matrix) -> None:
+        """Make `m` the driver matrix of the current version, under the
+        current IVF fit, when it fits the budget; the entry it replaces
+        goes whole. The serving frame is built from it only when a Spark
+        read asks (`_derived`)."""
+        if m.nbytes > _TIER_BYTES:
+            return
+        held = self._frames.get("serving")
+        if held is not None and held[2] is not None:
+            held[2].unpersist()
+        self._frames["serving"] = [self._version, self._ivf, None, m]
 
     def _held_serving(self) -> list | None:
         """The serving entry a read of the current version already made
@@ -386,11 +547,8 @@ class VectorStore:
         100 TB shape is `write.mode('append')` on a partitioned table."""
         self._check_rows(vectors)
         ids = [str(uuid.uuid4()) for _ in vectors]
-        new = _row_frame(self.spark, ids, vectors,
-                         metadatas or [None] * len(vectors))
-        # allowMissingColumns: after compress() the store carries pq_code;
-        # new rows land with NULL codes (encode again to fill them)
-        self.df = self.df.unionByName(new, allowMissingColumns=True)
+        self._write(rows=_row_table(ids, vectors,
+                                    metadatas or [None] * len(vectors)))
         return ids
 
     def ingest(self, df: DataFrame, emb_col: str = "embedding") -> None:
@@ -436,9 +594,10 @@ class VectorStore:
         back to the live frame, where the equality predicate still
         row-group-skips via pushdown. A serving frame that a read of
         this version already made beats both: the probe filters cached
-        rows, and it is never a fill (update() looks ids up between
-        writes). get_by_id asks only when that frame has no driver
-        matrix."""
+        rows, and it is never a fill. get_by_id asks only when the
+        version has no driver matrix: the tier is off or over the
+        budget, or the version started from scratch and no read filled
+        it yet."""
         import os as _os
 
         from vervectordb_spark.sources.layout import STATS_FILE, pruned_scan
@@ -456,9 +615,10 @@ class VectorStore:
     def get_by_id(self, vec_id: str) -> dict:
         """P1: id → {vector_id, vector, metadata}; KeyError if absent
         (reference vervectordb/__init__.py:301-309). Answered from the
-        driver matrix when a read of this version already filled it —
-        never a fill, so update()'s lookup runs no collect — else by a
-        point probe of `_point_frame`."""
+        version's driver matrix when a write carried one on to it or a
+        read filled it — so update()'s lookup after a write runs no Spark
+        job — else by a point probe of `_point_frame`; a lookup never
+        fills the tier."""
         held = self._held_serving()
         if held is not None and held[3]:
             return held[3].row(vec_id)
@@ -485,17 +645,14 @@ class VectorStore:
         if new_vector is not None:
             self._check_rows([new_vector])
         old = self.get_by_id(vec_id)  # KeyError if absent, like the reference
-        replacement = _row_frame(
-            self.spark, [vec_id],
+        self._write(drop=[vec_id], rows=_row_table(
+            [vec_id],
             [new_vector if new_vector is not None else old["vector"]],
-            [new_metadata if new_metadata is not None else old["metadata"]])
-        self.df = self.df.filter(F.col("vec_id") != vec_id).unionByName(
-            replacement, allowMissingColumns=True
-        )
+            [new_metadata if new_metadata is not None else old["metadata"]]))
 
     def delete(self, vec_id: str) -> None:
         """P3: anti-filter rewrite (Delta DELETE when available)."""
-        self.df = self.df.filter(F.col("vec_id") != vec_id)
+        self._write(drop=[vec_id])
 
     def merge(self, source: DataFrame) -> None:
         """Bulk upsert: rows in `source` (store schema: vec_id, embedding,
@@ -1089,6 +1246,7 @@ class VectorStore:
         from vervectordb_spark.functions.checkpoint import (
             eager_checkpoint, release_blocks)
 
+        carried = self._carried()  # the same rows: the matrix carries as is
         if versioned:
             from vervectordb_spark.sources.versioned import VersionedTable
 
@@ -1100,7 +1258,9 @@ class VectorStore:
             self.df = vt.read()
             self._versions = vt
         else:
-            path = path or (self.db_path and f"{self.db_path}/_checkpoint")
+            # a leaf name Spark's file index lists: it ignores a root path
+            # whose own name starts with "_" (and warns on every re-read)
+            path = path or (self.db_path and f"{self.db_path}/_checkpoint/rows")
             if not path:
                 raise ValueError("no db_path for checkpoint")
             # a SECOND checkpoint reads the very path it overwrites --
@@ -1114,6 +1274,8 @@ class VectorStore:
         # (the bridge, ingest's uuid batches) are garbage
         release_blocks(self.spark.sparkContext, self._df_ckpt_ids)
         self._df_ckpt_ids = set()
+        if carried is not None:
+            self._carry(carried)
 
     def version_history(self) -> list[dict]:
         """Manifests of the versioned-checkpoint log, newest first."""
