@@ -940,19 +940,23 @@ def test_batch_search_on_the_tier_equals_brute_force(spark):
 
 def test_driver_tier_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
     """Once a version's matrix is filled, writes carry it on:
-    batch_insert, update and delete run no Spark job, checkpoint() in
-    either form starts a version that has the matrix, and the next brute,
-    ivf, get and batch reads run none. A carried version's
-    filtered_search runs one job over the matrix's own rows. Every other
-    version starts from scratch with the counts a store without the carry
-    has: its first read runs on Spark, its second fills the tier in one
-    job, and later reads run none. That holds after merge, ingest, a
-    refit, a NaN insert and compress, and over the budget every read
-    keeps its Spark job count. A NaN insert returns its ids with no job
-    and no cluster predict."""
+    batch_insert, update and delete run no Spark job and no cluster
+    assign (they only queue their rows, and update's lookup reads
+    through the queue), checkpoint() in either form
+    starts a version that has the matrix, and the next brute, ivf, get
+    and batch reads run none — the first of them applies every queued
+    write with one assign. A carried version's filtered_search runs one
+    job over the matrix's own rows. Every other version starts from
+    scratch with the counts a store without the carry has: its first
+    read runs on Spark, a get_by_id then probes the cached frame in one
+    job and fills nothing, the second search fills the tier in one job,
+    and later reads run none. That holds after merge, ingest, a refit, a
+    NaN insert and compress, and over the budget every read keeps its
+    Spark job count. A NaN insert returns its ids with no job and no
+    cluster predict."""
     from tests.conftest import counting_jobs, tier_bytes
     from vervectordb_spark.operators.ivf import IVFIndex
-    from vervectordb_spark.store import _row_frame
+    from vervectordb_spark.store import _Delta, _Matrix, _row_frame
 
     sc = spark.sparkContext
     st, ids, rng = _random_store(spark, db_path=str(tmp_path / "db"),
@@ -989,9 +993,11 @@ def test_driver_tier_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
     def from_scratch(first=1):
         """The counts without a carry: `first` jobs for the Spark read
         (4 once merge's anti-join shuffle is in the lineage: AQE runs
-        each shuffle stage as a job), 1 for the fill, then none."""
+        each shuffle stage as a job), 1 for a lookup over the cached
+        frame (never a fill), 1 for the fill, then none."""
         assert matrix() is None
         assert jobs(reads["ivf"]) == first and matrix() is None
+        assert jobs(reads["get"]) == 1 and matrix() is None
         assert jobs(reads["brute"]) == 1 and matrix()
         assert warm() == none
 
@@ -999,16 +1005,28 @@ def test_driver_tier_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
         return rng.normal(size=8).tolist()
 
     from_scratch()
+    assigns.clear()
     assert jobs(lambda: st.batch_insert([vec() for _ in range(3)])) == 0
-    assert matrix() and warm() == none
-    assert jobs(lambda: st.update(ids[1], vec())) == 0 and warm() == none
+    added = st.batch_insert([vec()])
+    assert jobs(lambda: st.delete(ids[2])) == 0
+    assert jobs(lambda: st.delete(added[0])) == 0
+    # lookups read through the queue: an update run applies nothing
+    assert jobs(lambda: st.update(ids[1], vec())) == 0
     assert jobs(lambda: st.update(ids[1], new_metadata={"k": "v"})) == 0
-    assert jobs(lambda: st.delete(ids[2])) == 0 and warm() == none
+    assert st.get_by_id(ids[1])["metadata"] == {"k": "v"}
+    with pytest.raises(KeyError):
+        st.get_by_id(added[0])
+    assert isinstance(matrix(), _Delta) and not assigns
+    assert warm() == none and isinstance(matrix(), _Matrix)
+    # one assign, over the queued rows that survived: 3 inserted, 1 updated
+    assert len(assigns) == 1 and assigns[0].count() == 4
+    assert jobs(lambda: st.update(ids[1], vec())) == 0 and warm() == none
+    assert jobs(lambda: st.delete(ids[3])) == 0 and warm() == none
     for versioned in (False, True):
         st.checkpoint(versioned=versioned)
         assert matrix() and warm() == none
     assert jobs(lambda: st.filtered_search(
-        q, 5, metadata_filter=F.col("vec_id") != ids[3])) == 1
+        q, 5, metadata_filter=F.col("vec_id") != ids[6])) == 1
     assert warm() == none
 
     with tier_bytes(1):                          # not one row fits in 1 byte
@@ -1026,10 +1044,10 @@ def test_driver_tier_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
 
     assigns.clear()
     st.batch_insert([vec()])
-    assert matrix() and len(assigns) == 1       # the new row's cluster
+    assert matrix() and not assigns              # queued, not assigned
     with counting_jobs(sc) as n:
         nan_ids = st.batch_insert([[float("nan")] + vec()[1:]])
-    assert n == [0] and len(nan_ids) == 1 and len(assigns) == 1
+    assert n == [0] and len(nan_ids) == 1 and not assigns
     st.delete(nan_ids[0])
     from_scratch(4)
 
@@ -1081,7 +1099,9 @@ def test_driver_tier_budget_counts_collected_metadata(spark, tmp_path):
     on Spark. That holds after a checkpoint too, where Spark's size
     estimate is the compressed parquet size and lets the frame through,
     so the collected table's own size decides. Either way the reads
-    answer exactly as the tier does under a budget they fit."""
+    answer exactly as the tier does under a budget they fit. A matrix
+    carried past a write is measured the same way when the write is
+    applied: over the budget by its metadata, it is dropped."""
     from tests.conftest import tier_bytes
     from vervectordb_spark.store import _row_frame
 
@@ -1115,3 +1135,23 @@ def test_driver_tier_budget_counts_collected_metadata(spark, tmp_path):
         assert st._held_serving()[3]
     assert _exact(tier) == _exact(before) == _exact(after)
     assert tier[0]["metadata"] == {"text": text}
+    with tier_bytes(budget):   # a carry is measured as a fill is
+        gone = tier[0]["vector_id"]
+        st.delete(gone)
+        carried = st.brute_force_search(q, 5)
+        assert st._held_serving()[3] is False
+    assert _exact(carried) == _exact(tier)[1:] + _exact(carried)[4:]
+
+
+def test_local_frame_keeps_rows_after_an_empty_batch(spark):
+    """Spark's createDataFrame drops every Arrow record batch after an
+    empty one; `_local_frame` hands it one batch, so a table concatenated
+    from parts (a carry's queued writes) keeps every row."""
+    import pyarrow as pa
+
+    from vervectordb_spark.store import _ROW_SCHEMA, _local_frame, _row_table
+
+    a = _row_table(["a", "b"], [[1.0], [2.0]], [None, None])
+    c = _row_table(["c"], [[3.0]], [None])
+    df = _local_frame(spark, _ROW_SCHEMA, pa.concat_tables([a, a.slice(0, 0), c]))
+    assert sorted(r["vec_id"] for r in df.collect()) == ["a", "b", "c"]

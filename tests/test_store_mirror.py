@@ -22,8 +22,10 @@ and loaded from there (the identity). After every step it asserts:
     serving frame, the IMI cells, the ANN featurized rows) — and the store
     holds at most one driver matrix, dropping the one a newer version
     replaces;
-  * a matrix a write carried on to a version equals, bit for bit, the
-    one a fill of that version's rows would collect.
+  * a matrix a write carried on to a version, with the writes it queued
+    applied, equals bit for bit the one a fill of that version's rows
+    would collect, and the driver budget's measure (`_peak_bytes`) gives
+    both the same size.
 
 The whole sequence runs with the driver tier on and off, and both runs
 must serve identical results. Writes carry the tier's matrix from version
@@ -45,7 +47,8 @@ from perfbench.mirror import Mirror
 from vervectordb_spark import store as store_module
 from vervectordb_spark.functions.checkpoint import persistent_rdd_ids
 from vervectordb_spark.functions.similarity import SS_COL, self_dot_expr
-from vervectordb_spark.store import VectorStore, _Matrix, _row_frame
+from vervectordb_spark.store import (VectorStore, _Delta, _Matrix, _peak_bytes,
+                                     _row_frame)
 from tests.conftest import tier_bytes
 from tests.test_store import nearest_cells
 
@@ -105,12 +108,16 @@ def test_random_ops_agree_with_numpy_mirror(spark, tmp_path, seed, ivf_fits,
     assert on == off
 
 
-def _fill(store):
-    """The driver matrix a fill of the store's current version collects,
-    from a serving frame built over its rows the Spark way."""
+def _serving_rows(store):
+    """A serving frame over the store's current rows, built the Spark
+    way."""
     rows = store.df if store._ivf is None else store._ivf.assign(store.df)
-    return _Matrix.collect(rows.withColumn(SS_COL, self_dot_expr("embedding")),
-                           store.vector_dim)
+    return rows.withColumn(SS_COL, self_dot_expr("embedding"))
+
+
+def _fill(store):
+    """The driver matrix a fill of the store's current version collects."""
+    return _Matrix.collect(_serving_rows(store), store.vector_dim)
 
 
 def _same_matrix(a, b):
@@ -263,14 +270,25 @@ def _replay(spark, path, seed, tier):
             in_use.add(FRAME_OF[op])
         held = store._frames.get("serving")
         if held is not None and held[0] == store._version and held[2] is None:
-            # a matrix a write carried on: exactly what a fill collects
-            assert _same_matrix(held[3], _fill(store)), where
+            # a matrix a write carried on, its queued writes applied (a
+            # fold leaves the queue as it is): exactly what a fill collects
+            m = held[3]
+            if isinstance(m, _Delta):
+                m = m.fold(spark, held[1])
+            assert _same_matrix(m, _fill(store)), where
+            # and the budget measures it as it measures that fill
+            tbl = _serving_rows(store).select(*m.schema.names).toArrow()
+            assert (_peak_bytes(m.table(), store.vector_dim)
+                    == _peak_bytes(tbl, store.vector_dim)), where
+            del m, tbl
         # at most ONE frame per row-derived structure in use, whatever
         # the version count
         assert len(persistent_rdd_ids(sc) - baseline) <= len(in_use), where
-        # at most one driver matrix, and none with the tier off; the one
-        # a newer version's replaced is gone, arrays and all
-        held = [h[3] for h in store._frames.values() if h[3]]
+        # at most one driver matrix (queued writes or not), and none with
+        # the tier off; the one a newer version's replaced is gone,
+        # arrays and all
+        held = [h[3].base if isinstance(h[3], _Delta) else h[3]
+                for h in store._frames.values() if h[3]]
         assert len(held) <= (1 if tier else 0), where
         if held and (last_matrix is None or last_matrix() is not held[0]):
             assert last_matrix is None or last_matrix() is None, where

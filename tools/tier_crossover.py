@@ -17,12 +17,17 @@ written:
   warm     then brute_force_search, ivf_search (nprobe 2), get_by_id and
            batch_search(32), `--reps` each: what a workload that reads a
            version many times pays per read;
-  delta    then one batch_insert of 16 rows, one update and one delete:
-           on the tier each carries the version's driver matrix on to the
-           next version (its cluster assign, the matrix edit and the size
-           check), on Spark each only extends the lineage. Set next to
-           `second` (one fill), this is what the carry saves a version
-           that would otherwise fill again.
+  delta    then one batch_insert of 16 rows, one update and one delete,
+           each timed alone: on the tier each carries the version's
+           driver matrix on to the next version with the write queued
+           (the update's id lookup reads through the queue), on Spark
+           each only extends the lineage and the update runs its lookup
+           job. Then `fold`, the first brute_force_search after them: on
+           the tier it applies the queued writes (one cluster assign, the
+           matrix edit and the size check), on Spark it is a version's
+           first read.
+           Set next to `second` (one fill), this is what the carry saves
+           a version that would otherwise fill again.
 
 Prints one JSON line per size: per side, the median of each kind of read
 and write in ms; tier hits (reads answered from the driver matrix) of
@@ -120,7 +125,8 @@ def run(spark, n, dim, reps, versions, work):
                                           rng.standard_normal(dim).tolist()),
             "delete": lambda v: st.delete(ids[n // 4 + v]),
         }
-        ms = {side: {k: [] for k in ("first", "second", *reads, *writes)}
+        ms = {side: {k: [] for k in ("first", "second", *reads, *writes,
+                                     "fold")}
               for side in (0, 1)}
         hits = {0: 0, 1: 0}
         for v in range(versions):
@@ -136,6 +142,7 @@ def run(spark, n, dim, reps, versions, work):
             hits[tier] += (len(reads) * reps) if held else 0
             for kind, write in writes.items():
                 ms[tier][kind].append(_ms(lambda: write(v)))
+            ms[tier]["fold"].append(_ms(reads["brute"]))
             held = st._frames["serving"]
             # on the tier every write carried the matrix on
             assert not tier or (held[0] == st._version and held[3])
@@ -151,7 +158,7 @@ def run(spark, n, dim, reps, versions, work):
         tbl = st._serving().select(
             "vec_id", "embedding", store_mod.SS_COL, "metadata",
             "cluster_id").toArrow()
-        out["fill_peak_mb"] = round((m.xt.nbytes + tbl.nbytes) / 2**20, 1)
+        out["fill_peak_mb"] = round(store_mod._peak_bytes(tbl, dim) / 2**20, 1)
         out["rss_mb"] = _rss_mb()
         return out
     finally:

@@ -56,11 +56,16 @@ bit-identical to the Spark path. A version gets its matrix one of two
 ways:
 
   * CARRIED — insert/batch_insert, update, delete and checkpoint() hand
-    the current version's matrix on to the next one, edited the way the
-    reference edits its matrix (vervectordb/__init__.py:247-267,311-322):
-    minus the touched ids, plus the written rows, with their self-dot
-    and IVF cluster_id computed on the driver (`_write`). No write runs
-    a Spark job for it, so the reads after a write stay on the driver.
+    the current version's matrix on to the next one with the write
+    queued (`_Delta`; get_by_id reads through the queue). The next read
+    that needs the matrix (a tier search, or a Spark read building its
+    serving frame) applies every queued write in one edit, the way the
+    reference edits its matrix
+    (vervectordb/__init__.py:247-267,311-322): minus the touched ids,
+    plus the written rows, with their self-dot and IVF cluster_id
+    computed on the driver (`_Delta.fold`). No write runs a Spark job
+    for it, a run of writes costs what it costs without the tier, and
+    the reads after a write stay on the driver.
   * FILLED — every other version (after ingest, merge, restore_version,
     load, a refit, a codec column, a non-finite written vector) starts
     from scratch: its first read is Spark's, and its second collects the
@@ -70,8 +75,9 @@ ways:
 Reads with a Column predicate (pre_filter, filtered_search) stay on
 Spark; on a carried version their serving frame is the matrix's own
 rows as one LocalRelation. "Small enough" is the fixed driver budget
-`_TIER_BYTES`, checked at every fill and every carry: the fill's peak —
-the collected Arrow table plus the float64 matrix — must fit in it
+`_TIER_BYTES`, checked at every fill and every fold of a carry by one
+measure (`_peak_bytes`): the fill's peak — the Arrow table of the
+serving columns plus the float64 matrix — must fit in it
 (tools/tier_crossover.py measures where the tier stops paying).
 
 Scale: above that budget vectors never visit the driver. Only query
@@ -115,12 +121,14 @@ def _local_frame(spark: SparkSession, schema: T.StructType,
     instead goes through parallelize into a PythonRDD, which forks Python
     workers on every later read of any frame built over it. Arrow's
     double→float conversion rounds to nearest like the JVM cast, so float
-    columns store the same values."""
+    columns store the same values. A table goes in as one record batch:
+    Spark drops every batch after an empty one."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow = to_arrow_schema(schema)
-    table = (columns.cast(arrow) if isinstance(columns, pa.Table)
+    table = (columns.cast(arrow).combine_chunks()
+             if isinstance(columns, pa.Table)
              else pa.table(columns, schema=arrow))
     return spark.createDataFrame(table, schema)
 
@@ -173,6 +181,14 @@ _SCORE_BLOCK = 1 << 20
 #: 32 MB is ~40k rows at dim 64, where a fill costs ~1.6 warm Spark
 #: reads (tools/tier_crossover.py; 2.2 at 128k rows)
 _TIER_BYTES = 32 << 20
+
+
+def _peak_bytes(table, dim: int) -> int:
+    """The driver tier's measure of a version, checked against
+    `_TIER_BYTES` at every fill and every carry: the Arrow table of its
+    serving columns plus the float64 matrix built from it — a fill's
+    peak."""
+    return table.nbytes + 8 * dim * table.num_rows
 
 
 def _top(scores: np.ndarray, k: int, ascending: bool = False) -> np.ndarray:
@@ -234,7 +250,7 @@ class _Matrix:
         vals = emb.flatten()
         if (tbl.num_rows > cap or ids.null_count or emb.null_count
                 or vals.null_count
-                or tbl.nbytes + 8 * dim * tbl.num_rows > budget
+                or _peak_bytes(tbl, dim) > budget
                 or pc.any(pc.not_equal(pc.list_value_length(emb), dim)).as_py()):
             return None
         ids = np.array(ids.to_pylist(), dtype=object)
@@ -248,36 +264,23 @@ class _Matrix:
                    serving.schema)
 
     @property
-    def nbytes(self) -> int:
-        """What a fill of these rows would hold at its peak, the budget's
-        measure (`collect`): the Arrow table — ids (by their length),
-        float32 vectors, self-dot, metadata, cluster_id — plus the float64
-        matrix."""
-        dim, n = self.xt.shape
-        return (sum(map(len, self.ids)) + 8 * (n + 1) + 12 * dim * n + 8 * n
-                + self.metadata.nbytes
-                + (0 if self.cluster_id is None else 4 * n))
-
-    @property
     def complete(self) -> bool:
         """Whether the matrix holds every column of its serving frame (a
         store frame with codec columns has more)."""
         return set(self.schema.names) <= {
             "vec_id", "embedding", "metadata", "cluster_id", SS_COL}
 
-    def apply(self, drop: Sequence[str], rows=None, x=None,
+    def apply(self, drop: set, rows=None, x=None,
               cluster=None) -> "_Matrix":
-        """The matrix of the next store version: these rows minus every
-        row whose id is in `drop`, plus `rows` (an Arrow table of
-        _ROW_SCHEMA) with float32 vectors `x` (rows × dim) and, with an
-        IVF index, cluster ids `cluster`, kept sorted by vec_id. The new
-        self-dots are similarity.self_dot's left fold, the value the Spark
-        frame's SS_COL holds."""
+        """A new matrix: these rows minus every row whose id is in `drop`,
+        plus `rows` (an Arrow table of _ROW_SCHEMA) with float32 vectors
+        `x` (rows × dim) and, with an IVF index, cluster ids `cluster`,
+        kept sorted by vec_id. The new self-dots are similarity.self_dot's
+        left fold, the value the Spark frame's SS_COL holds."""
         import pyarrow as pa
 
-        keep = np.ones(len(self.ids), dtype=bool)
-        for vec_id in drop:
-            keep &= self.ids != vec_id
+        keep = np.fromiter((v not in drop for v in self.ids), bool,
+                           len(self.ids))
         ids, xt, ss = self.ids[keep], self.xt[:, keep], self.ss[keep]
         cid = None if self.cluster_id is None else self.cluster_id[keep]
         meta = self.metadata.filter(pa.array(keep))
@@ -296,10 +299,9 @@ class _Matrix:
         return _Matrix(ids, np.ascontiguousarray(xt, dtype=np.float64), ss,
                        cid, meta, self.schema)
 
-    def frame(self, spark: SparkSession) -> DataFrame:
-        """The serving frame these rows stand for, built from the held
-        columns as one Arrow LocalRelation with the serving schema — no
-        replay of the store lineage and no cluster assignment."""
+    def table(self):
+        """The serving frame these rows stand for, as one Arrow table with
+        the serving schema's columns — what a fill of them collects."""
         import pyarrow as pa
 
         dim, n = self.xt.shape
@@ -308,14 +310,22 @@ class _Matrix:
             "embedding": pa.ListArray.from_arrays(
                 pa.array(np.arange(0, n * dim + 1, dim, dtype=np.int32)),
                 pa.array(self.xt.T.astype(np.float32).ravel())),
-            "metadata": self.metadata,
+            # take() leaves the map column with buffers a collected one
+            # lacks; concat rebuilds it compact, so `_peak_bytes` of a
+            # carried matrix is what a fill of the same rows measures
+            "metadata": pa.concat_arrays([self.metadata]),
             SS_COL: pa.array(self.ss),
         }
         if self.cluster_id is not None:
             cols["cluster_id"] = pa.array(self.cluster_id, pa.int32())
         names = self.schema.names
-        return _local_frame(spark, self.schema,
-                            pa.table([cols[c] for c in names], names=names))
+        return pa.table([cols[c] for c in names], names=names)
+
+    def frame(self, spark: SparkSession) -> DataFrame:
+        """The serving frame built from the held columns (`table`) as one
+        Arrow LocalRelation — no replay of the store lineage and no
+        cluster assignment."""
+        return _local_frame(spark, self.schema, self.table())
 
     def topk(self, queries, k: int, metric: str = "cosine",
              rows: np.ndarray | None = None) -> list[tuple]:
@@ -344,6 +354,69 @@ class _Matrix:
         i = self._pos[vec_id]
         return {"vector_id": self.ids[i], "vector": self.xt[:, i].tolist(),
                 "metadata": self.meta([i])[0]}
+
+
+class _Delta:
+    """A driver matrix carried past writes that are not applied to it
+    yet: the `base` matrix and, per write in order, (the ids it dropped,
+    the rows it added as an Arrow table of _ROW_SCHEMA or None, their
+    float32 vectors). A write only appends here; the next read that needs
+    the matrix applies them all at once (`fold`), so a run of writes pays
+    one cluster assign and one matrix copy, not one of each per write."""
+
+    def __init__(self, base: _Matrix):
+        self.base, self.writes = base, []
+
+    def fold(self, spark: SparkSession, index) -> "_Matrix | None":
+        """The base matrix with every write applied, or None when it is
+        over the driver budget `_TIER_BYTES` (read now). A row survives
+        unless a later write dropped its id; `index` (the IVF fit the
+        matrix is held under, or None) assigns the surviving new rows'
+        cluster_id in one `IVFIndex.assign` over their LocalRelation,
+        which Spark evaluates while planning the collect (no job)."""
+        import pyarrow as pa
+
+        dropped, tables, xs = set(), [], []
+        for drop, rows, x in reversed(self.writes):
+            if rows is not None:
+                live = [i for i, v in enumerate(
+                    rows.column("vec_id").to_pylist()) if v not in dropped]
+                if live:
+                    tables.append(rows.take(pa.array(live)))
+                    xs.append(x[live])
+            dropped |= drop
+        rows = pa.concat_tables(tables[::-1]) if tables else None
+        dim, n = self.base.xt.shape
+        # the float64 matrix alone is a floor of the measure: a store
+        # over it skips the assign and the copy
+        floor = n - len(dropped) + (0 if rows is None else rows.num_rows)
+        if 8 * dim * floor > _TIER_BYTES:
+            return None
+        x = cluster = None
+        if rows is not None:
+            x = np.concatenate(xs[::-1])
+            if index is not None:
+                cluster = np.array(
+                    [r[0] for r in index.assign(
+                        _local_frame(spark, _ROW_SCHEMA, rows))
+                     .select("cluster_id").collect()], np.int32)
+        m = self.base.apply(dropped, rows, x, cluster)
+        return m if _peak_bytes(m.table(), dim) <= _TIER_BYTES else None
+
+    def row(self, vec_id: str) -> dict:
+        """get_by_id's answer, read through the queued writes newest
+        first (a write drops before it adds) and then the base: no fold,
+        so an update() run pays none. KeyError if absent."""
+        for drop, rows, x in reversed(self.writes):
+            ids = [] if rows is None else rows.column("vec_id").to_pylist()
+            if vec_id in ids:
+                i = ids.index(vec_id)
+                return {"vector_id": vec_id, "vector": x[i].tolist(),
+                        "metadata": dict(
+                            rows.column("metadata")[i].as_py() or {})}
+            if vec_id in drop:
+                raise KeyError(vec_id)
+        return self.base.row(vec_id)
 
 
 class VectorStore:
@@ -407,11 +480,13 @@ class VectorStore:
         (an older version's, or another fit's) goes whole: its frame is
         unpersisted and its driver matrix, if any, dropped. A serving
         entry a write carried on has a matrix and no frame yet: its frame
-        is the matrix's own rows (`_Matrix.frame`)."""
+        is the matrix's own rows (`_Matrix.frame`), or `build()` when the
+        carry ended over the budget."""
         held = self._frames.get(name)
         if held is not None and held[0] == self._version and held[1] is fit:
             if held[2] is None:
-                held[2] = held[3].frame(self.spark).persist(
+                m = self._settle(held)
+                held[2] = (m.frame(self.spark) if m else build()).persist(
                     StorageLevel.MEMORY_AND_DISK)
             return held[2]
         if held is not None and held[2] is not None:
@@ -444,76 +519,84 @@ class VectorStore:
     def _matrix(self) -> _Matrix | None:
         """The driver tier of the current version (under the current IVF
         fit), or None. A version a write carried the tier on to has its
-        matrix from the start (`_write`). Any other version's first read
-        is served by Spark and builds the serving frame; a read that finds
-        that frame built collects it (None for good when the version is
-        over the budget). A fill costs more than one Spark top-k read, so
-        a version that is read once never pays it
+        matrix from the start (`_write`), with the writes applied by its
+        first read (`_settle`). Any other version's first read is served
+        by Spark and builds the serving frame; a read that finds that
+        frame built collects it (None for good when the version is over
+        the budget). A fill costs more than one Spark top-k read, so a
+        version that is read once never pays it
         (tools/tier_crossover.py)."""
         held = self._frames.get("serving")
         if held is None or held[0] != self._version or held[1] is not self._ivf:
             return None
         if held[3] is None:
             held[3] = _Matrix.collect(held[2], self.vector_dim) or False
-        return held[3] or None
+        return self._settle(held) or None
+
+    def _settle(self, held: list):
+        """The matrix slot of the serving entry `held`, with the writes a
+        carry queued on it applied (`_Delta.fold`, under the entry's IVF
+        fit); False for good when that is over the budget."""
+        if isinstance(held[3], _Delta):
+            held[3] = held[3].fold(self.spark, held[1]) or False
+        return held[3]
 
     def _write(self, drop: Sequence[str] = (), rows=None) -> None:
         """The copy-on-write edit behind insert, update and delete: a new
         version whose rows are the current ones minus every row whose id
         is in `drop`, plus `rows` (an Arrow table of _ROW_SCHEMA). When
         the current version holds a complete driver matrix under the
-        current IVF fit, the new version gets that matrix with the same
-        edit — the reference's in-place vstack and row edits — and runs
-        no Spark job: the new rows' cluster_id comes from
-        `IVFIndex.assign` over their LocalRelation, which Spark evaluates
-        while planning the collect. A written vector with a non-finite
-        element starts the version from scratch (MLlib's predict fails on
-        it), as does a matrix over the budget."""
+        current IVF fit, the new version carries it on with this write
+        queued (`_Delta`): the next read applies every queued write in
+        one edit — the reference's vstack and row edits — and no write
+        runs a Spark job or a cluster assign. A written vector with a
+        non-finite element starts the version from scratch (MLlib's
+        predict fails on it)."""
         df = self.df
         for vec_id in drop:
             df = df.filter(F.col("vec_id") != vec_id)
         if rows is not None:
-            new = _local_frame(self.spark, _ROW_SCHEMA, rows)
             # allowMissingColumns: after compress() the store carries
             # pq_code; new rows land with NULL codes (encode again to
             # fill them)
-            df = df.unionByName(new, allowMissingColumns=True)
-        m = self._carried()
+            df = df.unionByName(_local_frame(self.spark, _ROW_SCHEMA, rows),
+                                allowMissingColumns=True)
+        slot = self._carried()
         self.df = df
-        if m is None:
+        if slot is None:
             return
-        x = cluster = None
+        x = None
         if rows is not None:
             x = (rows.column("embedding").combine_chunks().flatten()
                  .to_numpy(zero_copy_only=False).reshape(-1, self.vector_dim))
             if not np.isfinite(x).all():
                 return
-            if self._ivf is not None:
-                cluster = np.array([r[0] for r in self._ivf.assign(new)
-                                    .select("cluster_id").collect()], np.int32)
-        self._carry(m.apply(drop, rows, x, cluster))
+        delta = slot if isinstance(slot, _Delta) else _Delta(slot)
+        delta.writes.append((frozenset(drop), rows, x))
+        self._carry(delta)
 
-    def _carried(self) -> _Matrix | None:
-        """The current version's driver matrix, filled or carried under
-        the current IVF fit, when it can be handed on to the next version:
-        it holds every column of the serving frame. Never a fill."""
+    def _carried(self) -> "_Matrix | _Delta | None":
+        """The current version's driver matrix, filled or carried (its
+        writes applied or not) under the current IVF fit, when it can be
+        handed on to the next version: it holds every column of the
+        serving frame. Never a fill."""
         held = self._frames.get("serving")
         if (held is None or held[0] != self._version
                 or held[1] is not self._ivf or not held[3]):
             return None
-        return held[3] if held[3].complete else None
+        slot = held[3]
+        return slot if isinstance(slot, _Delta) or slot.complete else None
 
-    def _carry(self, m: _Matrix) -> None:
-        """Make `m` the driver matrix of the current version, under the
-        current IVF fit, when it fits the budget; the entry it replaces
-        goes whole. The serving frame is built from it only when a Spark
-        read asks (`_derived`)."""
-        if m.nbytes > _TIER_BYTES:
-            return
+    def _carry(self, slot) -> None:
+        """Make `slot` (a `_Matrix` or `_Delta`) the driver matrix of the
+        current version, under the current IVF fit; the entry it replaces
+        goes whole. The budget is checked when a read applies the queued
+        writes (`_settle`), and the serving frame is built from the
+        matrix only when a Spark read asks (`_derived`)."""
         held = self._frames.get("serving")
         if held is not None and held[2] is not None:
             held[2].unpersist()
-        self._frames["serving"] = [self._version, self._ivf, None, m]
+        self._frames["serving"] = [self._version, self._ivf, None, slot]
 
     def _held_serving(self) -> list | None:
         """The serving entry a read of the current version already made
@@ -603,7 +686,7 @@ class VectorStore:
         from vervectordb_spark.sources.layout import STATS_FILE, pruned_scan
 
         held = self._held_serving()
-        if held is not None:
+        if held is not None and held[2] is not None:
             return held[2]
         if self._pristine():
             vectors_dir = _os.path.join(self._loaded[0], "vectors")
@@ -615,10 +698,11 @@ class VectorStore:
     def get_by_id(self, vec_id: str) -> dict:
         """P1: id → {vector_id, vector, metadata}; KeyError if absent
         (reference vervectordb/__init__.py:301-309). Answered from the
-        version's driver matrix when a write carried one on to it or a
-        read filled it — so update()'s lookup after a write runs no Spark
-        job — else by a point probe of `_point_frame`; a lookup never
-        fills the tier."""
+        version's driver matrix when a write carried one on to it (read
+        through the writes queued on it, `_Delta.row`, so update()'s
+        lookup after a write runs no Spark job and applies nothing) or a
+        read filled it — else by a point probe of `_point_frame`; a
+        lookup never fills the tier."""
         held = self._held_serving()
         if held is not None and held[3]:
             return held[3].row(vec_id)
